@@ -16,9 +16,13 @@ GC semantics (optional, like Cassandra's gc_grace + TTL purge):
 Newer tombstones are RETAINED (they must keep shadowing older
 generations that might still exist elsewhere).
 
-Scale notes: one shuffle (the LWW hash-agg with map-side combine) +
-one shuffle to key-range-partition the output so each task writes a
-key-sorted, non-overlapping file.
+Scale notes: the default output generation comes from the input
+file names (the scan derives its ``generation`` column from them too),
+so compaction runs no pre-scan: the write is its only query.  Its
+plan is scan + partial LWW merge (map-side combine), final merge +
+regroup of the winners into rows, write; ``target_partitions`` adds a
+key-range shuffle so each task writes a key-sorted, non-overlapping
+file.
 """
 
 from __future__ import annotations
@@ -41,6 +45,14 @@ def _gc(winners: DataFrame, gc_before_ms: int | None) -> DataFrame:
         | ((F.col("state") == "EXPIRING")
            & F.col("expiration").isNotNull()
            & (F.col("expiration") <= gc_before_ms))))
+
+
+def _next_generation(data_files: list[str]) -> int:
+    """One past the newest generation named by ``data_files`` (1 for
+    none) — the output generation that beats every input."""
+    from sstable_hadoop_spark.sources.codec import generation_of
+
+    return max(map(generation_of, data_files), default=0) + 1
 
 
 def _write_merged(winners: DataFrame, out_dir: str, generation: int,
@@ -67,15 +79,18 @@ def compact(spark: SparkSession, in_dir: str, out_dir: str,
     """Compact ``in_dir`` (all generations) into one merged generation
     at ``out_dir``.  Returns the merged-cell DataFrame (lazy reuse).
 
-    ``generation`` defaults to max(input generations) + 1 so the
-    compacted file wins any future tie against its inputs.
+    ``generation`` defaults to one past the largest generation in the
+    input ``-Data.db`` file names, so the compacted file wins any future
+    tie against its inputs.  It is read from the directory listing, not
+    the data, so the write is the only query this runs; a zero-row
+    input generation counts too.
     """
-    from sstable_hadoop_spark.sources.datasource import register
+    from sstable_hadoop_spark.sources.datasource import _list_files, register
 
     register(spark)
     rows = spark.read.format("sstable").load(in_dir)
     if generation is None:
-        generation = (rows.agg(F.max("generation")).collect()[0][0] or 0) + 1
+        generation = _next_generation(_list_files(in_dir, "-Data.db"))
     winners = _gc(lww_cell(explode_cells(rows)), gc_before_ms)
     return _write_merged(winners, out_dir, generation, "compacted",
                          target_partitions, compressed)
@@ -130,7 +145,7 @@ def compact_files(spark: SparkSession, files: list[str], out_dir: str,
     ``compact`` restricted to ``files``."""
     from functools import reduce
 
-    from sstable_hadoop_spark.sources.datasource import register
+    from sstable_hadoop_spark.sources.datasource import _list_files, register
 
     if not files:
         raise ValueError("compact_files requires a non-empty file list")
@@ -138,7 +153,8 @@ def compact_files(spark: SparkSession, files: list[str], out_dir: str,
     rows = reduce(lambda a, b: a.unionByName(b),
                   [spark.read.format("sstable").load(f) for f in files])
     if generation is None:
-        generation = (rows.agg(F.max("generation")).collect()[0][0] or 0) + 1
+        generation = _next_generation(
+            [d for f in files for d in _list_files(f, "-Data.db")])
     winners = _gc(lww_cell(explode_cells(rows)), gc_before_ms)
     return _write_merged(winners, out_dir, generation, "tiered",
                          target_partitions, compressed)
@@ -298,17 +314,6 @@ def _remove_family(data_path: str) -> None:
             fs.remove(p)
 
 
-def _next_generation(in_dir: str) -> int:
-    from sstable_hadoop_spark.sources.datasource import _list_files
-
-    gens = [0]
-    for f in _list_files(in_dir, ".db"):
-        m = _re.search(r"-(\d+)-[A-Za-z]+\.db$", os.path.basename(f))
-        if m:
-            gens.append(int(m.group(1)))
-    return max(gens) + 1
-
-
 def compact_leveled_task(spark: SparkSession, in_dir: str,
                          task: dict,
                          target_partitions: int | None = None,
@@ -346,7 +351,7 @@ def compact_leveled_task(spark: SparkSession, in_dir: str,
     consumed = list(task["sources"]) + list(task["overlapping"])
     before = set(_list_files(in_dir, "-Data.db"))
     compact_files(spark, consumed, in_dir,
-                  generation=_next_generation(in_dir),
+                  generation=_next_generation(list(before)),
                   target_partitions=target_partitions,
                   compressed=compressed)
     new = sorted(set(_list_files(in_dir, "-Data.db")) - before)

@@ -311,10 +311,10 @@ def semantic_decontaminate(df: DataFrame, benchmark: DataFrame,
     ledger a removal decision of this kind should leave behind."""
     from ._util import ensure_parallelism
     from .similarity import (
+        _dots,
         _hyperplanes,
         _resolve_dim,
         cosine,
-        dot,
         ivf_cell_of,
     )
 
@@ -331,8 +331,7 @@ def semantic_decontaminate(df: DataFrame, benchmark: DataFrame,
                  .withColumn("cell", ivf_cell_of("_vd", cents))
 
     def top_cells(vec, n):
-        ds = F.array(*[dot(vec, F.array(*[F.lit(c) for c in cent]))
-                       for cent in cents])
+        ds = _dots(vec, cents)
         scored = F.transform(
             ds, lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
         return F.slice(F.reverse(F.array_sort(scored)), 1, n)

@@ -35,6 +35,23 @@ def dot(a: Column, b: Column) -> Column:
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
+def _vec_lit(values) -> Column:
+    """A float vector as ONE array<double> literal: a per-element
+    ``F.lit`` costs a JVM round trip each, which dominated building
+    centroid and codebook expressions."""
+    import numpy as np
+
+    return F.lit(np.asarray(values, dtype=np.float64))
+
+
+def _dots(vec: Column, cents: list[list[float]]) -> Column:
+    """array<double> of ``vec · cent`` for each of ``cents``, in order:
+    one lambda over the centroid literals, so the expression stays small
+    however many centroids there are."""
+    return F.transform(F.array(*[_vec_lit(c) for c in cents]),
+                       lambda c: dot(vec, c))
+
+
 def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
@@ -126,7 +143,7 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-pattern bucket id: bit p = 1 iff vec · plane_p >= 0."""
     bucket = F.lit(0).cast("long")
     for p, plane in enumerate(planes):
-        d = dot(vec, F.array(*[F.lit(c) for c in plane]))
+        d = dot(vec, _vec_lit(plane))
         bucket = bucket + F.when(d >= 0, F.lit(1 << p)).otherwise(0).cast("long")
     return bucket
 
@@ -168,13 +185,9 @@ def _ivf_topk(embeddings: DataFrame, queries: DataFrame,
     embeddings = ensure_parallelism(embeddings, rows_per_slot=_ROWS_PER_SLOT)
     dim = len(cents[0])
 
-    def dots(vec):
-        return F.array(*[dot(vec, F.array(*[F.lit(c) for c in cent]))
-                         for cent in cents])
-
     def top_cells(vec, n):
         scored = F.transform(
-            dots(vec),
+            _dots(vec, cents),
             lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
         return F.slice(F.reverse(F.array_sort(scored)), 1, n)
 
@@ -200,12 +213,8 @@ def ivf_cell_of(vec_col: str, cents: list[list[float]]):
     """Column expression: the IVF cell (argmax-dot centroid index) of a
     vector — shared by the query-time assignment and the clustered
     writer."""
-    def dots(vec):
-        return F.array(*[dot(vec, F.array(*[F.lit(c) for c in cent]))
-                         for cent in cents])
-
     scored = F.transform(
-        dots(F.col(vec_col)),
+        _dots(F.col(vec_col), cents),
         lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
     return F.element_at(F.reverse(F.array_sort(scored)), 1)["cell"]
 
@@ -250,13 +259,9 @@ def cosine_topk_ivf_stored(spark, path: str, queries: DataFrame,
     dim = _resolve_dim(dim, emb, vec_col)
     cents = _hyperplanes(dim, n_centroids, seed=seed)
 
-    def dots(vec):
-        return F.array(*[dot(vec, F.array(*[F.lit(c) for c in cent]))
-                         for cent in cents])
-
     def top_cells(vec, n):
         scored = F.transform(
-            dots(vec),
+            _dots(vec, cents),
             lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
         return F.slice(F.reverse(F.array_sort(scored)), 1, n)
 
@@ -519,10 +524,10 @@ def train_pq_codebooks(embeddings: DataFrame, vec_col: str = "embedding",
 
     Returns ``codebooks[j][c] = centroid c of subspace j`` (each of
     length dim/m), pinnable in a cross-engine oracle.  Cost: one scan
-    + one (m × k_codes × dim/m) decimal groupBy per iteration, all
-    subspaces trained in the SAME pass (the assignment column is an
-    array of per-subspace argmins); ``sample_fraction`` bounds the
-    training scan at 100 TB."""
+    + one groupBy (subspace, code) of dim/m decimal means per
+    iteration, all subspaces trained in the SAME pass (each row is
+    inlined into its m (subspace, code, subvector) triples);
+    ``sample_fraction`` bounds the training scan at 100 TB."""
     dim = _resolve_dim(dim, embeddings, vec_col)
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -550,18 +555,25 @@ def train_pq_codebooks(embeddings: DataFrame, vec_col: str = "embedding",
               for r in init_rows] for j in range(m)]
 
     for _ in range(n_iter):
-        assign = F.array(*[
-            _pq_code_of_sub(F.slice("_v", j * d_sub + 1, d_sub), books[j])
+        # one (subspace, code, subvector) row per subspace of each
+        # vector: the per-code means are then a d_sub-wide groupBy
+        # instead of one m × k_codes × d_sub-wide global agg, whose
+        # planning and codegen dominated training on small corpora
+        subs = F.array(*[
+            F.struct(F.lit(j).alias("_j"),
+                     _pq_code_of_sub(F.slice("_v", j * d_sub + 1, d_sub),
+                                     books[j]).alias("_c"),
+                     F.slice("_v", j * d_sub + 1, d_sub).alias("_s"))
             for j in range(m)])
-        with_a = base.withColumn("_a", assign)
-        aggs = [F.avg(F.when(F.element_at("_a", j + 1) == c,
-                             F.element_at("_v", j * d_sub + i + 1))
-                      .cast("decimal(20,15)")).alias(f"m_{j}_{c}_{i}")
-                for j in range(m) for c in range(k_codes)
-                for i in range(d_sub)]
-        row = with_a.agg(*aggs).collect()[0]
-        books = [[[float(row[f"m_{j}_{c}_{i}"])
-                   if row[f"m_{j}_{c}_{i}"] is not None
+        means = (base.select(F.inline(subs))
+                 .groupBy("_j", "_c")
+                 .agg(*[F.avg(F.element_at("_s", i + 1)
+                              .cast("decimal(20,15)")).alias(f"m{i}")
+                        for i in range(d_sub)])
+                 .collect())
+        got = {(r["_j"], r["_c"]): r for r in means}
+        books = [[[float(got[j, c][f"m{i}"])
+                   if (j, c) in got and got[j, c][f"m{i}"] is not None
                    else books[j][c][i]
                    for i in range(d_sub)]
                   for c in range(k_codes)] for j in range(m)]
@@ -572,13 +584,13 @@ def _pq_code_of_sub(sub: Column, book: list[list[float]]) -> Column:
     """Argmin-L2 code of one subvector against one codebook, as a pure
     column expression (ties → LOWER code, the standard argmin rule;
     deterministic because distances are exact doubles either side)."""
-    def l2(c):
-        return F.aggregate(
-            F.zip_with(sub, F.array(*[F.lit(x) for x in c]),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda a, v: a + v)
-
-    dists = F.array(*[l2(c) for c in book])
+    # one lambda over the codebook literal, not one expression tree per
+    # centroid: the plan stays small however many codes there are
+    dists = F.transform(
+        F.array(*[_vec_lit(c) for c in book]),
+        lambda c: F.aggregate(
+            F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0), lambda a, v: a + v))
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
@@ -647,8 +659,7 @@ def cosine_topk_pq(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     q = queries.select(F.col(query_id_col), qunit.alias("_q"))
 
     def partial(j):
-        book = F.array(*[F.array(*[F.lit(x) for x in c])
-                         for c in codebooks[j]])
+        book = F.array(*[_vec_lit(c) for c in codebooks[j]])
         cent = F.element_at(book, F.element_at("codes", j + 1) + 1)
         return F.aggregate(
             F.zip_with(F.slice("_q", j * d_sub + 1, d_sub), cent,
@@ -781,13 +792,9 @@ def _ivfpq_score(coded: DataFrame, embeddings: DataFrame | None,
     d_sub = len(codebooks[0][0])
     dim = len(cents[0])
 
-    def dots(vec):
-        return F.array(*[dot(vec, F.array(*[F.lit(c) for c in cent]))
-                         for cent in cents])
-
     def top_cells(vec, n):
         scored = F.transform(
-            dots(vec),
+            _dots(vec, cents),
             lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
         return F.slice(F.reverse(F.array_sort(scored)), 1, n)
 
@@ -802,8 +809,7 @@ def _ivfpq_score(coded: DataFrame, embeddings: DataFrame | None,
                               lambda s: s["cell"])).alias("_cell"))
 
     def partial(j):
-        book = F.array(*[F.array(*[F.lit(x) for x in c])
-                         for c in codebooks[j]])
+        book = F.array(*[_vec_lit(c) for c in codebooks[j]])
         cent = F.element_at(book, F.element_at("codes", j + 1) + 1)
         return F.aggregate(
             F.zip_with(F.slice("_q", j * d_sub + 1, d_sub), cent,
@@ -902,13 +908,9 @@ def cosine_topk_ivfpq_stored(spark, path: str, queries: DataFrame,
     cents = _hyperplanes(meta["dim"], meta["n_centroids"],
                          seed=meta["seed"])
 
-    def dots(vec):
-        return F.array(*[dot(vec, F.array(*[F.lit(c) for c in cent]))
-                         for cent in cents])
-
     def top_cells(vec, n):
         scored = F.transform(
-            dots(vec),
+            _dots(vec, cents),
             lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
         return F.slice(F.reverse(F.array_sort(scored)), 1, n)
 
@@ -1178,13 +1180,9 @@ def _ivfsq8_score(coded: DataFrame, embeddings: DataFrame | None,
 
     dim = len(mins)
 
-    def dots(vec):
-        return F.array(*[dot(vec, F.array(*[F.lit(c) for c in cent]))
-                         for cent in cents])
-
     def top_cells(vec, n):
         scored = F.transform(
-            dots(vec),
+            _dots(vec, cents),
             lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
         return F.slice(F.reverse(F.array_sort(scored)), 1, n)
 
@@ -1294,13 +1292,9 @@ def cosine_topk_ivfsq8_stored(spark, path: str, queries: DataFrame,
     cents = _hyperplanes(meta["dim"], meta["n_centroids"],
                          seed=meta["seed"])
 
-    def dots(vec):
-        return F.array(*[dot(vec, F.array(*[F.lit(c) for c in cent]))
-                         for cent in cents])
-
     def top_cells(vec, n):
         scored = F.transform(
-            dots(vec),
+            _dots(vec, cents),
             lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
         return F.slice(F.reverse(F.array_sort(scored)), 1, n)
 

@@ -42,9 +42,9 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceWriter,
     EqualTo,
     Filter,
     GreaterThan,
@@ -510,6 +510,31 @@ class SSTableReader(DataSourceReader):
                 "(on_unsupported=skip)", partition.path, partition.start,
                 partition.end, skipped[0])
 
+    def _guarded(self, partition: RangePartition, src, skipped: list):
+        """Yield one split's decoded items (Arrow batches or projected
+        tuples).  A decode error fails the task, or — with
+        ``ignore_corrupt_files=true`` — drops the rest of the split
+        with one warning naming the file, byte range and error."""
+        while True:
+            try:
+                item = next(src)
+            except StopIteration:
+                self._log_skipped(partition, skipped)
+                return
+            except (EOFError, IOError, struct.error, KeyError) as exc:
+                where = (f"{partition.path}"
+                         f"[{partition.start}:{partition.end}]")
+                if not self.ignore_corrupt:
+                    raise IOError(
+                        f"corrupt sstable split {where}: {exc}") from exc
+                import logging
+
+                logging.getLogger(__name__).warning(
+                    "sstable %s: dropped the rest of a corrupt split "
+                    "(ignore_corrupt_files=true): %r", where, exc)
+                return
+            yield item
+
     def _project_tuples(self, kind: str, tuples):
         """Non-Arrow fallback projection: narrow full-width tuples to
         ``self.project`` (schema-order)."""
@@ -566,20 +591,7 @@ class SSTableReader(DataSourceReader):
                     (key, c.name, c.state, c.data, c.timestamp,
                      c.ttl, c.expiration, partition.generation)
                     for key, c in cell_iter))
-            while True:
-                try:
-                    item = next(src)
-                except StopIteration:
-                    self._log_skipped(partition, skipped)
-                    return
-                except (EOFError, IOError, struct.error, KeyError) as exc:
-                    if self.ignore_corrupt:
-                        return
-                    raise IOError(
-                        f"corrupt sstable split {partition.path}"
-                        f"[{partition.start}:{partition.end}]: {exc}"
-                    ) from exc
-                yield item  # RecordBatch (arrow) or projected tuple
+            yield from self._guarded(partition, src, skipped)
             return
         if self.kind == "data":
             if self.fmt == "cassandra":
@@ -614,20 +626,7 @@ class SSTableReader(DataSourceReader):
                       for c in item.cells],
                      partition.generation)
                     for item in src))
-            while True:
-                try:
-                    item = next(src)
-                except StopIteration:
-                    self._log_skipped(partition, skipped)
-                    return
-                except (EOFError, IOError, struct.error, KeyError) as exc:
-                    if self.ignore_corrupt:
-                        return  # drop the remainder of this split
-                    raise IOError(
-                        f"corrupt sstable split {partition.path}"
-                        f"[{partition.start}:{partition.end}]: {exc}"
-                    ) from exc
-                yield item  # RecordBatch (arrow) or projected tuple
+            yield from self._guarded(partition, src, skipped)
         elif self.kind == "index":
             yield from self._project_tuples("index", (
                 (key, pos, partition.generation)
@@ -944,12 +943,32 @@ class SSTableStreamReader(DataSourceStreamReader):
         self._adopt(end)
 
 
+def _batch_rows(batch):
+    """(generation, ``codec.Row``) per record of one sink input batch
+    (a ``pyarrow.RecordBatch`` of key, columns, generation), reading
+    columns and cell fields by name.  A null ``columns`` is a row with
+    no cells."""
+    lists = batch.column("columns")
+    # per-row counts over exactly the cells flatten() keeps (none for a
+    # null list, whatever its offsets say), so sliced batches line up
+    counts = lists.value_lengths().fill_null(0).to_pylist()
+    cells = lists.flatten()
+    flat = list(map(codec.Cell, *(
+        cells.field(f).to_pylist() for f in
+        ("name", "state", "data", "timestamp", "ttl", "expiration"))))
+    start = 0
+    for key, gen, n in zip(batch.column("key").to_pylist(),
+                           batch.column("generation").to_pylist(), counts):
+        yield int(gen), codec.Row(key=key, cells=flat[start:start + n])
+        start += n
+
+
 @dataclass
 class _WriteCommit(WriterCommitMessage):
     files: list
 
 
-class SSTableWriteTask(DataSourceWriter):
+class SSTableWriteTask(DataSourceArrowWriter):
     """Distributed SSTable sink: each task writes its partition as one
     SSTable generation family per distinct ``generation`` value,
     key-sorted (rows are buffered and sorted per task — bounded by the
@@ -960,7 +979,12 @@ class SSTableWriteTask(DataSourceWriter):
     File naming ``{name}p{partition}-{generation}-Data.db`` keeps the
     generation parseable by ``codec.generation_of`` while making task
     outputs collision-free.  Input schema must be DATA_SCHEMA
-    (key, columns, generation).
+    (key, columns, generation), in any column or cell-field order.
+
+    Input arrives as Arrow record batches (``DataSourceArrowWriter``):
+    ``_batch_rows`` reads the columns by name and builds the codec's
+    ``Row``/``Cell`` objects straight from them, with no PySpark
+    ``Row`` in between.
 
     ``option("task_suffix", "false")`` drops the ``p{partition}`` task
     tag, producing classic single-family names ``{name}-{gen}-Data.db``
@@ -1000,63 +1024,15 @@ class SSTableWriteTask(DataSourceWriter):
         self.summary_rate = int(options.get("summary_rate",
                                             codec.DEFAULT_SUMMARY_RATE))
         self.token = uuid.uuid4().hex[:10]  # minted once, driver-side
-        # field POSITIONS, filled by the DataSource's writer() from the
-        # negotiated schema: pyspark Row name-lookup does a linear
-        # __fields__.index() per access, which dominated the task once
-        # the codec itself got fast (PERF.md r8) — positional access
-        # keeps the conversion loop O(1) per field
-        self.row_idx: tuple[int, int, int] | None = None
-        self.cell_idx: tuple[int, ...] | None = None
-
-    def set_layout(self, schema) -> None:
-        """Record (key, columns, generation) positions and the cell
-        struct's (name, state, data, timestamp, ttl, expiration)
-        positions from the df's actual schema — order-robust.  An
-        unexpected shape (e.g. columns not array<struct>) just leaves
-        the positions unset; write() then uses the name-lookup path,
-        which reports missing fields the same way it always has."""
-        try:
-            names = schema.fieldNames()
-            row_idx = (names.index("key"), names.index("columns"),
-                       names.index("generation"))
-            cell_fields = schema[names[row_idx[1]]] \
-                .dataType.elementType.fieldNames()
-            self.cell_idx = tuple(
-                cell_fields.index(f) for f in
-                ("name", "state", "data", "timestamp", "ttl",
-                 "expiration"))
-            self.row_idx = row_idx
-        except (ValueError, AttributeError, KeyError):
-            self.row_idx = self.cell_idx = None
 
     def write(self, iterator) -> _WriteCommit:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         by_gen: dict[int, list[codec.Row]] = {}
-        Cell, CRow = codec.Cell, codec.Row
-        if self.row_idx is not None:
-            ki, ci, gi = self.row_idx
-            ni, si, di, ti, tli, ei = self.cell_idx
-            for row in iterator:
-                cells = [Cell(name=bytes(c[ni]), state=c[si],
-                              data=(bytes(c[di])
-                                    if c[di] is not None else None),
-                              timestamp=c[ti], ttl=c[tli],
-                              expiration=c[ei])
-                         for c in (row[ci] or [])]
-                by_gen.setdefault(int(row[gi]), []).append(
-                    CRow(key=bytes(row[ki]), cells=cells))
-        else:  # layout unknown (direct construction in tests): by name
-            for row in iterator:
-                cells = [Cell(name=bytes(c["name"]), state=c["state"],
-                              data=(bytes(c["data"])
-                                    if c["data"] is not None else None),
-                              timestamp=c["timestamp"], ttl=c["ttl"],
-                              expiration=c["expiration"])
-                         for c in (row["columns"] or [])]
-                by_gen.setdefault(int(row["generation"]), []).append(
-                    CRow(key=bytes(row["key"]), cells=cells))
+        for batch in iterator:
+            for gen, row in _batch_rows(batch):
+                by_gen.setdefault(gen, []).append(row)
         files = []  # (tmp hidden path, final path) pairs
         stem = (f"{self.name}p{pid}t{self.token}"
                 if self.task_suffix else self.name)
@@ -1250,9 +1226,7 @@ class SSTableDataSource(DataSource):
                         r"-(Data|Index|Summary|CompressionInfo|Filter)\.db$",
                         f):
                     fs.remove(f)
-        task = SSTableWriteTask(dict(self.options))
-        task.set_layout(schema)
-        return task
+        return SSTableWriteTask(dict(self.options))
 
 
 def ship_package(spark) -> None:

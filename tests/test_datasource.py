@@ -294,6 +294,153 @@ def test_write_sink_compressed(spark, tmp_path):
     assert back.count() == 300
 
 
+# ---- sink: Arrow batches → codec rows --------------------------------
+# The sink reads its input as Arrow record batches by column name; these
+# write through df.write.format("sstable") and read the files back with
+# the codec's own decoders.
+
+_SINK_ROWS = [
+    # (key, cells, generation); a cell is the codec's field order
+    (b"k0", [(b"a", "NORMAL", None, 5, None, None),        # null data
+             (b"b", "DELETED", None, 6, None, None),
+             (b"c", "EXPIRING", b"x", 7, 60, 1_700_000_000_000),
+             (b"d", "NORMAL", b"y", 8, None, None)], 1),
+    (b"k1", [], 1),                                        # no cells
+    (b"k2", None, 1),                                      # null columns
+    (b"k3", [(b"a", "NORMAL", b"z", 9, None, None)], 2),
+]
+
+
+def _sink_df(spark, rows, field_order=("name", "state", "data",
+                                       "timestamp", "ttl", "expiration")):
+    types = {"name": "binary", "state": "string", "data": "binary",
+             "timestamp": "bigint", "ttl": "bigint", "expiration": "bigint"}
+    canon = ("name", "state", "data", "timestamp", "ttl", "expiration")
+    perm = [canon.index(f) for f in field_order]
+    struct = ",".join(f"{f}:{types[f]}" for f in field_order)
+    return spark.createDataFrame(
+        [(k, None if cells is None else
+          [tuple(c[i] for i in perm) for c in cells], g)
+         for k, cells, g in rows],
+        f"key binary, columns array<struct<{struct}>>, generation int")
+
+
+def _read_back(out, fmt="native"):
+    """{(generation, key): [codec.Cell]} of every family under ``out``."""
+    from sstable_hadoop_spark.sources import cassandra1x, codec
+
+    read = (codec.read_data_rows if fmt == "native"
+            else cassandra1x.read_cassandra_rows)
+    got = {}
+    for f in sorted(os.listdir(out)):
+        if f.endswith("-Data.db"):
+            for row in read(os.path.join(out, f)):
+                got[(codec.generation_of(f), row.key)] = row.cells
+    return got
+
+
+def _want(rows):
+    """What the files must hold: both formats store a live cell's null
+    value as empty bytes, and a null ``columns`` as a row with none."""
+    from sstable_hadoop_spark.sources.codec import STATE_DELETED, Cell
+
+    def stored(name, state, data, *rest):
+        if data is None and state != STATE_DELETED:
+            data = b""
+        return Cell(name, state, data, *rest)
+
+    return {(g, k): [stored(*c) for c in (cells or [])]
+            for k, cells, g in rows}
+
+
+def _sink_write(df, out, **opts):
+    w = df.write.format("sstable").option("path", out).mode("append")
+    for k, v in opts.items():
+        w = w.option(k, v)
+    w.save()
+
+
+def test_sink_arrow_nulls_empty_and_two_generations(spark, tmp_path):
+    """Null data/ttl/expiration, an empty and a null ``columns``, and two
+    generations written by one task (two families)."""
+    out = str(tmp_path / "o")
+    _sink_write(_sink_df(spark, _SINK_ROWS).coalesce(1), out)
+    assert sum(f.endswith("-Data.db") for f in os.listdir(out)) == 2
+    assert _read_back(out) == _want(_SINK_ROWS)
+
+
+def test_sink_arrow_reads_cell_fields_by_name(spark, tmp_path):
+    """Cell struct fields (and top-level columns) in non-canonical order
+    are matched by name, not position."""
+    out = str(tmp_path / "o")
+    df = _sink_df(spark, _SINK_ROWS, field_order=(
+        "expiration", "data", "timestamp", "name", "ttl", "state"))
+    _sink_write(df.select("generation", "columns", "key").coalesce(1), out)
+    assert _read_back(out) == _want(_SINK_ROWS)
+
+
+def test_sink_arrow_many_batches_per_task(spark, tmp_path):
+    """Many small Arrow batches per task: each batch's list offsets are
+    read on their own and every row lands once, in key order."""
+    rows = [(b"k%03d" % i,
+             [(b"c%d" % j, "NORMAL", b"v%d" % (i * j), i, None, None)
+              for j in range(i % 4)], 1 + i % 2)
+            for i in range(60)]
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        out = str(tmp_path / "o")
+        _sink_write(_sink_df(spark, rows).coalesce(1), out)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    assert _read_back(out) == _want(rows)
+    from sstable_hadoop_spark.sources.codec import read_data_rows
+
+    for f in os.listdir(out):
+        if f.endswith("-Data.db"):
+            keys = [r.key for r in read_data_rows(os.path.join(out, f))]
+            assert keys == sorted(keys)
+
+
+def test_sink_arrow_batch_rows_sliced():
+    """``_batch_rows`` on sliced batches: list offsets that do not start
+    at zero, and a null ``columns`` slot."""
+    import pyarrow as pa
+
+    from sstable_hadoop_spark.sources.codec import Cell
+    from sstable_hadoop_spark.sources.datasource import _batch_rows
+
+    cell = pa.struct([("ttl", pa.int64()), ("name", pa.binary()),
+                      ("state", pa.string()), ("data", pa.binary()),
+                      ("timestamp", pa.int64()),
+                      ("expiration", pa.int64())])
+
+    def c(n, ts):
+        return {"name": n, "state": "NORMAL", "data": n * 2,
+                "timestamp": ts, "ttl": None, "expiration": None}
+
+    batch = pa.record_batch(
+        [pa.array([b"k1", b"k2", b"k3", b"k4"]),
+         pa.array([[c(b"a", 1)], None, [c(b"b", 2), c(b"c", 3)],
+                   [c(b"d", 4)]], type=pa.list_(cell)),
+         pa.array([1, 1, 2, 3], pa.int32())],
+        names=["key", "columns", "generation"])
+    got = [(g, r.key, r.cells) for g, r in _batch_rows(batch.slice(1, 3))]
+    assert got == [(1, b"k2", []),
+                   (2, b"k3", [Cell(b"b", "NORMAL", b"bb", 2),
+                               Cell(b"c", "NORMAL", b"cc", 3)]),
+                   (3, b"k4", [Cell(b"d", "NORMAL", b"dd", 4)])]
+
+
+def test_sink_arrow_cassandra_format(spark, tmp_path):
+    """format=cassandra goes through the same conversion."""
+    rows = [r for r in _SINK_ROWS if r[1]]  # 1.x rows carry cells
+    out = str(tmp_path / "o")
+    _sink_write(_sink_df(spark, rows).coalesce(1), out, format="cassandra",
+                name="Ks-cf-hc")
+    assert _read_back(out, fmt="cassandra") == _want(rows)
+
+
 def test_corrupt_file_handling(spark, tmp_path):
     """Truncated Data.db: default read fails loudly; with
     ignore_corrupt_files the readable prefix is returned."""
@@ -319,6 +466,39 @@ def test_corrupt_file_handling(spark, tmp_path):
                .option("ignore_corrupt_files", "true").load(d))
     n = lenient.count()
     assert 0 < n < 50  # readable prefix survives, tail dropped
+
+
+def test_ignore_corrupt_split_is_logged(tmp_path, caplog):
+    """ignore_corrupt_files=true drops a split's corrupt tail with one
+    warning naming the file, its byte range and the error — on both the
+    nested and the flat-cell decoders."""
+    import logging
+
+    from sstable_hadoop_spark.sources.codec import Cell, Row, write_sstable
+    from sstable_hadoop_spark.sources.datasource import SSTableReader
+
+    d = str(tmp_path / "corrupt_log")
+    paths = write_sstable(
+        d, "ok", [Row(f"k{i}".encode(), [Cell(b"c", "NORMAL", b"v" * 50, i)])
+                  for i in range(50)], generation=1)
+    size = os.path.getsize(paths["data"])
+    with open(paths["data"], "r+b") as f:
+        f.truncate(size - 31)
+    os.remove(paths["index"])
+
+    for kind in ("data", "cells"):
+        reader = SSTableReader({"path": d, "kind": kind,
+                                "ignore_corrupt_files": "true"})
+        (part,) = reader.partitions()
+        caplog.clear()
+        with caplog.at_level(logging.WARNING):
+            n = sum(b.num_rows for b in reader.read(part))
+        assert 0 < n < 50
+        (rec,) = [r for r in caplog.records if "corrupt" in r.getMessage()]
+        msg = rec.getMessage()
+        assert paths["data"] in msg
+        assert f"[{part.start}:{part.end}]" in msg
+        assert "ignore_corrupt_files" in msg
 
 
 # ---- explicit column projection (columns= / skip_values=) ----------

@@ -459,96 +459,6 @@ def test_curation_pipeline_plan_is_join_free(spark):
     assert "Join" not in plan
 
 
-def test_size_tiered_bucketing(tmp_path):
-    """STCS semantics on a synthetic size distribution: similar-size
-    files bucket together, buckets below min_threshold are not due,
-    smallest-average bucket comes first."""
-    from sstable_hadoop_spark.operators.compaction import pick_size_tiered
-
-    sizes = {  # 4 small ~1 KiB, 4 big ~1 MiB, 1 outlier
-        1: 1000, 2: 1100, 3: 950, 4: 1050,
-        5: 1_000_000, 6: 1_050_000, 7: 980_000, 8: 1_020_000,
-        9: 50_000_000,
-    }
-    for g, n in sizes.items():
-        (tmp_path / f"ks-cf-{g}-Data.db").write_bytes(b"\0" * n)
-
-    buckets = pick_size_tiered(str(tmp_path), min_threshold=4)
-    assert len(buckets) == 2  # outlier bucket has 1 file → not due
-    small, big = buckets  # smallest average first
-    assert {int(p.rsplit("-", 2)[-2]) for p in small} == {1, 2, 3, 4}
-    assert {int(p.rsplit("-", 2)[-2]) for p in big} == {5, 6, 7, 8}
-    # raising the threshold empties the due list
-    assert pick_size_tiered(str(tmp_path), min_threshold=5) == []
-
-
-def test_compact_files_merges_only_the_bucket(spark, sstable_dir,
-                                              tmp_path):
-    """Incremental STCS compaction: compacting an explicit generation
-    subset equals batch lww_cell over just those files."""
-    import glob
-
-    from sstable_hadoop_spark.operators import explode_cells, lww_cell
-    from sstable_hadoop_spark.operators.compaction import compact_files
-
-    files = sorted(glob.glob(str(tmp_path / "nothing")) + [
-        f for f in glob.glob(sstable_dir + "/*-Data.db")
-        if f.endswith(("-1-Data.db", "-2-Data.db"))])
-    assert len(files) == 2
-    want = {(bytes(r["key"]), bytes(r["name"]), r["state"], r["timestamp"])
-            for r in lww_cell(explode_cells(
-                spark.read.format("sstable").load(sstable_dir)
-                .filter("generation <= 2"))).collect()}
-
-    out = str(tmp_path / "tiered")
-    compact_files(spark, files, out, generation=7)
-    back = explode_cells(spark.read.format("sstable").load(out))
-    got = {(bytes(r["key"]), bytes(r["name"]), r["state"], r["timestamp"])
-           for r in back.collect()}
-    assert got == want
-    gens = {r["generation"] for r in back.select("generation")
-            .distinct().collect()}
-    assert gens == {7}
-
-
-def test_compaction_roundtrip_and_gc(spark, sstable_dir, tmp_path):
-    """Major compaction: merged output dir scans back to exactly the
-    pre-compaction winners; GC purges old tombstones + expired cells
-    but retains newer tombstones."""
-    from tests.conftest import AS_OF_MS
-
-    from sstable_hadoop_spark.operators import explode_cells, lww_cell
-    from sstable_hadoop_spark.operators.compaction import compact
-
-    cells = explode_cells(spark.read.format("sstable").load(sstable_dir))
-    want = {(bytes(r["key"]), bytes(r["name"]), r["state"], r["timestamp"])
-            for r in lww_cell(cells).collect()}
-
-    out = str(tmp_path / "compacted")
-    compact(spark, sstable_dir, out)
-    back = explode_cells(spark.read.format("sstable").load(out))
-    got = {(bytes(r["key"]), bytes(r["name"]), r["state"], r["timestamp"])
-           for r in back.collect()}
-    assert got == want
-    # single generation, newer than all inputs
-    gens = {r["generation"] for r in back.select("generation").distinct().collect()}
-    assert gens == {5}
-
-    # GC: purge everything tombstoned/expired before AS_OF
-    out2 = str(tmp_path / "compacted_gc")
-    compact(spark, sstable_dir, out2, gc_before_ms=AS_OF_MS)
-    back2 = explode_cells(spark.read.format("sstable").load(out2))
-    rows2 = back2.collect()
-    # every fixture timestamp predates AS_OF → no tombstones survive GC
-    assert all(r["state"] != "DELETED" for r in rows2)
-    assert all(r["expiration"] is None or r["expiration"] > AS_OF_MS
-               for r in rows2)
-    # and GC only ever removes rows, never changes surviving winners
-    got2 = {(bytes(r["key"]), bytes(r["name"]), r["state"], r["timestamp"])
-            for r in rows2}
-    assert got2 <= want
-
-
 def _dim32_embeddings(spark, n=40):
     """Deterministic 32-dim vectors — exercises the non-default width."""
     import math

@@ -31,8 +31,9 @@ def _mk_interval_fixture(spark):
 
 def _reference_rows(pts, iv, keyed: bool):
     ref = []
+    windows = iv.collect()
     for p in pts.collect():
-        for w in iv.collect():
+        for w in windows:
             if keyed and p["u"] != w["u"]:
                 continue
             if w["lo"] <= p["ts"] <= w["hi"]:
