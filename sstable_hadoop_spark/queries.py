@@ -9775,21 +9775,9 @@ def stats_ols_degenerate(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: SMALL (<=10) or the rotation loses its staleness bound.
 _ROUND_PRIORITY: tuple[str, ...] = (
     "flagship_lww_merge",        # permanent regression anchor
-    # r13 (optimization round 2): the queries whose implementation the
-    # r12+r13 optimization rounds touched ride ahead of the rotation
-    # so they get a fresh driver-oracle pass (VERDICT r12 #8) —
-    # dedup profile materialization was restructured (sig-only
-    # checkpoint, lazy verification sets), the skew probes were
-    # re-gated (64 MiB) and shape-guarded, and similarity's norm
-    # hoist (r12) never got a driver row.  With 0 never-green rows
-    # and the 44 r9-due rotation rows, this fills the window to
-    # exactly 50; the 49 r10-green rows come due r14 inside the
-    # staleness bound.
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    "similarity_topk_bruteforce",
-    "lww_skewed_auto",
-    "join_skew_auto_users",
+    # An entry leaves once its fresh driver pass is green in the
+    # ledger: every entry kept crowds one stale rotation row out of the
+    # window, and the staleness guard fails when a stale row is left out.
 )
 
 

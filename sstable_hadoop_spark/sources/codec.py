@@ -85,8 +85,9 @@ except ImportError:  # pragma: no cover - pyarrow is a hard dep of pyspark
 STATE_NORMAL = "NORMAL"
 STATE_DELETED = "DELETED"
 STATE_EXPIRING = "EXPIRING"
-_STATE_TO_CODE = {STATE_NORMAL: 0, STATE_DELETED: 1, STATE_EXPIRING: 2}
-_CODE_TO_STATE = {v: k for k, v in _STATE_TO_CODE.items()}
+_STATE_NAMES = (STATE_NORMAL, STATE_DELETED, STATE_EXPIRING)  # by code
+_STATE_TO_CODE = {s: code for code, s in enumerate(_STATE_NAMES)}
+_CODE_TO_STATE = dict(enumerate(_STATE_NAMES))
 
 DEFAULT_CHUNK_LENGTH = 64 * 1024  # Cassandra default chunk_length_kb=64
 DEFAULT_SUMMARY_RATE = 128        # Cassandra default index_interval
@@ -341,10 +342,8 @@ class _RawReader:
         return self._f.read(n)
 
 
-def _read_exact(reader, n: int) -> bytes | None:
+def _read_exact(reader, n: int) -> bytes:
     buf = reader.read(n)
-    if len(buf) == 0:
-        return None
     if len(buf) != n:
         raise EOFError(f"truncated read: wanted {n}, got {len(buf)}")
     return buf
@@ -357,7 +356,7 @@ def _read_cell(reader, skip_value: bool = False) -> Cell:
     sequentially (chunk decompression can't skip I/O) but no bytes
     object is built or shipped."""
     (name_len,) = struct.unpack(">H", _read_exact(reader, 2))
-    name = _read_exact(reader, name_len) if name_len else b""
+    name = _read_exact(reader, name_len)
     state_code, timestamp = struct.unpack(">Bq", _read_exact(reader, 9))
     state = _CODE_TO_STATE[state_code]
     ttl = expiration = None
@@ -369,7 +368,7 @@ def _read_cell(reader, skip_value: bool = False) -> Cell:
         if skip_value:
             reader.seek(reader.tell() + data_len)
         else:
-            data = _read_exact(reader, data_len) if data_len else b""
+            data = _read_exact(reader, data_len)
     return Cell(name=name, state=state, data=data, timestamp=timestamp,
                 ttl=ttl, expiration=expiration)
 
@@ -404,15 +403,262 @@ def read_data_rows(data_path: str, start: int = 0,
         end = total
     reader.seek(start)
     while reader.tell() < end:
-        header = _read_exact(reader, 2)
-        if header is None:
+        header = reader.read(2)
+        if not header:
             break
+        if len(header) != 2:
+            raise EOFError("truncated read: wanted 2, got 1")
         (key_len,) = struct.unpack(">H", header)
-        key = _read_exact(reader, key_len) if key_len else b""
+        key = _read_exact(reader, key_len)
         (n_cells,) = struct.unpack(">I", _read_exact(reader, 4))
         cells = [_read_cell(reader, skip_value=skip_values)
                  for _ in range(n_cells)]
         yield Row(key=key, cells=cells)
+
+
+#: the six cell fields, in ``datasource.CELL_STRUCT`` order
+CELL_FIELDS = ("name", "state", "data", "timestamp", "ttl", "expiration")
+_NESTED = ("key", "columns", "generation")       # kind=data
+_FLAT = ("key",) + CELL_FIELDS + ("generation",)  # kind=cells
+_NO_LIMIT = 1 << 62
+
+
+def _arrow_fields() -> dict:
+    """The scan's Arrow fields by name (``datasource.DATA_SCHEMA`` and
+    ``CELLS_SCHEMA``): key, the six cell fields, the nested ``columns``
+    list of cell structs, and generation."""
+    import pyarrow as pa
+
+    f = {"key": pa.field("key", pa.binary(), nullable=False),
+         "name": pa.field("name", pa.binary(), nullable=False),
+         "state": pa.field("state", pa.string(), nullable=False),
+         "data": pa.field("data", pa.binary()),
+         "timestamp": pa.field("timestamp", pa.int64(), nullable=False),
+         "ttl": pa.field("ttl", pa.int64()),
+         "expiration": pa.field("expiration", pa.int64()),
+         "generation": pa.field("generation", pa.int32(), nullable=False)}
+    f["columns"] = pa.field(
+        "columns", pa.list_(pa.struct([f[n] for n in CELL_FIELDS])),
+        nullable=False)
+    return f
+
+
+def _plan_view(flat: bool, project, skip_values: bool):
+    """(output field names, cell fields the decoder must fill).  The
+    nested view needs every cell field as soon as ``columns`` is kept;
+    ``skip_values`` never fills ``data`` (the view writes nulls)."""
+    want = tuple(project) if project is not None else (
+        _FLAT if flat else _NESTED)
+    cell = CELL_FIELDS if "columns" in want else tuple(
+        n for n in CELL_FIELDS if n in want)
+    return want, tuple(n for n in cell
+                       if not (skip_values and n == "data"))
+
+
+def _to_batch(flat: bool, want, keys, offsets, cols, generation: int,
+              fields: dict):
+    """One ``pyarrow.RecordBatch`` of ``want`` from a decoded chunk:
+    ``keys`` one per row, ``offsets[i]:offsets[i + 1]`` row i's cells in
+    the flat ``cols`` lists (state as its code).  The nested view wraps
+    the cells in a ``ListArray`` over ``offsets``; the flat view repeats
+    each key once per cell."""
+    import numpy as np
+    import pyarrow as pa
+
+    n_cells = offsets[-1]
+    n = n_cells if flat else len(keys)
+
+    def cell(name):
+        if name not in cols:  # data under skip_values
+            return pa.nulls(n_cells, fields[name].type)
+        if name == "state":
+            return pa.array(_STATE_NAMES).take(
+                pa.array(cols[name], pa.int8()))
+        return pa.array(cols[name], fields[name].type)
+
+    arrays = []
+    for name in want:
+        if name == "key":
+            a = pa.array(keys, pa.binary())
+            if flat:
+                a = a.take(np.repeat(np.arange(len(keys)), np.diff(offsets)))
+        elif name == "generation":
+            a = pa.array([generation] * n, pa.int32())
+        elif name == "columns":
+            a = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                pa.StructArray.from_arrays(
+                    [cell(c) for c in CELL_FIELDS],
+                    fields=[fields[c] for c in CELL_FIELDS]))
+        else:
+            a = cell(name)
+        arrays.append(a)
+    return pa.RecordBatch.from_arrays(
+        arrays, schema=pa.schema([fields[name] for name in want]))
+
+
+def _clear(keys: list, offsets: list, cols: dict) -> None:
+    """Empty a chunk's lists in place for the next one."""
+    keys.clear()
+    del offsets[1:]
+    for c in cols.values():
+        c.clear()
+
+
+def _skip_cells(buf: bytes, p: int, n_cells: int) -> int:
+    """Bounds walk: the offset just past ``n_cells`` cells at ``p``,
+    building nothing.  Raises ``struct.error``/``EOFError`` when the
+    window ends first and ``KeyError`` on a bad state code."""
+    unpack_from = struct.unpack_from
+    for _ in range(n_cells):
+        (name_len,) = unpack_from(">H", buf, p)
+        p += 2 + name_len
+        (code,) = unpack_from(">B", buf, p)
+        if code > 2:
+            raise KeyError(f"bad cell state code {code}")
+        p += 9 if code != 2 else 25  # state + timestamp [+ ttl, expiry]
+        if code != 1:
+            (data_len,) = unpack_from(">I", buf, p)
+            p += 4 + data_len
+    if p > len(buf):
+        raise EOFError("row extends past the window")
+    return p
+
+
+def _walk(data_path: str, start: int, end: int | None, fields: tuple,
+          read_block: int, max_rows: int, max_cells: int):
+    """The Data.db byte walker behind both Arrow views.
+
+    Parses the rows of uncompressed byte range [start, end) in one pass
+    with ``unpack_from`` over in-memory ``read_block`` windows (the
+    chunked decompressor underneath keeps its one-chunk memory), and
+    yields chunks ``(keys, offsets, cols)`` in ``_to_batch``'s shape,
+    filling only the cell ``fields`` asked for.  Without any, rows are
+    bounds-walked and no cell is built.  The lists are reused: a chunk
+    is valid until the walker resumes.
+
+    A chunk ends after ``max_rows`` whole rows, or after ``max_cells``
+    cells even inside a row (a wide row spreads across chunks, so
+    memory stays bounded); that row's key is then in both chunks.  A
+    row cut by the window edge is rolled back to its start and parsed
+    again after a refill; before a mid-row flush the rest of the row is
+    bounds-walked once, so a flushed prefix is never rolled back.  A
+    truncated stream yields the whole rows before the cut, then raises
+    ``EOFError``.
+    """
+    reader, total = _open_reader(data_path)
+    if end is None:
+        end = total
+    reader.seek(start)
+    remaining = end - start
+    buf, pos, base = b"", 0, start  # base: offset of buf[0]
+    unpack_from = struct.unpack_from
+
+    keys: list[bytes] = []
+    offsets = [0]
+    cols = {name: [] for name in fields}
+    names, states, datas, stamps, ttls, exps = (
+        cols.get(name) for name in CELL_FIELDS)
+    any_cell, w_expiry = bool(fields), ttls is not None or exps is not None
+
+    n = 0  # cells in the current chunk
+    while True:
+        if remaining > 0 and len(buf) - pos < read_block:
+            block = reader.read(min(read_block, remaining))
+            if not block and len(buf) == pos:
+                break
+            remaining -= len(block)
+            base += pos
+            buf = buf[pos:] + block
+            pos = 0
+        if pos >= len(buf):
+            break
+        mark = n
+        row_end = None
+        try:
+            (key_len,) = unpack_from(">H", buf, pos)
+            p = pos + 2 + key_len
+            key = buf[pos + 2:p]
+            (n_cells,) = unpack_from(">I", buf, p)
+            p += 4
+            if not any_cell and n + n_cells < max_cells:
+                p = _skip_cells(buf, p, n_cells)
+                n += n_cells
+            else:
+                for i in range(n_cells):
+                    if n >= max_cells:
+                        if row_end is None:
+                            row_end = _skip_cells(buf, p, n_cells - i)
+                        keys.append(key)
+                        offsets.append(n)
+                        yield keys, offsets, cols
+                        _clear(keys, offsets, cols)
+                        n = mark = 0
+                    (name_len,) = unpack_from(">H", buf, p)
+                    p += 2
+                    if names is not None:
+                        names.append(buf[p:p + name_len])
+                    p += name_len
+                    code, ts = unpack_from(">Bq", buf, p)
+                    p += 9
+                    if code > 2:
+                        raise KeyError(f"bad cell state code {code}")
+                    if states is not None:
+                        states.append(code)
+                    if stamps is not None:
+                        stamps.append(ts)
+                    if code == 2:  # EXPIRING
+                        if w_expiry:
+                            ttl, exp = unpack_from(">qq", buf, p)
+                            if ttls is not None:
+                                ttls.append(ttl)
+                            if exps is not None:
+                                exps.append(exp)
+                        p += 16
+                    else:
+                        if ttls is not None:
+                            ttls.append(None)
+                        if exps is not None:
+                            exps.append(None)
+                    if code != 1:  # not DELETED
+                        (data_len,) = unpack_from(">I", buf, p)
+                        p += 4
+                        if datas is not None:
+                            datas.append(buf[p:p + data_len])
+                        p += data_len
+                    elif datas is not None:
+                        datas.append(None)
+                    n += 1
+                if p > len(buf):
+                    raise EOFError("row extends past the window")
+        except (struct.error, EOFError):
+            for c in cols.values():
+                del c[mark:]
+            n = mark
+            if remaining > 0:
+                # the row straddles the window edge: widen and retry
+                block = reader.read(min(read_block, remaining))
+                if block:
+                    remaining -= len(block)
+                    base += pos
+                    buf = buf[pos:] + block
+                    pos = 0
+                    continue
+            # truncated stream: surface the readable prefix first so
+            # ignore_corrupt_files keeps it, then fail the iterator
+            if keys:
+                yield keys, offsets, cols
+            raise EOFError(f"truncated row at uncompressed offset "
+                           f"{base + pos} of {data_path}")
+        pos = p
+        keys.append(key)
+        offsets.append(n)
+        if n >= max_cells or len(keys) >= max_rows:
+            yield keys, offsets, cols
+            _clear(keys, offsets, cols)
+            n = 0
+    if keys:
+        yield keys, offsets, cols
 
 
 def read_data_batches(data_path: str, start: int = 0,
@@ -422,16 +668,9 @@ def read_data_batches(data_path: str, start: int = 0,
                       skip_values: bool = False,
                       project: tuple[str, ...] | None = None):
     """Iterate ``pyarrow.RecordBatch`` objects over rows of one Data.db
-    within uncompressed byte range [start, end) — the vectorized twin of
-    ``read_data_rows`` for the Spark DataSource hot path.
-
-    Rows cross from Python-object land into Spark as Arrow columns
-    (one IPC transfer per ~``rows_per_batch`` rows) instead of one
-    pickled tuple per row, and the parse loop runs ``unpack_from`` over
-    an in-memory block instead of per-field file reads.  Memory stays
-    bounded: the stream is consumed in ``read_block`` windows (the
-    chunked decompressor underneath keeps its one-chunk behavior), and
-    a batch is flushed as soon as it reaches ``rows_per_batch``.
+    within uncompressed byte range [start, end): the nested view of
+    ``_walk`` for the Spark DataSource hot path (``kind=data``), one
+    batch per ``rows_per_batch`` rows, parsing ``read_block`` windows.
 
     Schema matches ``datasource.DATA_SCHEMA`` + the partition's
     ``generation``: (key binary, columns list<struct>, generation int32).
@@ -441,207 +680,21 @@ def read_data_batches(data_path: str, start: int = 0,
     SSTableIndexRecordReader.scala:47-58, but has no way to prune a
     Data.db scan):
     - ``project`` keeps only the named top-level fields; without
-      ``columns`` in the projection the parse loop walks cell headers
-      purely to find the next row boundary — no cell object, list, or
-      bytes slice is ever built, and the Arrow batch carries just the
-      projected columns;
+      ``columns`` the walker only bounds-walks the cells — no cell,
+      list or bytes slice is built;
     - ``skip_values`` keeps the cell structure but nulls ``data``
-      without slicing the value bytes (a key+timestamp scan at full
-      cell fidelity).
+      without slicing the value bytes.
     The byte stream itself is still consumed sequentially — chunked
     compression means value bytes must be decompressed regardless; the
     savings are materialization, batch width, and transfer.
     """
-    import pyarrow as pa
-
-    want = (("key", "columns", "generation") if project is None
-            else tuple(project))
-    need_cells = "columns" in want
-
-    cell_struct = pa.struct([
-        pa.field("name", pa.binary(), nullable=False),
-        pa.field("state", pa.string(), nullable=False),
-        pa.field("data", pa.binary()),
-        pa.field("timestamp", pa.int64(), nullable=False),
-        pa.field("ttl", pa.int64()),
-        pa.field("expiration", pa.int64()),
-    ])
-    full_fields = {
-        "key": pa.field("key", pa.binary(), nullable=False),
-        "columns": pa.field("columns", pa.list_(cell_struct),
-                            nullable=False),
-        "generation": pa.field("generation", pa.int32(), nullable=False),
-    }
-    schema = pa.schema([full_fields[n] for n in want])
-
-    reader, total = _open_reader(data_path)
-    if end is None:
-        end = total
-    reader.seek(start)
-    remaining = end - start
-
-    buf = b""
-    pos = 0
-    unpack_from = struct.unpack_from
-    code_to_state = _CODE_TO_STATE
-
-    n_rows = 0
-    keys: list[bytes] = []
-    cell_offsets: list[int] = [0]
-    c_name: list[bytes] = []
-    c_state: list[str] = []
-    c_data: list[bytes | None] = []
-    c_ts: list[int] = []
-    c_ttl: list[int | None] = []
-    c_exp: list[int | None] = []
-
-    def flush():
-        nonlocal n_rows
-        arrays = {}
-        if "key" in want:
-            arrays["key"] = pa.array(keys, pa.binary())
-        if need_cells:
-            struct_arr = pa.StructArray.from_arrays(
-                [pa.array(c_name, pa.binary()),
-                 pa.array(c_state, pa.string()),
-                 pa.array(c_data, pa.binary()),
-                 pa.array(c_ts, pa.int64()),
-                 pa.array(c_ttl, pa.int64()),
-                 pa.array(c_exp, pa.int64())],
-                fields=list(cell_struct))
-            arrays["columns"] = pa.ListArray.from_arrays(
-                pa.array(cell_offsets, pa.int32()), struct_arr)
-        if "generation" in want:
-            arrays["generation"] = pa.array([generation] * n_rows,
-                                            pa.int32())
-        batch = pa.RecordBatch.from_arrays([arrays[n] for n in want],
-                                           schema=schema)
-        n_rows = 0
-        keys.clear()
-        del cell_offsets[:]
-        cell_offsets.append(0)
-        c_name.clear(); c_state.clear(); c_data.clear()
-        c_ts.clear(); c_ttl.clear(); c_exp.clear()
-        return batch
-
-    while True:
-        # refill the parse window; drop the consumed prefix
-        if remaining > 0 and len(buf) - pos < read_block:
-            block = reader.read(min(read_block, remaining))
-            if not block and len(buf) == pos:
-                break
-            remaining -= len(block)
-            buf = buf[pos:] + block
-            pos = 0
-        if pos >= len(buf):
-            break
-        # parse one row; an incomplete row at the window edge triggers
-        # a refill (or a truncation error at true EOF)
-        try:
-            (key_len,) = unpack_from(">H", buf, pos)
-            p = pos + 2
-            key = buf[p:p + key_len]
-            if len(key) != key_len:
-                raise EOFError("truncated key")
-            p += key_len
-            (n_cells,) = unpack_from(">I", buf, p)
-            p += 4
-            row_names, row_states = [], []
-            row_datas, row_ts = [], []
-            row_ttl, row_exp = [], []
-            for _ in range(n_cells):
-                (name_len,) = unpack_from(">H", buf, p)
-                p += 2
-                if need_cells:
-                    name = buf[p:p + name_len]
-                    if len(name) != name_len:
-                        raise EOFError("truncated cell name")
-                elif p + name_len > len(buf):
-                    raise EOFError("truncated cell name")
-                p += name_len
-                state_code, ts = unpack_from(">Bq", buf, p)
-                p += 9
-                if state_code not in code_to_state:
-                    raise KeyError(f"bad cell state code {state_code}")
-                ttl = exp = None
-                data: bytes | None = None
-                if state_code == 2:  # EXPIRING
-                    if need_cells:
-                        ttl, exp = unpack_from(">qq", buf, p)
-                    elif p + 16 > len(buf):
-                        raise EOFError("truncated cell expiry")
-                    p += 16
-                if state_code != 1:  # not DELETED
-                    (data_len,) = unpack_from(">I", buf, p)
-                    p += 4
-                    if need_cells and not skip_values:
-                        data = buf[p:p + data_len]
-                        if len(data) != data_len:
-                            raise EOFError("truncated cell data")
-                    elif p + data_len > len(buf):
-                        raise EOFError("truncated cell data")
-                    p += data_len
-                if need_cells:
-                    row_names.append(name)
-                    row_states.append(code_to_state[state_code])
-                    row_datas.append(data)
-                    row_ts.append(ts)
-                    row_ttl.append(ttl)
-                    row_exp.append(exp)
-        except (struct.error, EOFError):
-            if remaining > 0:
-                # row straddles the window edge — widen and retry
-                block = reader.read(min(read_block, remaining))
-                if block:
-                    remaining -= len(block)
-                    buf = buf[pos:] + block
-                    pos = 0
-                    continue
-            # truncated stream: surface the readable prefix first so
-            # ignore_corrupt_files keeps it, then fail the iterator
-            if n_rows:
-                yield flush()
-            raise EOFError(f"truncated row at uncompressed offset "
-                           f"{start + pos} of {data_path}")
-        pos = p
-        n_rows += 1
-        if "key" in want:
-            keys.append(key)
-        if need_cells:
-            c_name.extend(row_names)
-            c_state.extend(row_states)
-            c_data.extend(row_datas)
-            c_ts.extend(row_ts)
-            c_ttl.extend(row_ttl)
-            c_exp.extend(row_exp)
-            cell_offsets.append(len(c_name))
-        if n_rows >= rows_per_batch:
-            yield flush()
-    if n_rows:
-        yield flush()
-
-
-def read_cells_flat(data_path: str, start: int = 0,
-                    end: int | None = None,
-                    skip_values: bool = False) -> Iterator[tuple]:
-    """Iterate (key, Cell) pairs of one Data.db within uncompressed
-    byte range [start, end) WITHOUT materializing per-row cell lists —
-    memory is O(1) per cell even for pathological million-cell wide
-    rows, where the nested ``read_data_rows`` shape must hold the whole
-    row.  ``skip_values`` seeks past value bytes (data → None)."""
-    reader, total = _open_reader(data_path)
-    if end is None:
-        end = total
-    reader.seek(start)
-    while reader.tell() < end:
-        header = _read_exact(reader, 2)
-        if header is None:
-            break
-        (key_len,) = struct.unpack(">H", header)
-        key = _read_exact(reader, key_len) if key_len else b""
-        (n_cells,) = struct.unpack(">I", _read_exact(reader, 4))
-        for _ in range(n_cells):
-            yield key, _read_cell(reader, skip_value=skip_values)
+    want, fill = _plan_view(False, project, skip_values)
+    fields = _arrow_fields()
+    for keys, offsets, cols in _walk(data_path, start, end, fill,
+                                     read_block, rows_per_batch,
+                                     _NO_LIMIT):
+        yield _to_batch(False, want, keys, offsets, cols, generation,
+                        fields)
 
 
 def read_cell_batches(data_path: str, start: int = 0,
@@ -650,301 +703,65 @@ def read_cell_batches(data_path: str, start: int = 0,
                       read_block: int = 8 * 1024 * 1024,
                       skip_values: bool = False,
                       project: tuple[str, ...] | None = None):
-    """Windowed fast parse of one Data.db straight into FLAT cell
-    ``pyarrow.RecordBatch`` objects (CELLS_SCHEMA order) — the
-    ``kind=cells`` twin of ``read_data_batches``: ``unpack_from`` over
-    an in-memory block instead of per-field file reads, one Arrow
-    transfer per ~``cells_per_batch`` cells.  Batches flush on CELL
-    count (checked after every cell, so a single wide row spreads
-    across batches — bounded memory where the nested shape cannot be).
+    """Iterate FLAT cell ``pyarrow.RecordBatch`` objects (CELLS_SCHEMA
+    order, one record per cell) of one Data.db: the flat view of
+    ``_walk`` for ``kind=cells``.  Batches hold ``cells_per_batch``
+    cells, cut inside a row when needed, so one wide row spreads across
+    batches with bounded memory where the nested shape cannot.
     ``project``/``skip_values`` as in ``read_data_batches``."""
-    import pyarrow as pa
-
-    all_names = ("key", "name", "state", "data", "timestamp", "ttl",
-                 "expiration", "generation")
-    want = all_names if project is None else tuple(project)
-    types = {"key": pa.binary(), "name": pa.binary(),
-             "state": pa.string(), "data": pa.binary(),
-             "timestamp": pa.int64(), "ttl": pa.int64(),
-             "expiration": pa.int64(), "generation": pa.int32()}
-    nullable = {"data", "ttl", "expiration"}
-    schema = pa.schema([pa.field(n, types[n], nullable=n in nullable)
-                        for n in want])
-
-    reader, total = _open_reader(data_path)
-    if end is None:
-        end = total
-    reader.seek(start)
-    remaining = end - start
-
-    buf = b""
-    pos = 0
-    unpack_from = struct.unpack_from
-    code_to_state = _CODE_TO_STATE
-
-    cols: dict[str, list] = {n: [] for n in want if n != "generation"}
-    n_out = 0
-
-    def flush():
-        nonlocal n_out
-        arrays = [pa.array(cols[n], types[n]) if n != "generation"
-                  else pa.array([generation] * n_out, pa.int32())
-                  for n in want]
-        batch = pa.RecordBatch.from_arrays(arrays, schema=schema)
-        n_out = 0
-        for c in cols.values():
-            c.clear()
-        return batch
-
-    def walk_row(b: bytes, at: int) -> int:
-        """Bounds-only walk: offset just past the row at ``at``, or
-        raise EOFError/struct.error if the window ends mid-row."""
-        (key_len,) = unpack_from(">H", b, at)
-        p = at + 2 + key_len
-        (n_cells,) = unpack_from(">I", b, p)
-        p += 4
-        for _ in range(n_cells):
-            (name_len,) = unpack_from(">H", b, p)
-            p += 2 + name_len
-            state_code, _ts = unpack_from(">Bq", b, p)
-            p += 9
-            if state_code not in code_to_state:
-                raise KeyError(f"bad cell state code {state_code}")
-            if state_code == 2:
-                p += 16
-            if state_code != 1:
-                (data_len,) = unpack_from(">I", b, p)
-                p += 4 + data_len
-        if p > len(b):
-            raise EOFError("row extends past window")
-        return p
-
-    while True:
-        if remaining > 0 and len(buf) - pos < read_block:
-            block = reader.read(min(read_block, remaining))
-            if not block and len(buf) == pos:
-                break
-            remaining -= len(block)
-            buf = buf[pos:] + block
-            pos = 0
-        if pos >= len(buf):
-            break
-        # phase 1: ensure the WHOLE row is inside the buffer (cheap
-        # header walk; widens the window on a row that straddles it),
-        # so phase 2 can flush mid-row without any rollback concern —
-        # wide rows spread across batches with bounded cell memory
-        try:
-            row_end = walk_row(buf, pos)
-        except (struct.error, EOFError):
-            if remaining > 0:
-                block = reader.read(min(read_block, remaining))
-                if block:
-                    remaining -= len(block)
-                    buf = buf[pos:] + block
-                    pos = 0
-                    continue
-            if n_out:
-                yield flush()
-            raise EOFError(f"truncated row at uncompressed offset "
-                           f"{start + pos} of {data_path}")
-        # phase 2: materialize + emit (no bounds re-checks needed)
-        (key_len,) = unpack_from(">H", buf, pos)
-        p = pos + 2
-        key = buf[p:p + key_len]
-        p += key_len
-        (n_cells,) = unpack_from(">I", buf, p)
-        p += 4
-        for _ in range(n_cells):
-            (name_len,) = unpack_from(">H", buf, p)
-            p += 2
-            name = buf[p:p + name_len]
-            p += name_len
-            state_code, ts = unpack_from(">Bq", buf, p)
-            p += 9
-            ttl = exp = None
-            data: bytes | None = None
-            if state_code == 2:  # EXPIRING
-                ttl, exp = unpack_from(">qq", buf, p)
-                p += 16
-            if state_code != 1:  # not DELETED
-                (data_len,) = unpack_from(">I", buf, p)
-                p += 4
-                if not skip_values:
-                    data = buf[p:p + data_len]
-                p += data_len
-            if "key" in cols:
-                cols["key"].append(key)
-            if "name" in cols:
-                cols["name"].append(name)
-            if "state" in cols:
-                cols["state"].append(code_to_state[state_code])
-            if "data" in cols:
-                cols["data"].append(data)
-            if "timestamp" in cols:
-                cols["timestamp"].append(ts)
-            if "ttl" in cols:
-                cols["ttl"].append(ttl)
-            if "expiration" in cols:
-                cols["expiration"].append(exp)
-            n_out += 1
-            if n_out >= cells_per_batch:
-                yield flush()
-        pos = row_end
-    if n_out:
-        yield flush()
-
-
-def cells_to_batches(cell_iter: Iterator[tuple], generation: int = 0,
-                     cells_per_batch: int = 8192,
-                     project: tuple[str, ...] | None = None):
-    """(key, Cell) iterator → flat ``pyarrow.RecordBatch`` stream
-    (CELLS_SCHEMA: one record per cell).  Batches flush on CELL count,
-    so a single wide row spreads across batches — bounded executor
-    memory where the nested schema cannot be.  ``project`` keeps only
-    the named fields (Arrow batches narrow accordingly)."""
-    import pyarrow as pa
-
-    full = {
-        "key": (pa.field("key", pa.binary(), nullable=False),
-                lambda key, cell: key),
-        "name": (pa.field("name", pa.binary(), nullable=False),
-                 lambda key, cell: cell.name),
-        "state": (pa.field("state", pa.string(), nullable=False),
-                  lambda key, cell: cell.state),
-        "data": (pa.field("data", pa.binary()),
-                 lambda key, cell: cell.data),
-        "timestamp": (pa.field("timestamp", pa.int64(), nullable=False),
-                      lambda key, cell: cell.timestamp),
-        "ttl": (pa.field("ttl", pa.int64()),
-                lambda key, cell: cell.ttl),
-        "expiration": (pa.field("expiration", pa.int64()),
-                       lambda key, cell: cell.expiration),
-    }
-    want = (("key", "name", "state", "data", "timestamp", "ttl",
-             "expiration", "generation") if project is None
-            else tuple(project))
-    getters = [full[n][1] for n in want if n != "generation"]
-    schema = pa.schema([full[n][0] if n != "generation" else
-                        pa.field("generation", pa.int32(), nullable=False)
-                        for n in want])
-    cols: list[list] = [[] for _ in getters]
-    n_cells = 0
-
-    def flush():
-        nonlocal n_cells
-        arrays = []
-        i = 0
-        for n in want:
-            if n == "generation":
-                arrays.append(pa.array([generation] * n_cells, pa.int32()))
-            else:
-                arrays.append(pa.array(cols[i], schema.field(n).type))
-                i += 1
-        batch = pa.RecordBatch.from_arrays(arrays, schema=schema)
-        n_cells = 0
-        for c in cols:
-            c.clear()
-        return batch
-
-    for key, cell in cell_iter:
-        for c, get in zip(cols, getters):
-            c.append(get(key, cell))
-        n_cells += 1
-        if n_cells >= cells_per_batch:
-            yield flush()
-    if n_cells:
-        yield flush()
+    want, fill = _plan_view(True, project, skip_values)
+    fields = _arrow_fields()
+    for keys, offsets, cols in _walk(data_path, start, end, fill,
+                                     read_block, _NO_LIMIT,
+                                     cells_per_batch):
+        if offsets[-1]:
+            yield _to_batch(True, want, keys, offsets, cols, generation,
+                            fields)
 
 
 def rows_to_batches(row_iter: Iterator[Row], generation: int = 0,
                     rows_per_batch: int = 4096,
                     skip_values: bool = False,
-                    project: tuple[str, ...] | None = None):
-    """Generic ``Row`` iterator → ``pyarrow.RecordBatch`` adapter
-    (DATA_SCHEMA + generation).  Arrow transfer for read paths whose
-    parse loop is not window-vectorized — e.g. ``format=cassandra``
-    (cassandra1x.read_cassandra_rows): the per-row parse stays Python,
-    but rows cross into Spark as Arrow columns instead of one pickled
-    tuple each.  ``project``/``skip_values`` prune post-parse (the 1.x
-    parser must still walk the full row), narrowing the Arrow
-    transfer."""
-    import pyarrow as pa
-
-    cell_struct = pa.struct([
-        pa.field("name", pa.binary(), nullable=False),
-        pa.field("state", pa.string(), nullable=False),
-        pa.field("data", pa.binary()),
-        pa.field("timestamp", pa.int64(), nullable=False),
-        pa.field("ttl", pa.int64()),
-        pa.field("expiration", pa.int64()),
-    ])
-    schema = pa.schema([
-        pa.field("key", pa.binary(), nullable=False),
-        pa.field("columns", pa.list_(cell_struct), nullable=False),
-        pa.field("generation", pa.int32(), nullable=False),
-    ])
-
-    want = (("key", "columns", "generation") if project is None
-            else tuple(project))
-    need_cells = "columns" in want
-    schema = pa.schema([schema.field(n) for n in want])
-
-    n_rows = 0
+                    project: tuple[str, ...] | None = None,
+                    flat: bool = False, cells_per_batch: int = 8192):
+    """``Row`` iterator → the same Arrow views as ``read_data_batches``
+    (nested) or, with ``flat``, ``read_cell_batches``, with the same
+    batch cuts.  For read paths that decode to ``Row`` objects, e.g.
+    ``format=cassandra`` (cassandra1x.read_cassandra_rows): the 1.x
+    parser must still walk the full row, ``project``/``skip_values``
+    only narrow what crosses into Spark."""
+    want, fill = _plan_view(flat, project, skip_values)
+    fields = _arrow_fields()
+    max_rows, max_cells = ((_NO_LIMIT, cells_per_batch) if flat
+                           else (rows_per_batch, _NO_LIMIT))
     keys: list[bytes] = []
-    cell_offsets: list[int] = [0]
-    c_name: list[bytes] = []
-    c_state: list[str] = []
-    c_data: list[bytes | None] = []
-    c_ts: list[int] = []
-    c_ttl: list[int | None] = []
-    c_exp: list[int | None] = []
+    offsets = [0]
+    cols = {name: [] for name in fill}
 
-    def flush():
-        nonlocal n_rows
-        arrays = {}
-        if "key" in want:
-            arrays["key"] = pa.array(keys, pa.binary())
-        if need_cells:
-            struct_arr = pa.StructArray.from_arrays(
-                [pa.array(c_name, pa.binary()),
-                 pa.array(c_state, pa.string()),
-                 pa.array(c_data, pa.binary()),
-                 pa.array(c_ts, pa.int64()),
-                 pa.array(c_ttl, pa.int64()),
-                 pa.array(c_exp, pa.int64())],
-                fields=list(cell_struct))
-            arrays["columns"] = pa.ListArray.from_arrays(
-                pa.array(cell_offsets, pa.int32()), struct_arr)
-        if "generation" in want:
-            arrays["generation"] = pa.array([generation] * n_rows,
-                                            pa.int32())
-        batch = pa.RecordBatch.from_arrays([arrays[n] for n in want],
-                                           schema=schema)
-        n_rows = 0
-        keys.clear()
-        del cell_offsets[:]
-        cell_offsets.append(0)
-        c_name.clear(); c_state.clear(); c_data.clear()
-        c_ts.clear(); c_ttl.clear(); c_exp.clear()
-        return batch
+    def batch():
+        b = _to_batch(flat, want, keys, offsets, cols, generation, fields)
+        _clear(keys, offsets, cols)
+        return b
 
+    n = 0
     for row in row_iter:
-        n_rows += 1
-        if "key" in want:
-            keys.append(row.key)
-        if need_cells:
-            for c in row.cells:
-                c_name.append(c.name)
-                c_state.append(c.state)
-                c_data.append(None if skip_values else c.data)
-                c_ts.append(c.timestamp)
-                c_ttl.append(c.ttl)
-                c_exp.append(c.expiration)
-            cell_offsets.append(len(c_name))
-        if n_rows >= rows_per_batch:
-            yield flush()
-    if n_rows:
-        yield flush()
+        for cell in row.cells:
+            if n >= max_cells:
+                keys.append(row.key)
+                offsets.append(n)
+                yield batch()
+                n = 0
+            for name, c in cols.items():
+                c.append(_STATE_TO_CODE[cell.state] if name == "state"
+                         else getattr(cell, name))
+            n += 1
+        keys.append(row.key)
+        offsets.append(n)
+        if n >= max_cells or len(keys) >= max_rows:
+            yield batch()
+            n = 0
+    if n if flat else keys:
+        yield batch()
 
 
 def read_index_entries(index_path: str, start: int = 0,

@@ -283,11 +283,6 @@ class SSTableReader(DataSourceReader):
         # job (torn writes, partial uploads). Default false = fail fast.
         self.ignore_corrupt = str(options.get("ignore_corrupt_files",
                                               "false")).lower() == "true"
-        # Arrow-batched reads are the default hot path (one Arrow IPC
-        # transfer per ~4k rows instead of one pickled tuple per row);
-        # use_arrow=false falls back to the row iterator.
-        self.use_arrow = str(options.get("use_arrow",
-                                         "true")).lower() == "true"
         # format=cassandra only: error (default) | skip for columns
         # outside the 3-variant model (counters, range tombstones) —
         # real backups can contain them (cassandra1x.py module doc)
@@ -511,10 +506,10 @@ class SSTableReader(DataSourceReader):
                 partition.end, skipped[0])
 
     def _guarded(self, partition: RangePartition, src, skipped: list):
-        """Yield one split's decoded items (Arrow batches or projected
-        tuples).  A decode error fails the task, or — with
-        ``ignore_corrupt_files=true`` — drops the rest of the split
-        with one warning naming the file, byte range and error."""
+        """Yield one split's Arrow batches.  A decode error fails the
+        task, or — with ``ignore_corrupt_files=true`` — drops the rest
+        of the split with one warning naming the file, byte range and
+        error."""
         while True:
             try:
                 item = next(src)
@@ -536,7 +531,7 @@ class SSTableReader(DataSourceReader):
             yield item
 
     def _project_tuples(self, kind: str, tuples):
-        """Non-Arrow fallback projection: narrow full-width tuples to
+        """Narrow the metadata kinds' full-width tuples to
         ``self.project`` (schema-order)."""
         if self.project is None:
             yield from tuples
@@ -549,83 +544,29 @@ class SSTableReader(DataSourceReader):
     def read(self, partition: RangePartition):
         if not partition.path:
             return
-        skipped = [0]
-        if self.kind == "cells":
+        if self.kind in ("data", "cells"):
+            # one per-split path for both formats, batch and streaming:
+            # Arrow batches, nested (data) or one record per cell
+            skipped = [0]
+            flat = self.kind == "cells"
             if self.fmt == "cassandra":
                 from . import cassandra1x
 
-                cell_iter = ((row.key, c) for row in
-                             cassandra1x.read_cassandra_rows(
-                                 partition.path, partition.start,
-                                 partition.end,
-                                 on_unsupported=self.on_unsupported,
-                                 skipped=skipped)
-                             for c in row.cells)
-                if self.skip_values:
-                    # 1.x parse walks the full row; prune post-parse
-                    from dataclasses import replace as _replace
-
-                    cell_iter = ((k, _replace(c, data=None))
-                                 for k, c in cell_iter)
-            elif self.use_arrow:
-                # windowed fast parse straight into flat Arrow batches
-                # (read_cell_batches: unpack_from over in-memory blocks,
-                # per-cell flush keeps wide rows bounded)
-                cell_iter = None
+                src = codec.rows_to_batches(
+                    cassandra1x.read_cassandra_rows(
+                        partition.path, partition.start, partition.end,
+                        on_unsupported=self.on_unsupported,
+                        skipped=skipped),
+                    generation=partition.generation,
+                    skip_values=self.skip_values, project=self.project,
+                    flat=flat)
             else:
-                cell_iter = codec.read_cells_flat(
-                    partition.path, partition.start, partition.end,
-                    skip_values=self.skip_values)
-            if self.use_arrow:
-                src = (codec.cells_to_batches(
-                           cell_iter, generation=partition.generation,
-                           project=self.project)
-                       if cell_iter is not None else
-                       codec.read_cell_batches(
-                           partition.path, partition.start, partition.end,
-                           generation=partition.generation,
-                           skip_values=self.skip_values,
-                           project=self.project))
-            else:
-                src = self._project_tuples("cells", (
-                    (key, c.name, c.state, c.data, c.timestamp,
-                     c.ttl, c.expiration, partition.generation)
-                    for key, c in cell_iter))
-            yield from self._guarded(partition, src, skipped)
-            return
-        if self.kind == "data":
-            if self.fmt == "cassandra":
-                from . import cassandra1x
-
-                rows = cassandra1x.read_cassandra_rows(
-                    partition.path, partition.start, partition.end,
-                    on_unsupported=self.on_unsupported, skipped=skipped)
-                use_arrow = self.use_arrow
-                src = (codec.rows_to_batches(
-                           rows, generation=partition.generation,
-                           skip_values=self.skip_values,
-                           project=self.project)
-                       if use_arrow else rows)
-            else:
-                use_arrow = self.use_arrow
-                src = (codec.read_data_batches(
-                           partition.path, partition.start, partition.end,
+                read = codec.read_cell_batches if flat \
+                    else codec.read_data_batches
+                src = read(partition.path, partition.start, partition.end,
                            generation=partition.generation,
                            skip_values=self.skip_values,
                            project=self.project)
-                       if use_arrow else
-                       codec.read_data_rows(partition.path, partition.start,
-                                            partition.end,
-                                            skip_values=self.skip_values))
-            if not use_arrow:
-                src = self._project_tuples("data", (
-                    (item.key,
-                     [(c.name, c.state,
-                       None if self.skip_values else c.data,
-                       c.timestamp, c.ttl, c.expiration)
-                      for c in item.cells],
-                     partition.generation)
-                    for item in src))
             yield from self._guarded(partition, src, skipped)
         elif self.kind == "index":
             yield from self._project_tuples("index", (
@@ -719,26 +660,17 @@ class SSTableStreamReader(DataSourceStreamReader):
     understood.
 
     Reads execute on executors, one partition per planned split per new
-    file — the driver only lists the directory."""
+    file — the driver only lists the directory.  Each split is decoded
+    by the batch scan's own ``SSTableReader.read``, so a stream takes
+    the same options and gets the same Arrow batches, unsupported-column
+    warnings and ``ignore_corrupt_files`` handling."""
 
     def __init__(self, options: dict) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("sstable stream source requires a path")
-        self.kind = options.get("kind", "data")
-        if self.kind not in ("data", "cells"):
+        self._splits = SSTableReader(options)
+        if self._splits.kind not in ("data", "cells"):
             raise ValueError(
                 "sstable streaming supports kind=data|cells only")
-        self.fmt = options.get("format", "native")
-        if self.fmt not in ("native", "cassandra"):
-            raise ValueError(f"unknown format: {self.fmt}")
-        self.max_split = int(options.get("max_split_bytes",
-                                         DEFAULT_MAX_SPLIT_BYTES))
-        self.on_unsupported = str(options.get("on_unsupported", "error"))
-        if self.on_unsupported not in ("error", "skip"):
-            raise ValueError(
-                f"on_unsupported must be error|skip, "
-                f"got {self.on_unsupported!r}")
+        self.path = self._splits.path
         self.grace_ns = int(options.get("late_file_grace_ms",
                                         60_000)) * 1_000_000
         self.seen_cap = int(options.get("seen_files_cap", 1024))
@@ -754,10 +686,6 @@ class SSTableStreamReader(DataSourceStreamReader):
         if self.max_files is not None and self.max_files <= 0:
             raise ValueError("max_files_per_trigger must be positive, "
                              f"got {self.max_files}")
-        # same explicit projection options as the batch reader
-        self.project = _parse_columns(dict(options))
-        self.skip_values = str(options.get("skip_values",
-                                           "false")).lower() == "true"
         # driver-side, best-effort late-file detection (log only):
         self._known: set[str] = set()
         self._prev_offset: dict | None = None
@@ -874,7 +802,7 @@ class SSTableStreamReader(DataSourceStreamReader):
         self._adopt(start)
         self._adopt(end)
         ci_reader = None
-        if self.fmt == "cassandra":
+        if self._splits.fmt == "cassandra":
             from .cassandra1x import read_cassandra_compression_info
 
             ci_reader = read_cassandra_compression_info
@@ -885,56 +813,13 @@ class SSTableStreamReader(DataSourceStreamReader):
         for base in new:
             full = os.path.join(self.path, base)
             if fs.exists(full):
-                parts.extend(_plan_file(full, self.max_split, ci_reader))
+                parts.extend(_plan_file(full, self._splits.max_split,
+                                        ci_reader))
         # Spark requires ≥1 partition; empty batch → one no-op marker
         return parts or [RangePartition("", 0, 0, 0)]
 
-    def _rows(self, partition: RangePartition):
-        if self.fmt == "cassandra":
-            from .cassandra1x import read_cassandra_rows
-
-            return read_cassandra_rows(partition.path, partition.start,
-                                       partition.end,
-                                       on_unsupported=self.on_unsupported)
-        return codec.read_data_rows(partition.path, partition.start,
-                                    partition.end,
-                                    skip_values=self.skip_values)
-
-    def _project_tuples(self, kind: str, tuples):
-        if self.project is None:
-            yield from tuples
-            return
-        names = _SCHEMAS_BY_KIND[kind].fieldNames()
-        idx = [names.index(n) for n in self.project]
-        for t in tuples:
-            yield tuple(t[i] for i in idx)
-
     def read(self, partition: RangePartition):
-        if not partition.path:
-            return
-        null_data = self.skip_values and self.fmt == "cassandra"
-        if self.kind == "cells":
-            # flat cell stream: feeds streaming.streaming_lww_cells
-            # directly (its input schema), wide-row-safe
-            if self.fmt == "cassandra":
-                cell_iter = ((row.key, c) for row in self._rows(partition)
-                             for c in row.cells)
-            else:
-                cell_iter = codec.read_cells_flat(
-                    partition.path, partition.start, partition.end,
-                    skip_values=self.skip_values)
-            yield from self._project_tuples("cells", (
-                (key, c.name, c.state,
-                 None if null_data else c.data, c.timestamp,
-                 c.ttl, c.expiration, partition.generation)
-                for key, c in cell_iter))
-            return
-        yield from self._project_tuples("data", (
-            (row.key,
-             [(c.name, c.state, None if null_data else c.data,
-               c.timestamp, c.ttl, c.expiration) for c in row.cells],
-             partition.generation)
-            for row in self._rows(partition)))
+        return self._splits.read(partition)
 
     def commit(self, end: dict) -> None:
         # nothing to clean up, but ratchet the committed offset so a
@@ -953,9 +838,8 @@ def _batch_rows(batch):
     # null list, whatever its offsets say), so sliced batches line up
     counts = lists.value_lengths().fill_null(0).to_pylist()
     cells = lists.flatten()
-    flat = list(map(codec.Cell, *(
-        cells.field(f).to_pylist() for f in
-        ("name", "state", "data", "timestamp", "ttl", "expiration"))))
+    flat = list(map(codec.Cell, *(cells.field(f).to_pylist()
+                                  for f in codec.CELL_FIELDS)))
     start = 0
     for key, gen, n in zip(batch.column("key").to_pylist(),
                            batch.column("generation").to_pylist(), counts):

@@ -427,6 +427,46 @@ def test_spark_scan_skips_counter_columns_with_option(spark, tmp_path):
         base.option("on_unsupported", "nope").load(d).collect()
 
 
+def test_stream_skip_of_unsupported_columns_is_logged(tmp_path, caplog):
+    """A stream with on_unsupported=skip logs the skipped counter
+    column per split, as the batch scan does, and reads Arrow batches
+    holding only the supported cells."""
+    import logging
+
+    from sstable_hadoop_spark.sources.cassandra1x import (
+        encode_unsupported_column,
+    )
+    from sstable_hadoop_spark.sources.datasource import SSTableStreamReader
+
+    d = str(tmp_path / "snap")
+    os.makedirs(d)
+    raw = encode_cassandra_row(
+        Row(b"k1", [Cell(b"c", "NORMAL", b"v1", 10)]),
+        extra_cells=[encode_unsupported_column("counter", b"hits")])
+    raw += encode_cassandra_row(Row(b"k2", [Cell(b"c", "NORMAL", b"v2", 20)]))
+    data_path = os.path.join(d, "ks-cf-hc-1-Data.db")
+    with open(data_path, "wb") as f:
+        f.write(raw)
+
+    for kind in ("data", "cells"):
+        reader = SSTableStreamReader({"path": d, "format": "cassandra",
+                                      "kind": kind,
+                                      "on_unsupported": "skip"})
+        (part,) = reader.partitions(reader.initialOffset(),
+                                    reader.latestOffset())
+        caplog.clear()
+        with caplog.at_level(logging.WARNING):
+            batches = list(reader.read(part))
+        (rec,) = [r for r in caplog.records
+                  if "on_unsupported=skip" in r.getMessage()]
+        assert data_path in rec.getMessage()
+        assert "skipped 1 unsupported column" in rec.getMessage()
+        recs = [r for b in batches for r in b.to_pylist()]
+        assert sorted(r["key"] for r in recs) == [b"k1", b"k2"], kind
+        if kind == "data":
+            assert all(len(r["columns"]) == 1 for r in recs)
+
+
 @pytest.mark.parametrize("field,value", [
     ("bloom", -8), ("index", -4), ("value_len", -1), ("value_len", 1 << 30),
 ])

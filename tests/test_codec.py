@@ -109,11 +109,32 @@ def test_partition_planning_tiles_file(tmp_path):
     assert got == [r.key for r in rows]
 
 
+def _drain(batches, errors: list) -> list[dict]:
+    """Records of ``batches`` up to the first EOFError, which is kept
+    in ``errors``."""
+    out = []
+    try:
+        for b in batches:
+            out.extend(b.to_pylist())
+    except EOFError as exc:
+        errors.append(exc)
+    return out
+
+
 def test_read_data_batches_equals_row_iterator(tmp_path):
-    """The Arrow hot path must produce exactly the rows of the row
-    iterator — all three cell states, both compression modes, and
-    parse windows far smaller than a row batch (forcing window-edge
-    row straddling and multi-batch output)."""
+    """Both Arrow views must produce exactly what the row iterator
+    reads — nested rows for ``read_data_batches``, the flattened cells
+    for ``read_cell_batches`` — for all three cell states, both
+    compression modes, parse windows far smaller than a row batch
+    (window-edge row straddling, multi-batch output), cell batches cut
+    inside rows, and a truncated file (the readable prefix, then
+    EOFError)."""
+    from sstable_hadoop_spark.sources.codec import (
+        read_cell_batches,
+        read_data_batches,
+        rows_to_batches,
+    )
+
     rows = []
     for i in range(500):
         cells = [
@@ -129,29 +150,78 @@ def test_read_data_batches_equals_row_iterator(tmp_path):
                               expiration=40_000 + i))
         rows.append(Row(key=f"key{i:05d}".encode(), cells=cells))
 
+    def nested(recs):
+        return [(rec["key"],
+                 [(c["name"], c["state"], c["data"], c["timestamp"],
+                   c["ttl"], c["expiration"]) for c in rec["columns"]],
+                 rec["generation"]) for rec in recs]
+
+    def flat(recs):
+        return [(rec["key"], [(rec["name"], rec["state"], rec["data"],
+                               rec["timestamp"], rec["ttl"],
+                               rec["expiration"])], rec["generation"])
+                for rec in recs]
+
+    def reference(path, errors):
+        out = []
+        try:
+            for r in read_data_rows(path):
+                out.append((r.key,
+                            [(c.name, c.state, c.data, c.timestamp, c.ttl,
+                              c.expiration) for c in r.cells], 3))
+        except EOFError as exc:
+            errors.append(exc)
+        return out
+
+    def flattened(expect):
+        return [(key, [cell], gen) for key, cells, gen in expect
+                for cell in cells]
+
     for compressed in (False, True):
         d = str(tmp_path / f"eq_{compressed}")
         paths = codec.write_sstable(d, "eq", rows, generation=3,
                                     compressed=compressed, chunk_length=2048)
-        expect = [(r.key,
-                   [(c.name, c.state, c.data, c.timestamp, c.ttl,
-                     c.expiration) for c in r.cells], 3)
-                  for r in read_data_rows(paths["data"])]
-        from sstable_hadoop_spark.sources.codec import read_data_batches
+        expect = reference(paths["data"], [])
+        assert len(expect) == 500
 
-        got = []
-        n_batches = 0
-        for b in read_data_batches(paths["data"], generation=3,
-                                   rows_per_batch=64, read_block=512):
-            n_batches += 1
-            for rec in b.to_pylist():
-                got.append((rec["key"],
-                            [(c["name"], c["state"], c["data"],
-                              c["timestamp"], c["ttl"], c["expiration"])
-                             for c in rec["columns"]],
-                            rec["generation"]))
-        assert n_batches > 1
-        assert got == expect
+        batches = list(read_data_batches(paths["data"], generation=3,
+                                         rows_per_batch=64, read_block=512))
+        assert len(batches) > 1
+        assert nested(r for b in batches for r in b.to_pylist()) == expect
+        # the Row adapter behind format=cassandra cuts the same batches
+        assert list(rows_to_batches(read_data_rows(paths["data"]),
+                                    generation=3, rows_per_batch=64)) \
+            == batches
+
+        # 3-cell batches cut rows of up to 5 cells in the middle
+        batches = list(read_cell_batches(paths["data"], generation=3,
+                                         cells_per_batch=3, read_block=512))
+        assert [b.num_rows for b in batches[:-1]] == [3] * (len(batches) - 1)
+        assert any(a.column("key")[-1] == b.column("key")[0]
+                   for a, b in zip(batches, batches[1:]))
+        assert flat(r for b in batches
+                    for r in b.to_pylist()) == flattened(expect)
+        assert list(rows_to_batches(read_data_rows(paths["data"]),
+                                    generation=3, flat=True,
+                                    cells_per_batch=3)) == batches
+
+    # truncated mid-row: each view keeps the reference's readable prefix
+    data = paths["data"].replace("eq_True", "eq_False")
+    cut = str(tmp_path / "cut-3-Data.db")
+    with open(data, "rb") as src, open(cut, "wb") as dst:
+        dst.write(src.read(os.path.getsize(data) - 31))
+    ref_err, nested_err, flat_err = [], [], []
+    prefix = reference(cut, ref_err)
+    assert ref_err and 0 < len(prefix) < 500
+    assert nested(_drain(read_data_batches(
+        cut, generation=3, rows_per_batch=64, read_block=512),
+        nested_err)) == prefix
+    assert flat(_drain(read_cell_batches(
+        cut, generation=3, cells_per_batch=3, read_block=512),
+        flat_err)) == flattened(prefix)
+    assert nested_err and flat_err
+    assert "truncated row" in str(nested_err[0])
+    assert str(nested_err[0]) == str(flat_err[0])
 
 
 def test_writer_supports_lz4_and_zstd(tmp_path):

@@ -185,10 +185,30 @@ def read_data_rows_from_bytes(raw: bytes):
         yield Row(key=key, cells=[_read_cell(buf) for _ in range(n_cells)])
 
 
+def _reference_cells(directory: str, skip_values: bool = False):
+    """Every cell of every Data.db under ``directory`` as (key, name,
+    state, data, timestamp, ttl, expiration, generation), decoded by
+    the codec's row-at-a-time reference reader ``read_data_rows``."""
+    from sstable_hadoop_spark.sources.codec import (
+        generation_of,
+        read_data_rows,
+    )
+
+    out = []
+    for fn in sorted(os.listdir(directory)):
+        if fn.endswith("-Data.db"):
+            path = os.path.join(directory, fn)
+            out.extend((r.key, c.name, c.state, c.data, c.timestamp,
+                        c.ttl, c.expiration, generation_of(path))
+                       for r in read_data_rows(path, skip_values=skip_values)
+                       for c in r.cells)
+    return sorted(out, key=repr)
+
+
 def test_cells_kind_matches_exploded_data_scan(spark, sstable_dir):
     """kind=cells (flat, wide-row-safe) must equal
-    explode_cells(kind=data) cell-for-cell, with splits, Arrow off/on,
-    and key pushdown."""
+    explode_cells(kind=data) and the ``read_data_rows`` reference
+    cell-for-cell, with splits and key pushdown."""
     from sstable_hadoop_spark.operators import explode_cells
 
     def snap(df):
@@ -203,9 +223,7 @@ def test_cells_kind_matches_exploded_data_scan(spark, sstable_dir):
     flat = spark.read.format("sstable").option("kind", "cells") \
         .option("max_split_bytes", "2048").load(sstable_dir)
     assert snap(flat) == base
-    no_arrow = spark.read.format("sstable").option("kind", "cells") \
-        .option("use_arrow", "false").load(sstable_dir)
-    assert snap(no_arrow) == base
+    assert sorted(snap(flat), key=repr) == _reference_cells(sstable_dir)
     # key filter still correct (partition pruning is correctness-free)
     some_key = base[0][0]
     got = snap(flat.filter(F.col("key") == some_key))
@@ -501,6 +519,48 @@ def test_ignore_corrupt_split_is_logged(tmp_path, caplog):
         assert "ignore_corrupt_files" in msg
 
 
+def test_bad_state_code_fails_every_projection(tmp_path):
+    """A cell state byte outside NORMAL/DELETED/EXPIRING fails the split
+    loudly on every projection — including key-only scans, which only
+    bounds-walk the cells — instead of misparsing the rows after it."""
+    import pytest as _pytest
+
+    from sstable_hadoop_spark.sources.codec import (
+        Cell,
+        Row,
+        read_index_entries,
+        write_sstable,
+    )
+    from sstable_hadoop_spark.sources.datasource import SSTableReader
+
+    d = str(tmp_path / "bad_state")
+    rows = [Row(f"k{i:02d}".encode(),
+                [Cell(b"c", "NORMAL", b"v" * 9, i),
+                 Cell(b"d", "DELETED", None, i)]) for i in range(30)]
+    paths = write_sstable(d, "bad", rows, generation=1)
+    key, pos = list(read_index_entries(paths["index"]))[12]
+    # row := u16 key_len, key, u32 n_cells; cell := u16 name_len, name,
+    # u8 state, ...: the state byte of row 12's first cell
+    state_at = pos + 2 + len(key) + 4 + 2 + len(b"c")
+    with open(paths["data"], "r+b") as f:
+        f.seek(state_at)
+        assert f.read(1) == b"\x00"
+        f.seek(state_at)
+        f.write(b"\x07")
+
+    for kind, columns in (("data", "key"), ("data", None),
+                          ("cells", None), ("cells", "key")):
+        opts = {"path": d, "kind": kind}
+        if columns:
+            opts["columns"] = columns
+        reader = SSTableReader(opts)
+        (part,) = reader.partitions()
+        with _pytest.raises(IOError, match="corrupt sstable split") as exc:
+            for _ in reader.read(part):
+                pass
+        assert "bad cell state code 7" in str(exc.value), (kind, columns)
+
+
 # ---- explicit column projection (columns= / skip_values=) ----------
 # The Python DataSource API exposes no Catalyst column pruning; these
 # options are the engine's explicit stand-in (the reference's key-only
@@ -509,19 +569,25 @@ def test_ignore_corrupt_split_is_logged(tmp_path, caplog):
 
 def test_columns_projection_data_kind(spark, sstable_dir, cell_fixture):
     """columns=key,generation: schema narrows, row set matches the full
-    scan's (key, generation) projection exactly, on both the Arrow and
-    the row-iterator paths."""
+    scan's (key, generation) projection and the ``read_data_rows``
+    reference exactly."""
+    from sstable_hadoop_spark.sources.codec import (
+        generation_of,
+        read_data_rows,
+    )
+
     want = sorted((bytes(r["key"]), r["generation"])
                   for r in spark.read.format("sstable").load(sstable_dir)
                   .select("key", "generation").collect())
-    for use_arrow in ("true", "false"):
-        df = (spark.read.format("sstable")
-              .option("columns", "key,generation")
-              .option("use_arrow", use_arrow).load(sstable_dir))
-        assert df.columns == ["key", "generation"]
-        got = sorted((bytes(r["key"]), r["generation"])
-                     for r in df.collect())
-        assert got == want
+    df = (spark.read.format("sstable")
+          .option("columns", "key,generation").load(sstable_dir))
+    assert df.columns == ["key", "generation"]
+    got = sorted((bytes(r["key"]), r["generation"]) for r in df.collect())
+    assert got == want
+    data = [os.path.join(sstable_dir, fn) for fn in os.listdir(sstable_dir)
+            if fn.endswith("-Data.db")]
+    assert got == sorted((r.key, generation_of(p))
+                         for p in data for r in read_data_rows(p))
 
 
 def test_columns_projection_order_is_schema_order(spark, sstable_dir):
@@ -533,21 +599,25 @@ def test_columns_projection_order_is_schema_order(spark, sstable_dir):
 def test_skip_values_nulls_data_keeps_structure(spark, sstable_dir,
                                                 cell_fixture):
     """skip_values=true: cell structure (name/state/ts/ttl/expiration)
-    is bit-identical to the full scan; every data is NULL."""
+    is bit-identical to the full scan; every data is NULL, as in the
+    ``read_data_rows(skip_values=True)`` reference."""
     from sstable_hadoop_spark.operators import explode_cells
 
     full = {(bytes(r["key"]), bytes(r["name"]), r["state"],
              r["timestamp"], r["ttl"], r["expiration"], r["generation"])
             for r in explode_cells(
                 spark.read.format("sstable").load(sstable_dir)).collect()}
-    for use_arrow in ("true", "false"):
-        got = explode_cells(
-            spark.read.format("sstable").option("skip_values", "true")
-            .option("use_arrow", use_arrow).load(sstable_dir)).collect()
-        assert all(r["data"] is None for r in got)
-        assert {(bytes(r["key"]), bytes(r["name"]), r["state"],
-                 r["timestamp"], r["ttl"], r["expiration"],
-                 r["generation"]) for r in got} == full
+    got = explode_cells(
+        spark.read.format("sstable").option("skip_values", "true")
+        .load(sstable_dir)).collect()
+    assert all(r["data"] is None for r in got)
+    assert {(bytes(r["key"]), bytes(r["name"]), r["state"],
+             r["timestamp"], r["ttl"], r["expiration"],
+             r["generation"]) for r in got} == full
+    assert sorted(((bytes(r["key"]), bytes(r["name"]), r["state"], None,
+                    r["timestamp"], r["ttl"], r["expiration"],
+                    r["generation"]) for r in got), key=repr) \
+        == _reference_cells(sstable_dir, skip_values=True)
 
 
 def test_columns_projection_cells_kind(spark, sstable_dir, cell_fixture):
