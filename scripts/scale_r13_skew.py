@@ -2,7 +2,7 @@
 """r13 VERDICT #4: a standing measured number for the SALTED skew path
 at a scale ABOVE the probe gate.
 
-At sf10 the events parquet (~112 MB) exceeds skew._SKEW_MIN_INPUT_BYTES
+At sf10 the events parquet (~112 MB) exceeds _util._SKEW_MIN_INPUT_BYTES
 (64 MiB), so ``lww_cell(skew="auto")`` really probes and — with ~40 %
 of all cells remapped onto one hot row key (the lww_skewed_auto bench
 shape) — takes the salted two-phase merge; ``skew_join`` really
@@ -20,8 +20,10 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 
 from sstable_hadoop_spark.operators.lww import lww_cell  # noqa: E402
-from sstable_hadoop_spark.operators.skew import (  # noqa: E402
+from sstable_hadoop_spark.operators._util import (  # noqa: E402
     _SKEW_MIN_INPUT_BYTES,
+)
+from sstable_hadoop_spark.operators.skew import (  # noqa: E402
     detect_group_skew,
     skew_join,
 )

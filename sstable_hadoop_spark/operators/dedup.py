@@ -329,7 +329,16 @@ def minhash_dedup_incremental(new_docs: DataFrame,
     A 100 TB corpus deduped daily re-hashes only the day's batch; the
     corpus contributes a columnar scan of (id, sig_*) plus profile
     lookups for the candidate ids.  Store profiles bucketed by id to
-    make the verification join co-located."""
+    make the verification join co-located.
+
+    Build-time work: on a batch (non-streaming) input, building the
+    returned DataFrame already runs Spark jobs — always one eager
+    ``localCheckpoint`` of the candidate pairs, which runs the band
+    joins, plus one per side whose profiles are computed rather than read from
+    files.  Checkpointed data has no lineage: it lives only in executor
+    storage, so losing an executor that holds a block fails every
+    downstream action on the result instead of recomputing it —
+    re-run the call after an executor loss."""
     new_prof = (new_profiles if new_profiles is not None
                 else minhash_profiles(new_docs, text_col, id_col, n,
                                       num_perm, max_doc_freq))
@@ -345,18 +354,19 @@ def minhash_dedup_incremental(new_docs: DataFrame,
     # sets in executor storage is a §5 memory hazard, r12 VERDICT).
     # A plain file read (the production shape: profiles stored as
     # parquet) is left fully lazy — its branches are cheap columnar
-    # scans.  ``default=False``: when the plan can't be inspected,
+    # scans.  When the plan can't be inspected (``plan_shape`` None),
     # uncertainty must never checkpoint (ADVICE r12).
-    from ._util import _has_shuffle_below
+    from ._util import plan_shape
 
     sig_cols = [f"sig_{i}" for i in range(num_perm)]
     if not new_docs.isStreaming:
-        if new_profiles is None and _has_shuffle_below(new_prof,
-                                                       default=False):
+        if new_profiles is None and getattr(plan_shape(new_prof),
+                                            "has_exchange", False):
             new_prof = new_prof.localCheckpoint(eager=True)
     stored_sigs = stored_profiles.select("id", *sig_cols)
     if (not new_docs.isStreaming
-            and _has_shuffle_below(stored_profiles, default=False)):
+            and getattr(plan_shape(stored_profiles), "has_exchange",
+                        False)):
         stored_sigs = stored_sigs.localCheckpoint(eager=True)
     new_ids = new_prof.select("id")
     stored_sigs = stored_sigs.join(new_ids, "id", "left_anti")

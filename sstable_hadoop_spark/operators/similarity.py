@@ -23,11 +23,10 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: per-row work here is LIGHT (vector dots / regex, not the
-#: 17-hash shingle pipelines), so one task needs ~512 rows
-#: to amortize scheduling — ensure_parallelism caps tiny-input
-#: fan-out with this (r13; no effect at scale, see _util.py)
-_ROWS_PER_SLOT = 512
+from ._util import ROWS_PER_SLOT
+
+#: per-row work here is LIGHT (see ``_util.ROWS_PER_SLOT``)
+_ROWS_PER_SLOT = ROWS_PER_SLOT["vector"]
 
 
 def dot(a: Column, b: Column) -> Column:

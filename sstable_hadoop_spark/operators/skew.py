@@ -16,13 +16,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-#: inputs whose files total at most this many bytes take the JVM
-#: head-sample path: a full codegen scan of ≤64 MiB is cheaper than
-#: one JVM→Python round trip, and the probe then costs no Python
-#: worker at all (guide §4: eliminate the boundary where a built-in
-#: expresses the same thing)
-_JVM_PROBE_MAX_BYTES = 64 * 1024 * 1024
+from . import _util
 
 
 def _head_sample(df: DataFrame, cols: Sequence[str],
@@ -33,38 +27,23 @@ def _head_sample(df: DataFrame, cols: Sequence[str],
     input size (both sample exactly the same rows — the leading rows
     of each partition in scan order):
 
-    - SCAN-SHAPED local inputs (no shuffle/Generate below — a
-      row-expanding plan would void the size bound) whose file
-      metadata says ≤ ``_JVM_PROBE_MAX_BYTES`` filter on the
-      per-partition row position encoded in
+    - SCAN-SHAPED inputs (no exchange, Generate or Python map below:
+      each would void the size bound or the per-partition row
+      positions) whose leaf files total ≤ ``_JVM_PROBE_MAX_BYTES``
+      filter on the per-partition row position encoded in
       ``monotonically_increasing_id`` (low 33 bits) — pure codegen,
       no Python worker; the "full" scan it implies is bounded by the
       size + shape checks that selected it;
-    - everything else (big, remote, unsized, exploded or post-shuffle
-      inputs) keeps the mapInPandas that stops pulling Arrow batches
-      once satisfied — cost O(partitions × rows_per_partition), NOT a
-      full scan, so it stays cheap at 100 TB (vs ``sample(fraction)``,
-      which reads everything)."""
-    from ._util import (
-        _GENERATE_RE,
-        _SHUFFLE_NODE_RE,
-        _analyzed_plan_str,
-        _input_file_bytes,
-    )
-
+    - everything else (big, remote, unsized, exploded, Python-mapped
+      or post-shuffle inputs) keeps the mapInPandas that stops pulling
+      Arrow batches once satisfied — cost O(partitions ×
+      rows_per_partition), NOT a full scan, so it stays cheap at
+      100 TB (vs ``sample(fraction)``, which reads everything)."""
     proj = df.select(*cols)
-
-    small = False
-    if not df.isStreaming:
-        plan = _analyzed_plan_str(df)
-        scan_shaped = (plan is not None
-                       and not _SHUFFLE_NODE_RE.search(plan)
-                       and not _GENERATE_RE.search(plan))
-        if scan_shaped:
-            total = _input_file_bytes(df)
-            small = (total is not None
-                     and 0 < total <= _JVM_PROBE_MAX_BYTES)
-    if small:
+    shape = _util.plan_shape(df)
+    if (shape is not None and not (shape.has_exchange or shape.has_generate
+                                   or shape.has_python_map)
+            and _util.tiny_input(shape, _util._JVM_PROBE_MAX_BYTES)):
         pos = F.monotonically_increasing_id().bitwiseAND(
             F.lit((1 << 33) - 1))
         return (proj.withColumn("_pp_pos", pos)
@@ -83,29 +62,6 @@ def _head_sample(df: DataFrame, cols: Sequence[str],
     return proj.mapInPandas(take, proj.schema)
 
 
-#: below this total input size no reducer partition can exceed AQE's
-#: own skew definition (``spark.sql.adaptive.skewJoin.
-#: skewedPartitionThresholdInBytes``, default 256 MB: a partition only
-#: COUNTS as skewed above it) — so probing is pure overhead and the
-#: detector answers False from file metadata alone, no job.  The gate
-#: is 64 MiB, not 256: file bytes are COMPRESSED parquet while AQE's
-#: threshold measures shuffle bytes, and dictionary/RLE-encoded
-#: columns commonly expand several-fold at shuffle — the 4× safety
-#: factor keeps a ≤256 MB-compressed hot key from slipping past the
-#: probe (ADVICE r12; results stay exact either way, the gate trades
-#: only probe latency).
-_SKEW_MIN_INPUT_BYTES = 64 * 1024 * 1024
-
-
-def _provably_tiny(df: DataFrame) -> bool:
-    from ._util import _input_file_bytes
-
-    if df.isStreaming:
-        return False
-    total = _input_file_bytes(df)
-    return total is not None and 0 < total <= _SKEW_MIN_INPUT_BYTES
-
-
 def detect_group_skew(df: DataFrame, keys: Sequence[str],
                       rows_per_partition: int = 1000,
                       skew_factor: int = 32,
@@ -117,14 +73,14 @@ def detect_group_skew(df: DataFrame, keys: Sequence[str],
 
     One small driver-side collect of a 1-row aggregate; the sample scan
     touches only the first batch(es) of each partition.  Inputs whose
-    leaf files total ≤ ``_SKEW_MIN_INPUT_BYTES`` answer False from
+    leaf files total ≤ ``_util._SKEW_MIN_INPUT_BYTES`` answer False from
     metadata alone (r12): skew mitigation exists to keep one reducer
     from drowning, and below the size a single partition must EXCEED
     to count as skewed (AQE's 256 MB threshold) the worst case — one
     reducer handling the whole input — is already cheaper than the
     probe job itself.  Which path runs never changes results (the
     salted merge is exact), so the gate trades only probe latency."""
-    if _provably_tiny(df):
+    if _util.tiny_input(_util.plan_shape(df), _util._SKEW_MIN_INPUT_BYTES):
         return False
     row = (_head_sample(df, keys, rows_per_partition)
            .groupBy(*keys).count()
@@ -222,7 +178,8 @@ def skew_join(left: DataFrame, right: DataFrame, on: str,
             f"skew_join supports inner/left, got {how!r} (split the "
             "other side for right-retaining joins)")
     if hot_keys is None:
-        if _provably_tiny(left):
+        if _util.tiny_input(_util.plan_shape(left),
+                            _util._SKEW_MIN_INPUT_BYTES):
             # below AQE's own skewed-partition threshold no key can
             # flood a reducer — the two probe jobs would cost more
             # than the worst case they protect against; the plain

@@ -13,11 +13,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: per-row work here is LIGHT (vector dots / regex, not the
-#: 17-hash shingle pipelines), so one task needs ~256 rows
-#: to amortize scheduling — ensure_parallelism caps tiny-input
-#: fan-out with this (r13; no effect at scale, see _util.py)
-_ROWS_PER_SLOT = 256
+from ._util import ROWS_PER_SLOT
+
+#: per-row work here is LIGHT (see ``_util.ROWS_PER_SLOT``)
+_ROWS_PER_SLOT = ROWS_PER_SLOT["text"]
 
 # Stopwords for the quality ratio — intentionally tiny and fixed.
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")

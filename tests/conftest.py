@@ -125,3 +125,22 @@ def cells_as_records(cell_fixture):
                 "expiration": c.expiration, "generation": g,
             })
     return recs
+
+
+def jobs_triggered(spark, fn):
+    """(fn(), number of Spark jobs that started while it ran)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    out = fn()
+    after = set(tracker.getJobIdsForGroup(None) or [])
+    return out, len(after - before)
+
+
+def mk_parquet(spark, tmp_path, n=1000, name="t"):
+    """A one-file parquet table (id, k = id % 7) of ``n`` rows, read back."""
+    from pyspark.sql import functions as F
+
+    p = str(tmp_path / name)
+    (spark.range(n).select(F.col("id"), (F.col("id") % 7).alias("k"))
+     .coalesce(1).write.mode("overwrite").parquet(p))
+    return spark.read.parquet(p)
