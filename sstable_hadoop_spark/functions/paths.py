@@ -1,5 +1,6 @@
 """Path-derivation scalar helpers — the reference's P1/P2 operators as
-Spark column expressions.
+Spark column expressions, over the family layout ``sources/codec.py``
+owns (``COMPONENTS``).
 
 - suffix filtering of directory listings
   (SSTableDataInputFormat.scala:13-18)
@@ -14,8 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_COMPONENTS = ("Data", "Index", "Summary", "CompressionInfo", "Filter",
-               "Statistics")
+from ..sources.codec import COMPONENT_SUFFIX, COMPONENTS
 
 
 def companion_path(path: Column | str, component: str) -> Column:
@@ -23,21 +23,18 @@ def companion_path(path: Column | str, component: str) -> Column:
 
     >>> companion_path(col("path"), "CompressionInfo")
     """
-    if component not in _COMPONENTS:
+    if component not in COMPONENTS:
         raise ValueError(f"unknown component {component}")
     c = F.col(path) if isinstance(path, str) else path
-    return F.regexp_replace(
-        c, r"-(Data|Index|Summary|CompressionInfo)\.db$",
-        f"-{component}.db")
+    return F.regexp_replace(c, COMPONENT_SUFFIX, f"-{component}.db")
 
 
 def root_name(path: Column | str) -> Column:
     """Strip the component suffix: ``.../name-3-Data.db`` → ``name-3``
     (reference GenerateSSTableDataSplits.scala:218-225)."""
     c = F.col(path) if isinstance(path, str) else path
-    base = F.element_at(F.split(c, "/"), -1)
-    return F.regexp_replace(
-        base, r"-(Data|Index|Summary|CompressionInfo)\.db$", "")
+    return F.regexp_replace(F.element_at(F.split(c, "/"), -1),
+                            COMPONENT_SUFFIX, "")
 
 
 def data_files(df: DataFrame, path_col: str = "path",

@@ -28,7 +28,6 @@ file.
 from __future__ import annotations
 
 import os
-import re as _re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -197,18 +196,19 @@ def file_key_range(data_path: str) -> tuple[bytes, bytes]:
     Summary.db walks its whole Index.db (still never the data)."""
     from sstable_hadoop_spark.sources import fs
     from sstable_hadoop_spark.sources.codec import (
+        companion,
         read_index_entries,
         read_summary_entries,
     )
 
-    index = _re.sub(r"-Data\.db$", "-Index.db", data_path)
+    index = companion(data_path, "Index")
     it = read_index_entries(index)
     try:
         first = next(it)[0]
     except StopIteration:
         raise ValueError(f"empty Index.db for {data_path}")
     start = 0
-    summary = _re.sub(r"-Data\.db$", "-Summary.db", data_path)
+    summary = companion(data_path, "Summary")
     if fs.exists(summary):
         for _, off in read_summary_entries(summary):
             start = off
@@ -305,11 +305,10 @@ def pick_leveled(in_dir: str, sstable_mb: float = 160.0,
 
 def _remove_family(data_path: str) -> None:
     from sstable_hadoop_spark.sources import fs
+    from sstable_hadoop_spark.sources.codec import COMPONENTS, companion
 
-    prefix = _re.sub(r"Data\.db$", "", data_path)
-    for comp in ("Data", "Index", "Summary", "CompressionInfo",
-                 "Filter", "Statistics"):
-        p = f"{prefix}{comp}.db"
+    for component in COMPONENTS:
+        p = companion(data_path, component)
         if fs.exists(p):
             fs.remove(p)
 

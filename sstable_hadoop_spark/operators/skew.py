@@ -20,12 +20,14 @@ from . import _util
 
 
 def _head_sample(df: DataFrame, cols: Sequence[str],
-                 rows_per_partition: int) -> DataFrame:
+                 rows_per_partition: int,
+                 shape: _util.PlanShape | None) -> DataFrame:
     """First ``rows_per_partition`` rows of every partition.
 
-    Two result-identical implementations picked by plan shape and
-    input size (both sample exactly the same rows — the leading rows
-    of each partition in scan order):
+    Two result-identical implementations picked by ``df``'s plan
+    ``shape`` (the caller's ``_util.plan_shape(df)``, so one decision
+    walks the plan once) and input size (both sample exactly the same
+    rows — the leading rows of each partition in scan order):
 
     - SCAN-SHAPED inputs (no exchange, Generate or Python map below:
       each would void the size bound or the per-partition row
@@ -40,7 +42,6 @@ def _head_sample(df: DataFrame, cols: Sequence[str],
       rows_per_partition), NOT a full scan, so it stays cheap at
       100 TB (vs ``sample(fraction)``, which reads everything)."""
     proj = df.select(*cols)
-    shape = _util.plan_shape(df)
     if (shape is not None and not (shape.has_exchange or shape.has_generate
                                    or shape.has_python_map)
             and _util.tiny_input(shape, _util._JVM_PROBE_MAX_BYTES)):
@@ -80,9 +81,10 @@ def detect_group_skew(df: DataFrame, keys: Sequence[str],
     reducer handling the whole input — is already cheaper than the
     probe job itself.  Which path runs never changes results (the
     salted merge is exact), so the gate trades only probe latency."""
-    if _util.tiny_input(_util.plan_shape(df), _util._SKEW_MIN_INPUT_BYTES):
+    shape = _util.plan_shape(df)
+    if _util.tiny_input(shape, _util._SKEW_MIN_INPUT_BYTES):
         return False
-    row = (_head_sample(df, keys, rows_per_partition)
+    row = (_head_sample(df, keys, rows_per_partition, shape)
            .groupBy(*keys).count()
            .agg(F.max("count").alias("mx"), F.sum("count").alias("n"),
                 F.count(F.lit(1)).alias("g"))
@@ -178,15 +180,16 @@ def skew_join(left: DataFrame, right: DataFrame, on: str,
             f"skew_join supports inner/left, got {how!r} (split the "
             "other side for right-retaining joins)")
     if hot_keys is None:
-        if _util.tiny_input(_util.plan_shape(left),
-                            _util._SKEW_MIN_INPUT_BYTES):
+        shape = _util.plan_shape(left)
+        if _util.tiny_input(shape, _util._SKEW_MIN_INPUT_BYTES):
             # below AQE's own skewed-partition threshold no key can
             # flood a reducer — the two probe jobs would cost more
             # than the worst case they protect against; the plain
             # join is row-identical by construction (r12)
             hot_keys = []
         else:
-            counts = (_head_sample(left, [on], sample_rows_per_partition)
+            counts = (_head_sample(left, [on], sample_rows_per_partition,
+                                   shape)
                       .groupBy(on).count())
             total = counts.agg(F.sum("count")).collect()[0][0] or 1
             cut = total * hot_fraction_milli // 1000

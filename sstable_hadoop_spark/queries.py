@@ -2317,6 +2317,25 @@ def window_session_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _drain_stream(spark: SparkSession, start) -> None:
+    """Run ``start()``'s ``availableNow`` streaming query to the end,
+    then stop it.  AQE cannot coalesce streaming stages, so the run
+    pins the state-store shuffle width at 32 (a bare session would run
+    200 near-empty stateful tasks per micro-batch) and restores the
+    session's own width afterwards, so no later query inherits it."""
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        q = start()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(key, width)
+
+
 def _idempotent_tmpdir(tag: str, build) -> str:
     """Deterministic temp dir built exactly once per ``tag``: the first
     caller wins a mkdir guard and runs ``build(out_dir)``; concurrent
@@ -2853,21 +2872,13 @@ def streaming_lww_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _stage_cell_stream(spark, sf_dir)
     cells = derived_cells(spark, sf_dir)
-
-    # AQE cannot coalesce streaming stages — pin the state-store shuffle
-    # width explicitly so a bare (driver) session doesn't run 200
-    # near-empty stateful tasks per micro-batch.
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     stream = (spark.readStream.schema(cells.schema)
               .option("maxFilesPerTrigger", "1").parquet(src))
     sink = f"lww_flush_{uuid.uuid4().hex[:8]}"
-    q = (streaming_lww_cells(stream)
-         .writeStream.format("memory").queryName(sink)
-         .outputMode("update").trigger(availableNow=True).start())
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    _drain_stream(spark, lambda: (
+        streaming_lww_cells(stream)
+        .writeStream.format("memory").queryName(sink)
+        .outputMode("update").trigger(availableNow=True).start()))
     return _render_winners(lww_cell(spark.table(sink)))
 
 
@@ -2898,20 +2909,15 @@ def streaming_flush_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     register(spark)
     src = _stage_cell_stream(spark, sf_dir)
     cells = derived_cells(spark, sf_dir)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def build(out: str) -> None:
         import os
 
         stream = (spark.readStream.schema(cells.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        q = flush_stream_to_sstables(
+        _drain_stream(spark, lambda: flush_stream_to_sstables(
             stream, out, os.path.join(out, "_checkpoint"),
-            compressed=True)
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+            compressed=True))
 
     tag = "sstable_flush_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     out = _idempotent_tmpdir(tag, build)
@@ -5200,19 +5206,14 @@ def streaming_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _stage_cell_stream(spark, sf_dir)
     cells = derived_cells(spark, sf_dir)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def build(out: str) -> None:
         table_dir = os.path.join(out, "winners")
         stream = (spark.readStream.schema(cells.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        q = upsert_stream_to_bucketed(
+        _drain_stream(spark, lambda: upsert_stream_to_bucketed(
             stream, table_dir, os.path.join(out, "_checkpoint"),
-            n_buckets=8)
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+            n_buckets=8))
 
     tag = ("stream_upsert_"
            + hashlib.md5(sf_dir.encode()).hexdigest()[:10])
@@ -6955,16 +6956,11 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix=f"hllstream_{uuid.uuid4().hex[:6]}_")
     store, ckpt = os.path.join(work, "store"), os.path.join(work, "ckpt")
     os.makedirs(store)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     stream = (spark.readStream.schema(events.schema)
               .option("maxFilesPerTrigger", "1")
               .parquet(os.path.join(src, "chunk*")))
-    q = hll_stream_to_registers(stream, "event_id", store, ckpt,
-                                p=_HLL_P)
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    _drain_stream(spark, lambda: hll_stream_to_registers(
+        stream, "event_id", store, ckpt, p=_HLL_P))
     regs = read_stored_registers(spark, store, p=_HLL_P)
     est = hll_estimate(regs, p=_HLL_P)
     exact = events.where(F.col("event_id").isNotNull()).agg(
@@ -7047,17 +7043,12 @@ def streaming_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix=f"cmsstream_{uuid.uuid4().hex[:6]}_")
     store, ckpt = os.path.join(work, "store"), os.path.join(work, "ckpt")
     os.makedirs(store)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     stream = (spark.readStream.schema(events.schema)
               .option("maxFilesPerTrigger", "1")
               .parquet(os.path.join(src, "chunk*")))
-    q = cms_stream_to_store(stream, store, ckpt,
-                            token_col="event_type",
-                            depth=_SCMS_D, width=_SCMS_W)
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    _drain_stream(spark, lambda: cms_stream_to_store(
+        stream, store, ckpt, token_col="event_type",
+        depth=_SCMS_D, width=_SCMS_W))
     cells, _last = read_stored_cms(spark, store,
                                    depth=_SCMS_D, width=_SCMS_W)
     types = (events.where(F.col("event_type").isNotNull())
@@ -8057,7 +8048,6 @@ def streaming_scd2_history(spark: SparkSession,
                        .alias("value_c"),
                       (us * 1000).cast("long").alias("ts"),
                       us.alias("_us")))
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def build(out: str) -> None:
         b = feed.agg(F.min("_us").alias("lo"),
@@ -8080,13 +8070,9 @@ def streaming_scd2_history(spark: SparkSession,
                           "value_c long, ts long")
                   .option("maxFilesPerTrigger", "1")
                   .parquet(os.path.join(src, "chunk*")))
-        q = upsert_stream_to_scd2(stream, store,
-                                  os.path.join(out, "ckpt"),
-                                  ["user_id"], ts_col="ts")
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        _drain_stream(spark, lambda: upsert_stream_to_scd2(
+            stream, store, os.path.join(out, "ckpt"), ["user_id"],
+            ts_col="ts"))
 
     tag = ("scd2_stream2_"
            + hashlib.md5(sf_dir.encode()).hexdigest()[:10])
@@ -8128,20 +8114,14 @@ def streaming_lsm_flush_leveled(spark: SparkSession,
     register(spark)
     src = _stage_cell_stream(spark, sf_dir)
     cells = derived_cells(spark, sf_dir)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def build(out: str) -> None:
         tree = os.path.join(out, "tree")
         os.makedirs(tree)
         stream = (spark.readStream.schema(cells.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        q = flush_stream_to_leveled(stream, tree,
-                                    os.path.join(out, "ckpt"),
-                                    l0_threshold=3)
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        _drain_stream(spark, lambda: flush_stream_to_leveled(
+            stream, tree, os.path.join(out, "ckpt"), l0_threshold=3))
 
     tag = ("lsm_flush_"
            + hashlib.md5(sf_dir.encode()).hexdigest()[:10])
@@ -8316,7 +8296,6 @@ def streaming_attribution_join(spark: SparkSession,
 
     src = _stage_event_stream(spark, sf_dir)
     events = load(spark, sf_dir, "events")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def build(out: str) -> None:
         def side(ev_type, id_name):
@@ -8332,14 +8311,11 @@ def streaming_attribution_join(spark: SparkSession,
                           side("view", "view_id"),
                           ["user_id"], max_delay="24 hours",
                           watermark="35 days")
-        q = (j.writeStream.format("parquet")
-              .option("path", os.path.join(out, "pairs"))
-              .option("checkpointLocation", os.path.join(out, "ckpt"))
-              .trigger(availableNow=True).start())
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        _drain_stream(spark, lambda: (
+            j.writeStream.format("parquet")
+            .option("path", os.path.join(out, "pairs"))
+            .option("checkpointLocation", os.path.join(out, "ckpt"))
+            .trigger(availableNow=True).start()))
 
     tag = ("attrib_join_"
            + hashlib.md5(sf_dir.encode()).hexdigest()[:10])
@@ -9289,7 +9265,6 @@ def streaming_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
                       & F.col("value").isNotNull())
               .select("user_id", us.alias("ts_us"), "value",
                       "event_id"))
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def build(out: str) -> None:
         b = feed.agg(F.min("ts_us").alias("lo"),
@@ -9312,15 +9287,12 @@ def streaming_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .parquet(os.path.join(src, "chunk*")))
         smoothed = ewma_stream(stream, "ts_us", "user_id", "value",
                                shift=3, tie_cols=("event_id",))
-        q = (smoothed.writeStream.format("parquet")
-             .option("path", os.path.join(out, "sink"))
-             .option("checkpointLocation", os.path.join(out, "ckpt"))
-             .outputMode("append")
-             .trigger(availableNow=True).start())
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        _drain_stream(spark, lambda: (
+            smoothed.writeStream.format("parquet")
+            .option("path", os.path.join(out, "sink"))
+            .option("checkpointLocation", os.path.join(out, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True).start()))
 
     tag = ("ewma_stream_"
            + hashlib.md5(sf_dir.encode()).hexdigest()[:10])
@@ -9671,7 +9643,6 @@ def txlog_append_stream_replay(spark: SparkSession,
     rows = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         (F.col("o_orderkey") % 7).cast("long").alias("v"))
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def build(out: str) -> None:
         src = os.path.join(out, "src")
@@ -9681,11 +9652,10 @@ def txlog_append_stream_replay(spark: SparkSession,
         def drain(ckpt: str) -> None:
             stream = (spark.readStream.schema("k long, v long")
                       .option("maxFilesPerTrigger", "1").parquet(src))
-            q = append_stream_to_txlog(
+            _drain_stream(spark, lambda: append_stream_to_txlog(
                 stream, table, os.path.join(out, ckpt),
                 bucket_by=("k",), n_buckets=8, sort_by=("k",),
-                txn_app="driver-append")
-            q.awaitTermination()
+                txn_app="driver-append"))
 
         drain("ckpt1")
         v1 = txlog_snapshot(table)["version"]
@@ -9775,6 +9745,8 @@ def stats_ols_degenerate(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: SMALL (<=10) or the rotation loses its staleness bound.
 _ROUND_PRIORITY: tuple[str, ...] = (
     "flagship_lww_merge",        # permanent regression anchor
+    "streaming_lww_flush",       # stream run restores the session's
+                                 # shuffle width
     # An entry leaves once its fresh driver pass is green in the
     # ledger: every entry kept crowds one stale rotation row out of the
     # window, and the staleness guard fails when a stale row is left out.

@@ -70,7 +70,6 @@ from __future__ import annotations
 
 import os
 import struct
-import zlib
 from typing import Iterator
 
 from . import fs
@@ -80,10 +79,11 @@ from .codec import (
     STATE_EXPIRING,
     STATE_NORMAL,
     Cell,
-    ChunkedDecompressingReader,
     CompressionInfo,
     Row,
-    _compress,
+    _open_reader,
+    _write_chunks,
+    companion,
 )
 
 DELETION_MASK = 0x01
@@ -195,21 +195,6 @@ def read_cassandra_compression_info(path: str) -> CompressionInfo:
     return CompressionInfo(algo, chunk_length, data_length, offsets)
 
 
-def _open_reader(data_path: str):
-    """(reader with seek/tell/read over the UNCOMPRESSED stream,
-    uncompressed length, file handle to close)."""
-    f = fs.open_input(data_path)
-    ci_path = data_path.replace("-Data.db", "-CompressionInfo.db")
-    if fs.exists(ci_path):
-        info = read_cassandra_compression_info(ci_path)
-        return (ChunkedDecompressingReader(f, info, checksum="adler32"),
-                info.uncompressed_length, f)
-    f.seek(0, os.SEEK_END)
-    size = f.tell()
-    f.seek(0)
-    return f, size, f
-
-
 def _checked_size(n: int, what: str, bound: int) -> int:
     """Validate an i32 size field read from the file.  A corrupt or
     adversarial negative value would otherwise seek BACKWARDS and loop
@@ -239,8 +224,8 @@ def read_cassandra_rows(data_path: str, start: int = 0,
     if on_unsupported not in ("error", "skip"):
         raise ValueError(f"on_unsupported must be error|skip, "
                          f"got {on_unsupported!r}")
-    f, total, fh = _open_reader(data_path)
-    try:
+    with _open_reader(data_path, read_cassandra_compression_info,
+                      "adler32") as (f, total):
         if end is None:
             end = total
         f.seek(start)
@@ -315,8 +300,6 @@ def read_cassandra_rows(data_path: str, start: int = 0,
                     cells.append(Cell(name=name, state=STATE_NORMAL,
                                       data=value, timestamp=timestamp))
             yield Row(key=key, cells=cells)
-    finally:
-        fh.close()
 
 
 def read_cassandra_summary_entries(path: str) -> "Iterator[tuple[bytes, int]]":
@@ -365,15 +348,9 @@ def write_cassandra_compressed(data_path: str, raw: bytes,
     """Fixture/test support: write ``raw`` (a concatenation of
     ``encode_cassandra_row`` outputs) as a chunked 1.x Data.db +
     its real-layout CompressionInfo.db companion (snappy or deflate)."""
-    ci_path = data_path.replace("-Data.db", "-CompressionInfo.db")
-    offsets = []
     with fs.open_output(data_path) as f:
-        for start in range(0, max(len(raw), 1), chunk_length):
-            offsets.append(f.tell())
-            comp = _compress(raw[start:start + chunk_length], algo)
-            f.write(comp)
-            f.write(struct.pack(">I", zlib.adler32(comp) & 0xFFFFFFFF))
-    with fs.open_output(ci_path) as f:
+        offsets = _write_chunks(f, raw, chunk_length, algo, "adler32")
+    with fs.open_output(companion(data_path, "CompressionInfo")) as f:
         name = (b"org.apache.cassandra.io.compress.SnappyCompressor"
                 if algo == "snappy" else
                 b"org.apache.cassandra.io.compress.DeflateCompressor")
@@ -398,7 +375,7 @@ def write_cassandra_family(out_dir: str, name: str, generation: int,
     is the sink body for generation-disjoint distributed writes."""
     fs.makedirs(out_dir)
     data_path = os.path.join(out_dir, f"{name}-{generation}-Data.db")
-    index_path = data_path.replace("-Data.db", "-Index.db")
+    index_path = companion(data_path, "Index")
     raw = bytearray()
     samples = []
     with fs.open_output(index_path) as ix:
@@ -408,13 +385,13 @@ def write_cassandra_family(out_dir: str, name: str, generation: int,
             ix.write(struct.pack(">H", len(row.key)) + row.key
                      + struct.pack(">Q", len(raw)))
             raw += encode_cassandra_row(row)
-    summary_path = data_path.replace("-Data.db", "-Summary.db")
+    summary_path = companion(data_path, "Summary")
     write_cassandra_summary(summary_path, samples)
     files = [data_path, index_path, summary_path]
     if compressed:
         write_cassandra_compressed(data_path, bytes(raw),
                                    chunk_length=chunk_length)
-        files.append(data_path.replace("-Data.db", "-CompressionInfo.db"))
+        files.append(companion(data_path, "CompressionInfo"))
     else:
         with fs.open_output(data_path) as f:
             f.write(bytes(raw))

@@ -1,6 +1,7 @@
 """SSTable binary codec — writer + reader for the Cassandra-1.x-style
 on-disk family ``*-Data.db`` / ``*-Index.db`` / ``*-Summary.db`` /
-``*-CompressionInfo.db``.
+``*-CompressionInfo.db``, and the one owner of the family's layout:
+its component table, companion paths and generation numbers.
 
 The reference consumes these files through the external (unvendored)
 library ``com.tehasdf:scala-sstable-reader`` (reference pom.xml:73-77),
@@ -48,6 +49,7 @@ import os
 import re
 import struct
 import zlib
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import BinaryIO, Iterable, Iterator
 
@@ -92,8 +94,49 @@ _CODE_TO_STATE = dict(enumerate(_STATE_NAMES))
 DEFAULT_CHUNK_LENGTH = 64 * 1024  # Cassandra default chunk_length_kb=64
 DEFAULT_SUMMARY_RATE = 128        # Cassandra default index_interval
 
-_DATA_SUFFIX = "-Data.db"
-_GENERATION_RE = re.compile(r"-(\d+)-Data\.db$")
+#: every component of a generation family ``{name}-{generation}-{C}.db``:
+#: Data.db holds the rows, the rest are its companions.  Real Cassandra
+#: 1.x families also carry Statistics.db, which nothing here parses.
+COMPONENTS = ("Data", "Index", "Summary", "CompressionInfo", "Filter",
+              "Statistics")
+#: a family file's component suffix, also valid as a Java regex
+COMPONENT_SUFFIX = r"-(" + "|".join(COMPONENTS) + r")\.db$"
+_COMPONENT_RE = re.compile(COMPONENT_SUFFIX)
+_GENERATION_RE = re.compile(r"-(\d+)" + COMPONENT_SUFFIX)
+
+
+def component_of(path: str) -> str | None:
+    """The component a family file is (``Index`` for ``t-3-Index.db``),
+    None for any other file."""
+    m = _COMPONENT_RE.search(path)
+    return m.group(1) if m else None
+
+
+def companion(path: str, component: str) -> str:
+    """The same family's ``component`` file: only the trailing
+    component suffix is rewritten (``…/t-3-Data.db`` → ``…/t-3-Index.db``),
+    as the reference derives companions (SSTableDataRecordReader.scala:20,
+    GenerateSSTableDataSplits.scala:218-225)."""
+    if component not in COMPONENTS:
+        raise ValueError(f"unknown component {component!r}")
+    m = _COMPONENT_RE.search(path)
+    if m is None:
+        raise ValueError(f"not an sstable family file: {path}")
+    return f"{path[:m.start()]}-{component}.db"
+
+
+def root_name(path: str) -> str:
+    """The family's root name: ``…/t-3-Data.db`` → ``t-3``."""
+    return _COMPONENT_RE.sub("", os.path.basename(path))
+
+
+def generation_of(data_path: str) -> int:
+    """The generation a family file's name carries, for any component
+    (the name ``data_path`` is kept for callers); 0 when it carries
+    none.  The scan's ``generation`` column and its generation pruning
+    both read this value."""
+    m = _GENERATION_RE.search(os.path.basename(data_path))
+    return int(m.group(1)) if m else 0
 
 
 @dataclass
@@ -179,15 +222,11 @@ class SSTableWriter:
         paths = {}
         raw = self._data.getvalue()
 
-        data_path = self.base + _DATA_SUFFIX
+        data_path = self.base + "-Data.db"
         if self.compressed:
-            chunk_offsets: list[int] = []
             with fs.open_output(data_path) as f:
-                for start in range(0, max(len(raw), 1), self.chunk_length):
-                    chunk_offsets.append(f.tell())
-                    comp = _compress(raw[start:start + self.chunk_length], self.algo)
-                    f.write(comp)
-                    f.write(struct.pack(">I", zlib.crc32(comp) & 0xFFFFFFFF))
+                chunk_offsets = _write_chunks(f, raw, self.chunk_length,
+                                              self.algo)
             ci_path = self.base + "-CompressionInfo.db"
             with fs.open_output(ci_path) as f:
                 algo_b = self.algo.encode("ascii")
@@ -227,6 +266,26 @@ class SSTableWriter:
         write_bloom(filter_path, [k for k, _ in self._index])
         paths["filter"] = filter_path
         return paths
+
+
+#: per-chunk checksum of the compressed bytes: CRC32 here, Adler32 in
+#: real Cassandra 1.x (CompressedSequentialWriter)
+_CHECKSUMS = {"crc32": zlib.crc32, "adler32": zlib.adler32}
+
+
+def _write_chunks(f, raw: bytes, chunk_length: int, algo: str,
+                  checksum: str = "crc32") -> list[int]:
+    """Write ``raw`` as independently compressed ``chunk_length``
+    chunks, each followed by the u32 ``checksum`` of its compressed
+    bytes; returns the chunks' file offsets."""
+    cksum = _CHECKSUMS[checksum]
+    offsets = []
+    for start in range(0, max(len(raw), 1), chunk_length):
+        offsets.append(f.tell())
+        comp = _compress(raw[start:start + chunk_length], algo)
+        f.write(comp)
+        f.write(struct.pack(">I", cksum(comp) & 0xFFFFFFFF))
+    return offsets
 
 
 def write_sstable(directory: str, name: str, rows: Iterable[Row],
@@ -279,11 +338,9 @@ class ChunkedDecompressingReader:
             f.seek(0, os.SEEK_END)
             file_size = f.tell()
         self._file_size = file_size
-        # native chunks carry a CRC32 trailer; real Cassandra 1.x chunks
-        # carry Adler32 (CompressedSequentialWriter)
-        if checksum not in ("crc32", "adler32"):
+        if checksum not in _CHECKSUMS:
             raise ValueError(f"unknown chunk checksum: {checksum}")
-        self._cksum = zlib.crc32 if checksum == "crc32" else zlib.adler32
+        self._cksum = _CHECKSUMS[checksum]
         self._chunk_idx = -1
         self._chunk = b""
         self._chunk_pos = 0  # uncompressed offset of start of current chunk
@@ -326,22 +383,6 @@ class ChunkedDecompressingReader:
         return bytes(out)
 
 
-class _RawReader:
-    """Same read/seek/tell surface over an uncompressed file."""
-
-    def __init__(self, f: BinaryIO) -> None:
-        self._f = f
-
-    def seek(self, off: int) -> None:
-        self._f.seek(off)
-
-    def tell(self) -> int:
-        return self._f.tell()
-
-    def read(self, n: int) -> bytes:
-        return self._f.read(n)
-
-
 def _read_exact(reader, n: int) -> bytes:
     buf = reader.read(n)
     if len(buf) != n:
@@ -373,20 +414,30 @@ def _read_cell(reader, skip_value: bool = False) -> Cell:
                 ttl=ttl, expiration=expiration)
 
 
-def _open_reader(data_path: str):
-    """Return (reader, uncompressed_length).  Auto-detects compression by
-    the presence of the companion CompressionInfo.db, like the
-    reference's ``sstable.compressed`` switch
-    (SSTableDataRecordReader.scala:37-45) but without manual config."""
-    ci_path = data_path.replace(_DATA_SUFFIX, "-CompressionInfo.db")
+@contextmanager
+def _open_reader(data_path: str, read_ci=read_compression_info,
+                 checksum: str = "crc32"):
+    """Open one Data.db as ``(reader, uncompressed_length)`` and close
+    the file on exit.  The reader seeks, tells and reads the
+    uncompressed stream: the chunked decompressor when the companion
+    CompressionInfo.db exists (parsed by ``read_ci``, chunks verified
+    by ``checksum``), else the file itself.  Detecting compression by
+    the companion is the reference's ``sstable.compressed`` switch
+    (SSTableDataRecordReader.scala:37-45) without manual config."""
     f = fs.open_input(data_path)
-    if fs.exists(ci_path):
-        info = read_compression_info(ci_path)
-        return ChunkedDecompressingReader(f, info), info.uncompressed_length
-    f.seek(0, os.SEEK_END)
-    size = f.tell()
-    f.seek(0)
-    return _RawReader(f), size
+    try:
+        ci_path = companion(data_path, "CompressionInfo")
+        if fs.exists(ci_path):
+            info = read_ci(ci_path)
+            yield (ChunkedDecompressingReader(f, info, checksum=checksum),
+                   info.uncompressed_length)
+        else:
+            f.seek(0, os.SEEK_END)
+            size = f.tell()
+            f.seek(0)
+            yield f, size
+    finally:
+        f.close()
 
 
 def read_data_rows(data_path: str, start: int = 0,
@@ -398,22 +449,22 @@ def read_data_rows(data_path: str, start: int = 0,
     like the reference's reader loop (SSTableDataRecordReader.scala:85-97).
     ``skip_values`` seeks past cell value bytes (data → None).
     """
-    reader, total = _open_reader(data_path)
-    if end is None:
-        end = total
-    reader.seek(start)
-    while reader.tell() < end:
-        header = reader.read(2)
-        if not header:
-            break
-        if len(header) != 2:
-            raise EOFError("truncated read: wanted 2, got 1")
-        (key_len,) = struct.unpack(">H", header)
-        key = _read_exact(reader, key_len)
-        (n_cells,) = struct.unpack(">I", _read_exact(reader, 4))
-        cells = [_read_cell(reader, skip_value=skip_values)
-                 for _ in range(n_cells)]
-        yield Row(key=key, cells=cells)
+    with _open_reader(data_path) as (reader, total):
+        if end is None:
+            end = total
+        reader.seek(start)
+        while reader.tell() < end:
+            header = reader.read(2)
+            if not header:
+                break
+            if len(header) != 2:
+                raise EOFError("truncated read: wanted 2, got 1")
+            (key_len,) = struct.unpack(">H", header)
+            key = _read_exact(reader, key_len)
+            (n_cells,) = struct.unpack(">I", _read_exact(reader, 4))
+            cells = [_read_cell(reader, skip_value=skip_values)
+                     for _ in range(n_cells)]
+            yield Row(key=key, cells=cells)
 
 
 #: the six cell fields, in ``datasource.CELL_STRUCT`` order
@@ -525,11 +576,12 @@ def _skip_cells(buf: bytes, p: int, n_cells: int) -> int:
     return p
 
 
-def _walk(data_path: str, start: int, end: int | None, fields: tuple,
-          read_block: int, max_rows: int, max_cells: int):
+def _walk(reader, total: int, data_path: str, start: int, end: int | None,
+          fields: tuple, read_block: int, max_rows: int, max_cells: int):
     """The Data.db byte walker behind both Arrow views.
 
-    Parses the rows of uncompressed byte range [start, end) in one pass
+    Parses the rows of uncompressed byte range [start, end) of an open
+    ``_open_reader`` (``total`` bytes long) in one pass
     with ``unpack_from`` over in-memory ``read_block`` windows (the
     chunked decompressor underneath keeps its one-chunk memory), and
     yields chunks ``(keys, offsets, cols)`` in ``_to_batch``'s shape,
@@ -546,7 +598,6 @@ def _walk(data_path: str, start: int, end: int | None, fields: tuple,
     truncated stream yields the whole rows before the cut, then raises
     ``EOFError``.
     """
-    reader, total = _open_reader(data_path)
     if end is None:
         end = total
     reader.seek(start)
@@ -690,11 +741,12 @@ def read_data_batches(data_path: str, start: int = 0,
     """
     want, fill = _plan_view(False, project, skip_values)
     fields = _arrow_fields()
-    for keys, offsets, cols in _walk(data_path, start, end, fill,
-                                     read_block, rows_per_batch,
-                                     _NO_LIMIT):
-        yield _to_batch(False, want, keys, offsets, cols, generation,
-                        fields)
+    with _open_reader(data_path) as (reader, total):
+        for keys, offsets, cols in _walk(reader, total, data_path, start,
+                                         end, fill, read_block,
+                                         rows_per_batch, _NO_LIMIT):
+            yield _to_batch(False, want, keys, offsets, cols, generation,
+                            fields)
 
 
 def read_cell_batches(data_path: str, start: int = 0,
@@ -711,12 +763,13 @@ def read_cell_batches(data_path: str, start: int = 0,
     ``project``/``skip_values`` as in ``read_data_batches``."""
     want, fill = _plan_view(True, project, skip_values)
     fields = _arrow_fields()
-    for keys, offsets, cols in _walk(data_path, start, end, fill,
-                                     read_block, _NO_LIMIT,
-                                     cells_per_batch):
-        if offsets[-1]:
-            yield _to_batch(True, want, keys, offsets, cols, generation,
-                            fields)
+    with _open_reader(data_path) as (reader, total):
+        for keys, offsets, cols in _walk(reader, total, data_path, start,
+                                         end, fill, read_block, _NO_LIMIT,
+                                         cells_per_batch):
+            if offsets[-1]:
+                yield _to_batch(True, want, keys, offsets, cols, generation,
+                                fields)
 
 
 def rows_to_batches(row_iter: Iterator[Row], generation: int = 0,
@@ -880,7 +933,3 @@ class BloomFilter:
                 return False
         return True
 
-
-def generation_of(data_path: str) -> int:
-    m = _GENERATION_RE.search(os.path.basename(data_path))
-    return int(m.group(1)) if m else 0

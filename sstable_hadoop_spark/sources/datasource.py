@@ -39,6 +39,7 @@ import tempfile
 import zipfile
 import struct
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -65,7 +66,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import codec, fs
+from . import cassandra1x, codec, fs
 
 CELL_STRUCT = StructType([
     StructField("name", BinaryType(), False),
@@ -182,8 +183,12 @@ def _list_files(path: str, suffix: str) -> list[str]:
     a scan racing a write must never read a half-written Data.db (r7;
     same protocol as the WARC sink).  A path that IS an explicitly
     named file is returned as-is: naming a file directly overrides the
-    hidden convention (debugging a staged temp is legitimate)."""
+    hidden convention (debugging a staged temp is legitimate).  A named
+    file of another component fails: no kind reads one component as
+    another."""
     if fs.is_file(path):
+        if not path.endswith(suffix):
+            raise ValueError(f"{path} is not a *{suffix} file")
         return [path]
     root = path.rstrip("/")
 
@@ -193,12 +198,6 @@ def _list_files(path: str, suffix: str) -> list[str]:
                    for part in rel.split("/") if part)
 
     return [f for f in fs.list_files(path, suffix) if not hidden(f)]
-
-
-#: every non-Data member a generation family can carry — used by the
-#: orphan guard below and the sink's stale-orphan sweep
-_COMPANION_SUFFIXES = ("-Index.db", "-Summary.db", "-Filter.db",
-                       "-CompressionInfo.db")
 
 
 def _orphan_companion(path: str) -> bool:
@@ -213,56 +212,128 @@ def _orphan_companion(path: str) -> bool:
     ``Data.db``, so guarding the companion kinds restores the
     invariant "a family is visible to ALL kinds or to NONE"; the
     sink's sweep reaps the orphaned bytes later."""
-    name = os.path.basename(path)
-    for suf in _COMPANION_SUFFIXES:
-        if name.endswith(suf):
-            return not fs.exists(path[:-len(suf)] + "-Data.db")
-    return False
+    return (codec.component_of(path) not in (None, "Data")
+            and not fs.exists(codec.companion(path, "Data")))
 
 
-def _plan_file(data_path: str, max_split: int,
-               ci_reader=None) -> list[RangePartition]:
-    """Split one Data.db at row boundaries taken from Index.db.
+def _cut(path: str, generation: int, total: int, samples,
+         max_split: int) -> list[RangePartition]:
+    """Split ``path``'s byte range [0, total) at row boundaries: walk
+    the ascending ``(key, offset)`` samples and cut wherever the gap
+    since the previous cut reaches ``max_split`` — the gap loop of the
+    reference's G1 job (GenerateSSTableIndexSplits.scala:75-91) with
+    the size target of G2 (GenerateSSTableDataSplits.scala:131-136),
+    run as one metadata pass.  The last split runs to ``total``.
 
-    Performs, in one metadata pass, what the reference's G1/G2 jobs do
-    with two MapReduce rounds: walk offsets, emit a boundary whenever
-    the accumulated gap exceeds the target split size
-    (GenerateSSTableIndexSplits.scala:75-91 for the gap loop;
-    GenerateSSTableDataSplits.scala:131-136 for the size target).
-    Falls back to one partition per file when no Index.db companion
-    exists — the reference's unsplittable whole-file mode
-    (SSTableDataInputFormat.scala:20 ``isSplitable=false``).
-    """
-    gen = codec.generation_of(data_path)
-    index_path = data_path.replace("-Data.db", "-Index.db")
-    ci_path = data_path.replace("-Data.db", "-CompressionInfo.db")
-    if fs.exists(ci_path):
-        # ci_reader parses the companion's format (native by default;
-        # cassandra1x for format=cassandra files)
-        total = (ci_reader or codec.read_compression_info)(
-            ci_path).uncompressed_length
-    else:
-        total = fs.file_size(data_path)
-
-    if not fs.exists(index_path):
-        return [RangePartition(data_path, 0, total, gen)]
-
+    Each split records the exact min/max of its sample keys (correct
+    even if keys are unsorted); a sample with key None leaves its
+    split unbounded, which pruning never narrows."""
     parts: list[RangePartition] = []
     split_start = 0
     lo = hi = None
-    for key, pos in codec.read_index_entries(index_path):
+    for key, pos in samples:
         if pos - split_start >= max_split:
-            parts.append(RangePartition(data_path, split_start, pos, gen,
+            parts.append(RangePartition(path, split_start, pos, generation,
                                         lo, hi))
             split_start = pos
             lo = hi = None
-        # exact min/max per split — correct even if keys are unsorted
-        lo = key if lo is None or key < lo else lo
-        hi = key if hi is None or key > hi else hi
+        if key is not None:
+            lo = key if lo is None or key < lo else lo
+            hi = key if hi is None or key > hi else hi
     if split_start < total or not parts:
-        parts.append(RangePartition(data_path, split_start, total, gen,
+        parts.append(RangePartition(path, split_start, total, generation,
                                     lo, hi))
     return parts
+
+
+def _plan_file(data_path: str, max_split: int,
+               read_ci=codec.read_compression_info
+               ) -> tuple[list[RangePartition], codec.CompressionInfo | None]:
+    """Plan one Data.db: ``(splits, CompressionInfo or None)``.
+
+    Splits cut at the row offsets Index.db records, so every split
+    starts at a row and carries exact key bounds.  Without an Index.db
+    companion the file stays one split — the reference's unsplittable
+    whole-file mode (SSTableDataInputFormat.scala:20
+    ``isSplitable=false``).  ``read_ci`` parses the CompressionInfo.db
+    companion in the file's format."""
+    ci_path = codec.companion(data_path, "CompressionInfo")
+    info = read_ci(ci_path) if fs.exists(ci_path) else None
+    total = (info.uncompressed_length if info is not None
+             else fs.file_size(data_path))
+    index_path = codec.companion(data_path, "Index")
+    samples = (codec.read_index_entries(index_path)
+               if fs.exists(index_path) else ())
+    return (_cut(data_path, codec.generation_of(data_path), total,
+                 samples, max_split), info)
+
+
+def _native_batches(reader: "SSTableReader", p: RangePartition,
+                    flat: bool, skipped: list):
+    read = codec.read_cell_batches if flat else codec.read_data_batches
+    return read(p.path, p.start, p.end, generation=p.generation,
+                skip_values=reader.skip_values, project=reader.project)
+
+
+def _cassandra_batches(reader: "SSTableReader", p: RangePartition,
+                       flat: bool, skipped: list):
+    # the 1.x parser decodes whole rows; the Arrow views only narrow
+    # what crosses into Spark
+    return codec.rows_to_batches(
+        cassandra1x.read_cassandra_rows(
+            p.path, p.start, p.end, on_unsupported=reader.on_unsupported,
+            skipped=skipped),
+        generation=p.generation, skip_values=reader.skip_values,
+        project=reader.project, flat=flat)
+
+
+def _native_family(directory: str, name: str, generation: int, rows,
+                   **layout) -> list[str]:
+    return list(codec.write_sstable(directory, name, rows,
+                                    generation=generation,
+                                    **layout).values())
+
+
+@dataclass(frozen=True)
+class _Format:
+    """What differs between the on-disk formats.  Every format-specific
+    step of the source and the sink dispatches through this record,
+    looked up once from the ``format`` option.  The chunk checksum
+    stays with each format's chunk reader and writer."""
+
+    read_compression_info: Callable
+    read_summary: Callable
+    #: (reader, partition, flat, skipped) → Arrow batches of one split
+    batches: Callable
+    #: (dir, name, generation, key-sorted rows, compressed=,
+    #: chunk_length=, summary_rate=) → written paths
+    write_family: Callable
+    #: whether -Filter.db may prune point lookups: a real Cassandra
+    #: Filter.db is another serialization, and misparsing it must
+    #: never prune
+    bloom_prunes: bool
+
+
+_FORMATS = {
+    # this package's layout (codec.py)
+    "native": _Format(codec.read_compression_info,
+                      codec.read_summary_entries, _native_batches,
+                      _native_family, bloom_prunes=True),
+    # real Apache Cassandra 1.x files, best-effort (cassandra1x.py)
+    "cassandra": _Format(cassandra1x.read_cassandra_compression_info,
+                         cassandra1x.read_cassandra_summary_entries,
+                         _cassandra_batches,
+                         cassandra1x.write_cassandra_family,
+                         bloom_prunes=False),
+}
+
+
+def _format(options: dict) -> _Format:
+    name = options.get("format", "native")
+    if name not in _FORMATS:
+        raise ValueError(f"unknown format {name!r}: expected "
+                         f"{' | '.join(_FORMATS)}")
+    return _FORMATS[name]
 
 
 class SSTableReader(DataSourceReader):
@@ -271,12 +342,7 @@ class SSTableReader(DataSourceReader):
         if not self.path:
             raise ValueError("sstable source requires a path")
         self.kind = options.get("kind", "data")
-        # format=native (this package's layout, default) | cassandra
-        # (real Apache Cassandra 1.x files, best-effort; see
-        # sources/cassandra1x.py for the parsed public layout)
-        self.fmt = options.get("format", "native")
-        if self.fmt not in ("native", "cassandra"):
-            raise ValueError(f"unknown format: {self.fmt}")
+        self.fmt = _format(options)
         self.max_split = int(options.get("max_split_bytes",
                                          DEFAULT_MAX_SPLIT_BYTES))
         # Spark convention: skip unreadable files instead of failing the
@@ -377,26 +443,13 @@ class SSTableReader(DataSourceReader):
             self._gen_hi = hi
 
     def _gen_admits(self, path: str) -> bool:
-        """File-level generation pruning (exact: generation IS the
-        filename's generation; Spark still re-applies the filter).
-        Works for any component filename (-Data.db, -Index.db, ...);
-        an unparseable name never prunes."""
-        if (self._gen_lo is None and self._gen_hi is None
-                and self._gen_in is None):
-            return True
-        import re as _re
-
-        m = _re.search(r"-(\d+)-[A-Za-z]+\.db$", os.path.basename(path))
-        if m is None:
-            return True
-        g = int(m.group(1))
-        if self._gen_lo is not None and g < self._gen_lo:
-            return False
-        if self._gen_hi is not None and g > self._gen_hi:
-            return False
-        if self._gen_in is not None and g not in self._gen_in:
-            return False
-        return True
+        """File-level generation pruning, exact by construction: it
+        tests the same ``codec.generation_of`` value the file's
+        partitions emit (Spark still re-applies the filter)."""
+        g = codec.generation_of(path)
+        return ((self._gen_lo is None or g >= self._gen_lo)
+                and (self._gen_hi is None or g <= self._gen_hi)
+                and (self._gen_in is None or g in self._gen_in))
 
     def _overlaps(self, p: RangePartition) -> bool:
         if p.min_key is None or p.max_key is None:
@@ -412,9 +465,10 @@ class SSTableReader(DataSourceReader):
         bloom filter (-Filter.db) — Cassandra's read-path first check.
         Bloom says 'definitely absent' only; false positives just fall
         through to the range-pruned scan."""
-        if self._key_lo is None or self._key_lo != self._key_hi:
+        if (not self.fmt.bloom_prunes or self._key_lo is None
+                or self._key_lo != self._key_hi):
             return False
-        f_path = data_path.replace("-Data.db", "-Filter.db")
+        f_path = codec.companion(data_path, "Filter")
         if not fs.exists(f_path):
             return False
         try:
@@ -422,27 +476,26 @@ class SSTableReader(DataSourceReader):
         except (IOError, struct.error):
             return False  # unreadable filter → never prune
 
+    def _plan_data(self, data_path: str):
+        """The one Data.db planning call of the batch scan, the stream
+        and the manifest: ``(splits, CompressionInfo or None)`` with
+        the pushed generation, bloom and key-range pruning applied."""
+        if not self._gen_admits(data_path) or \
+                self._bloom_rejects(data_path):
+            return [], None
+        parts, info = _plan_file(data_path, self.max_split,
+                                 self.fmt.read_compression_info)
+        return [p for p in parts if self._overlaps(p)], info
+
     def partitions(self):
         if self.kind in ("data", "cells"):
-            ci_reader = None
-            if self.fmt == "cassandra":
-                from .cassandra1x import read_cassandra_compression_info
-
-                ci_reader = read_cassandra_compression_info
-            parts = []
-            for f in _list_files(self.path, "-Data.db"):
-                if not self._gen_admits(f):
-                    continue
-                # -Filter.db bloom pruning is native-format only (the
-                # real Cassandra Filter.db is a different serialization
-                # — misparsing it must never prune)
-                if self.fmt == "native" and self._bloom_rejects(f):
-                    continue
-                parts.extend(
-                    q for q in _plan_file(f, self.max_split, ci_reader)
-                    if self._overlaps(q))
-            return parts or [RangePartition("", 0, 0, 0)]
-        if self.kind == "index":
+            parts = [p for f in _list_files(self.path, "-Data.db")
+                     for p in self._plan_data(f)[0]]
+        elif self.kind == "index":
+            # an Index.db over max_split_bytes cuts at its Summary.db
+            # samples, which are index record boundaries (the
+            # reference's GenerateSSTableIndexSplits, IndexMapper
+            # :61-96); without a Summary.db it stays one split
             parts = []
             for f in _list_files(self.path, "-Index.db"):
                 # explicitly naming the file overrides the orphan
@@ -450,50 +503,26 @@ class SSTableReader(DataSourceReader):
                 if not self._gen_admits(f) or \
                         (f != self.path and _orphan_companion(f)):
                     continue
-                parts.extend(self._plan_index_file(f))
-            return parts or [RangePartition("", 0, 0, 0)]
-        if self.kind == "summary":
-            return [RangePartition(f, 0, fs.file_size(f),
-                                   codec.generation_of(
-                                       f.replace("-Summary.db", "-Data.db")))
-                    for f in _list_files(self.path, "-Summary.db")
-                    if f == self.path or not _orphan_companion(f)] \
-                or [RangePartition("", 0, 0, 0)]
-        if self.kind == "manifest":
+                size = fs.file_size(f)
+                summary = codec.companion(f, "Summary")
+                samples = ()
+                if size > self.max_split and fs.is_file(summary):
+                    samples = ((None, off) for _key, off in
+                               self.fmt.read_summary(summary))
+                parts.extend(_cut(f, codec.generation_of(f), size, samples,
+                                  self.max_split))
+        elif self.kind == "summary":
+            parts = [RangePartition(f, 0, fs.file_size(f),
+                                    codec.generation_of(f))
+                     for f in _list_files(self.path, "-Summary.db")
+                     if f == self.path or not _orphan_companion(f)]
+        elif self.kind == "manifest":
             # planned-split view; one partition listing all files is fine
             # (manifest rows are tiny metadata).
             return [RangePartition(self.path, 0, 0, 0)]
-        raise ValueError(f"unknown kind: {self.kind}")
-
-    def _plan_index_file(self, f: str) -> list[RangePartition]:
-        """Plan byte-range splits of one Index.db.  A file over
-        ``max_split_bytes`` is split at Summary.db sample offsets —
-        exactly the reference's GenerateSSTableIndexSplits job
-        (IndexMapper, GenerateSSTableIndexSplits.scala:61-96: walk the
-        summary; every time the gap since the previous cut exceeds
-        max_split, emit (prevPos, len); final remainder to EOF).
-        Summary offsets are Index.db record boundaries, so each split
-        parses cleanly.  Without a Summary.db companion the file stays
-        one split (index records are var-length; mid-file offsets are
-        not safe cut points)."""
-        gen = codec.generation_of(f.replace("-Index.db", "-Data.db"))
-        size = fs.file_size(f)
-        summary_path = f.replace("-Index.db", "-Summary.db")
-        if size <= self.max_split or not fs.is_file(summary_path):
-            return [RangePartition(f, 0, size, gen)]
-        if self.fmt == "cassandra":
-            from .cassandra1x import read_cassandra_summary_entries \
-                as _read_summary
         else:
-            _read_summary = codec.read_summary_entries
-        parts, prev = [], 0
-        for _key, off in _read_summary(summary_path):
-            if off - prev > self.max_split:
-                parts.append(RangePartition(f, prev, off, gen))
-                prev = off
-        if size - prev > 0 or not parts:
-            parts.append(RangePartition(f, prev, size, gen))
-        return parts
+            raise ValueError(f"unknown kind: {self.kind}")
+        return parts or [RangePartition("", 0, 0, 0)]
 
     @staticmethod
     def _log_skipped(partition: RangePartition, skipped: list) -> None:
@@ -548,25 +577,8 @@ class SSTableReader(DataSourceReader):
             # one per-split path for both formats, batch and streaming:
             # Arrow batches, nested (data) or one record per cell
             skipped = [0]
-            flat = self.kind == "cells"
-            if self.fmt == "cassandra":
-                from . import cassandra1x
-
-                src = codec.rows_to_batches(
-                    cassandra1x.read_cassandra_rows(
-                        partition.path, partition.start, partition.end,
-                        on_unsupported=self.on_unsupported,
-                        skipped=skipped),
-                    generation=partition.generation,
-                    skip_values=self.skip_values, project=self.project,
-                    flat=flat)
-            else:
-                read = codec.read_cell_batches if flat \
-                    else codec.read_data_batches
-                src = read(partition.path, partition.start, partition.end,
-                           generation=partition.generation,
-                           skip_values=self.skip_values,
-                           project=self.project)
+            src = self.fmt.batches(self, partition, self.kind == "cells",
+                                   skipped)
             yield from self._guarded(partition, src, skipped)
         elif self.kind == "index":
             yield from self._project_tuples("index", (
@@ -574,33 +586,20 @@ class SSTableReader(DataSourceReader):
                 for key, pos in codec.read_index_entries(
                     partition.path, partition.start, partition.end)))
         elif self.kind == "summary":
-            if self.fmt == "cassandra":
-                from .cassandra1x import read_cassandra_summary_entries \
-                    as _read_summary
-            else:
-                _read_summary = codec.read_summary_entries
             yield from self._project_tuples("summary", (
                 (key, off, partition.generation)
-                for key, off in _read_summary(partition.path)))
+                for key, off in self.fmt.read_summary(partition.path)))
         elif self.kind == "manifest":
             yield from self._project_tuples(
                 "manifest", self._manifest_rows(partition))
 
     def _manifest_rows(self, partition: RangePartition):
-        if self.fmt == "cassandra":
-            from .cassandra1x import read_cassandra_compression_info \
-                as _read_ci
-        else:
-            _read_ci = codec.read_compression_info
         for f in _list_files(partition.path, "-Data.db"):
             gen = codec.generation_of(f)
-            ci_path = f.replace("-Data.db", "-CompressionInfo.db")
-            ci = (_read_ci(ci_path)
-                  if fs.exists(ci_path) else None)
+            parts, ci = self._plan_data(f)
             csize = fs.file_size(f)
-            base = os.path.basename(f).replace("-Data.db", "")
-            for i, p in enumerate(_plan_file(f, self.max_split,
-                                             _read_ci)):
+            base = codec.root_name(f)
+            for i, p in enumerate(parts):
                 if ci is None or not ci.chunk_offsets:
                     # uncompressed: file space == uncompressed space
                     yield (base, i, p.start, p.end - p.start,
@@ -801,11 +800,6 @@ class SSTableStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         self._adopt(start)
         self._adopt(end)
-        ci_reader = None
-        if self._splits.fmt == "cassandra":
-            from .cassandra1x import read_cassandra_compression_info
-
-            ci_reader = read_cassandra_compression_info
         stamped = self._stamped()
         new = sorted(self._covered(end, stamped)
                      - self._covered(start, stamped))
@@ -813,8 +807,7 @@ class SSTableStreamReader(DataSourceStreamReader):
         for base in new:
             full = os.path.join(self.path, base)
             if fs.exists(full):
-                parts.extend(_plan_file(full, self._splits.max_split,
-                                        ci_reader))
+                parts.extend(self._splits._plan_data(full)[0])
         # Spark requires ≥1 partition; empty batch → one no-op marker
         return parts or [RangePartition("", 0, 0, 0)]
 
@@ -898,11 +891,7 @@ class SSTableWriteTask(DataSourceArrowWriter):
         self.compressed = str(options.get("compressed", "false")).lower() == "true"
         self.task_suffix = str(options.get("task_suffix",
                                            "true")).lower() == "true"
-        self.format = options.get("format", "native")
-        if self.format not in ("native", "cassandra"):
-            raise ValueError(
-                f"sstable sink format must be native|cassandra, "
-                f"got {self.format!r}")
+        self.fmt = _format(options)
         self.chunk_length = int(options.get("chunk_length",
                                             codec.DEFAULT_CHUNK_LENGTH))
         self.summary_rate = int(options.get("summary_rate",
@@ -938,26 +927,14 @@ class SSTableWriteTask(DataSourceArrowWriter):
                         f"{target} already exists — generation {gen} "
                         f"spans multiple tasks; repartition the input "
                         f"by generation first")
-            if self.format == "cassandra":
-                from . import cassandra1x
-
-                written = cassandra1x.write_cassandra_family(
-                    self.path, tmp_stem, gen, rows,
-                    compressed=self.compressed,
-                    chunk_length=self.chunk_length,
-                    summary_rate=self.summary_rate)
-            else:
-                writer = codec.SSTableWriter(
-                    self.path, tmp_stem, generation=gen,
-                    compressed=self.compressed,
-                    chunk_length=self.chunk_length,
-                    summary_rate=self.summary_rate)
-                for r in rows:
-                    writer.write_row(r)
-                written = list(writer.close().values())
+            written = self.fmt.write_family(
+                self.path, tmp_stem, gen, rows,
+                compressed=self.compressed,
+                chunk_length=self.chunk_length,
+                summary_rate=self.summary_rate)
             # publish order inside commit(): companions first, Data.db
             # last — a family without Data.db is invisible to scans
-            written.sort(key=lambda f: f.endswith("-Data.db"))
+            written.sort(key=lambda f: codec.component_of(f) == "Data")
             for tmp in written:
                 d, base = os.path.split(tmp)
                 files.append((tmp, os.path.join(d, base[len(prefix):])))
@@ -1095,20 +1072,14 @@ class SSTableDataSource(DataSource):
                 "sstable sink requires (key, columns, generation) — got "
                 f"{sorted(names)}")
         if overwrite:
-            import os.path as _osp
-            import re as _re
-
             path = self.options.get("path", "")
             for f in fs.list_files(path, ".db"):
-                # TOP-LEVEL files only: overwrite replaces the table at
-                # this path, never sstables in nested subdirectories
-                # (fs.list_files is recursive; ADVICE r4 — preserve the
-                # original glob(path/*.db) delete scope)
-                if _osp.dirname(f.rstrip("/")) != path.rstrip("/"):
-                    continue
-                if _re.search(
-                        r"-(Data|Index|Summary|CompressionInfo|Filter)\.db$",
-                        f):
+                # TOP-LEVEL family files only: overwrite replaces the
+                # table at this path, never sstables in nested
+                # subdirectories (fs.list_files is recursive; ADVICE
+                # r4 — preserve the original glob(path/*.db) scope)
+                if (os.path.dirname(f.rstrip("/")) == path.rstrip("/")
+                        and codec.component_of(f) is not None):
                     fs.remove(f)
         return SSTableWriteTask(dict(self.options))
 

@@ -21,33 +21,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _flush_batch(batch_df: DataFrame, batch_id: int, out_dir: str,
+                 name: str, compressed: bool) -> None:
+    """Memtable-merge one micro-batch and flush it as a new generation."""
+    from sstable_hadoop_spark.operators import collect_rows, lww_cell
+
+    winners = lww_cell(batch_df)
+    # generation = batch id + 1 (generations are 1-based); newer
+    # batches must win ties, matching arrival order
+    rows = collect_rows(
+        winners.withColumn("generation", F.lit(batch_id + 1).cast("int")),
+        by_generation=True)
+    (rows.write.format("sstable")
+         .option("path", out_dir)
+         .option("name", f"{name}-{batch_id + 1}")
+         .option("compressed", str(compressed).lower())
+         .mode("append").save())
+
+
+def _start_batches(stream: DataFrame, fn, checkpoint_dir: str):
+    """Start ``fn(batch_df, batch_id)`` over every micro-batch of
+    ``stream`` until it has drained (``availableNow``); the caller
+    awaits and stops the query."""
+    return (stream.writeStream
+            .foreachBatch(fn)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
+
+
 def flush_stream_to_sstables(cell_stream: DataFrame, out_dir: str,
                              checkpoint_dir: str, name: str = "flush",
                              compressed: bool = False):
     """Start the flush query (caller awaits/stops it).  ``cell_stream``
     must have the exploded cell schema (key, name, state, data,
     timestamp, ttl, expiration, generation)."""
-    from sstable_hadoop_spark.operators import collect_rows, lww_cell
-
     def flush(batch_df: DataFrame, batch_id: int) -> None:
-        winners = lww_cell(batch_df)
-        # generation = batch id + 1 (generations are 1-based); newer
-        # batches must win ties, matching arrival order
-        rows = collect_rows(
-            winners.withColumn("generation",
-                               F.lit(batch_id + 1).cast("int")),
-            by_generation=True)
-        (rows.write.format("sstable")
-             .option("path", out_dir)
-             .option("name", f"{name}-{batch_id + 1}")
-             .option("compressed", str(compressed).lower())
-             .mode("append").save())
+        _flush_batch(batch_df, batch_id, out_dir, name, compressed)
 
-    return (cell_stream.writeStream
-            .foreachBatch(flush)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(cell_stream, flush, checkpoint_dir)
 
 
 def flush_stream_to_leveled(cell_stream: DataFrame, out_dir: str,
@@ -74,29 +86,15 @@ def flush_stream_to_leveled(cell_stream: DataFrame, out_dir: str,
     batch re-flushes content-identical cells.  The level sidecar is
     advisory — scans never consult it (compaction module contract).
     Single-writer: the stream is the tree's only compactor."""
-    from sstable_hadoop_spark.operators import collect_rows, lww_cell
     from sstable_hadoop_spark.operators.compaction import compact_leveled
 
     def flush(batch_df: DataFrame, batch_id: int) -> None:
-        winners = lww_cell(batch_df)
-        rows = collect_rows(
-            winners.withColumn("generation",
-                               F.lit(batch_id + 1).cast("int")),
-            by_generation=True)
-        (rows.write.format("sstable")
-             .option("path", out_dir)
-             .option("name", f"{name}-{batch_id + 1}")
-             .option("compressed", str(compressed).lower())
-             .mode("append").save())
+        _flush_batch(batch_df, batch_id, out_dir, name, compressed)
         compact_leveled(batch_df.sparkSession, out_dir,
                         sstable_mb=sstable_mb, fanout=fanout,
                         l0_threshold=l0_threshold)
 
-    return (cell_stream.writeStream
-            .foreachBatch(flush)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(cell_stream, flush, checkpoint_dir)
 
 
 def upsert_stream_to_bucketed(cell_stream: DataFrame, table_dir: str,
@@ -159,11 +157,7 @@ def upsert_stream_to_bucketed(cell_stream: DataFrame, table_dir: str,
         finally:
             _release_table_lock(*lease)
 
-    return (cell_stream.writeStream
-            .foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(cell_stream, upsert, checkpoint_dir)
 
 
 def merge_stream_to_txlog(change_stream: DataFrame, table_dir: str,
@@ -237,11 +231,7 @@ def merge_stream_to_txlog(change_stream: DataFrame, table_dir: str,
                         when_matched="delete",
                         when_not_matched="ignore")
 
-    return (change_stream.writeStream
-            .foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(change_stream, fold, checkpoint_dir)
 
 
 def append_stream_to_txlog(stream: DataFrame, table_dir: str,
@@ -299,11 +289,7 @@ def append_stream_to_txlog(stream: DataFrame, table_dir: str,
                      txn=(app, batch_id))
         state["hw"] = batch_id
 
-    return (stream.writeStream
-            .foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(stream, fold, checkpoint_dir)
 
 
 def upsert_stream_to_txlog(cell_stream: DataFrame, table_dir: str,
@@ -339,11 +325,7 @@ def upsert_stream_to_txlog(cell_stream: DataFrame, table_dir: str,
                          n_buckets=n_buckets,
                          sort_by=("key", "name"))
 
-    return (cell_stream.writeStream
-            .foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(cell_stream, upsert, checkpoint_dir)
 
 
 def delete_stream_to_txlog(condition_stream: DataFrame,
@@ -394,8 +376,4 @@ def delete_stream_to_txlog(condition_stream: DataFrame,
                 cond = c if cond is None else (cond | c)
         txlog_delete_rows(spark, table_dir, cond)
 
-    return (condition_stream.writeStream
-            .foreachBatch(erase)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _start_batches(condition_stream, erase, checkpoint_dir)

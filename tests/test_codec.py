@@ -98,7 +98,7 @@ def test_partition_planning_tiles_file(tmp_path):
     for row in rows:
         w.write_row(row)
     paths = w.close()
-    parts = _plan_file(paths["data"], max_split=8 * 1024)
+    parts, _info = _plan_file(paths["data"], max_split=8 * 1024)
     assert len(parts) > 3
     assert parts[0].start == 0
     for a, b in zip(parts, parts[1:]):
@@ -107,6 +107,43 @@ def test_partition_planning_tiles_file(tmp_path):
     for p in parts:
         got.extend(r.key for r in read_data_rows(p.path, p.start, p.end))
     assert got == [r.key for r in rows]
+
+
+@pytest.mark.parametrize("compressed", [False, True])
+def test_read_paths_close_the_data_file(tmp_path, monkeypatch, compressed):
+    """Every Data.db handle a read opens is closed once the read is
+    fully consumed, and when the iterator is abandoned early."""
+    from sstable_hadoop_spark.sources import fs
+
+    paths = codec.write_sstable(
+        str(tmp_path), "h", [Row(key=f"k{i:04d}".encode(),
+                                 cells=[Cell(name=b"n", data=b"v" * 50)])
+                             for i in range(400)],
+        compressed=compressed, chunk_length=1024)
+    opened = []
+    real_open = fs.open_input
+
+    def recording(path):
+        f = real_open(path)
+        if path == paths["data"]:
+            opened.append(f)
+        return f
+
+    monkeypatch.setattr(fs, "open_input", recording)
+    for read in (codec.read_data_batches, codec.read_cell_batches):
+        assert sum(b.num_rows for b in read(paths["data"])) > 0
+        gen = read(paths["data"], rows_per_batch=8) \
+            if read is codec.read_data_batches \
+            else read(paths["data"], cells_per_batch=8)
+        next(gen)
+        gen.close()
+    rows = codec.read_data_rows(paths["data"])
+    assert len(list(rows)) == 400
+    rows = codec.read_data_rows(paths["data"])
+    next(rows)
+    rows.close()
+    assert len(opened) == 6
+    assert all(f.closed for f in opened)
 
 
 def _drain(batches, errors: list) -> list[dict]:

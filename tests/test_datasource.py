@@ -725,3 +725,21 @@ def test_corrupt_file_handling_cells_kind(spark, tmp_path):
         base.load(d).count()
     n = (base.option("ignore_corrupt_files", "true").load(d)).count()
     assert 0 < n < 50
+
+
+def test_named_file_of_another_component_fails_planning(sstable_dir):
+    """A path naming one file is read as that component only: an
+    Index.db plans for ``kind=index`` and fails every other kind
+    instead of being decoded as a Data.db or a Summary.db."""
+    import pytest
+
+    from sstable_hadoop_spark.sources.datasource import SSTableReader
+
+    path = os.path.join(sstable_dir, "ks-cf-1-Index.db")
+    (part,) = SSTableReader({"path": path, "kind": "index"}).partitions()
+    assert (part.path, part.generation) == (path, 1)
+    for kind in ("data", "cells", "summary", "manifest"):
+        reader = SSTableReader({"path": path, "kind": kind})
+        with pytest.raises(ValueError, match="is not a"):
+            for p in reader.partitions():
+                list(reader.read(p))

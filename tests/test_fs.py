@@ -138,7 +138,7 @@ def test_registered_scheme_planner_splits(tmp_path):
         str(root), pafs.LocalFileSystem()))
     try:
         write_sstable("mem2://d", "cf", _rows(), generation=1)
-        parts = _plan_file("mem2://d/cf-1-Data.db", max_split=256)
+        parts, _info = _plan_file("mem2://d/cf-1-Data.db", max_split=256)
         assert len(parts) > 1  # tiny target forces multiple splits
         seen = []
         for p in parts:

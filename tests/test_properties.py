@@ -203,7 +203,7 @@ def test_split_planning_tiles_any_file(tmp_path_factory, row_list,
     for r in row_list:
         w.write_row(r)
     paths = w.close()
-    parts = _plan_file(paths["data"], max_split=max_split)
+    parts, _info = _plan_file(paths["data"], max_split=max_split)
     assert parts[0].start == 0
     for a, b in zip(parts, parts[1:]):
         assert a.end == b.start
@@ -291,7 +291,7 @@ def test_projected_scan_matches_full_any_rows(tmp_path_factory, row_list,
     for r in row_list:
         w.write_row(r)
     paths = w.close()
-    for p in _plan_file(paths["data"], max_split=max_split):
+    for p in _plan_file(paths["data"], max_split=max_split)[0]:
         full = [r for b in read_data_batches(p.path, p.start, p.end)
                 for r in b.to_pylist()]
         keys = [r["key"] for b in read_data_batches(

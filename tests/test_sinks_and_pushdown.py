@@ -99,6 +99,15 @@ def test_companion_path_and_root_name(spark):
     assert got["ci"] == "/a/b/ks-cf-3-CompressionInfo.db"
     assert got["ix"] == "/a/b/ks-cf-3-Index.db"
     assert got["root"] == "ks-cf-3"
+    # every component the family table accepts rewrites, Filter and
+    # Statistics included; only the trailing suffix is touched
+    for comp in ("Filter", "Statistics"):
+        df = spark.createDataFrame([(f"/a/x-Data.db/ks-cf-3-{comp}.db",)],
+                                   "path string")
+        got = df.select(companion_path("path", "Data").alias("d"),
+                        root_name("path").alias("root")).collect()[0]
+        assert got["d"] == "/a/x-Data.db/ks-cf-3-Data.db"
+        assert got["root"] == "ks-cf-3"
 
 
 def test_key_pushdown_prunes_partitions(sstable_dir):

@@ -25,12 +25,12 @@ def test_head_sample_jvm_and_python_paths_sample_identically(spark, tmp_path):
     old = _util._JVM_PROBE_MAX_BYTES
     try:
         _util._JVM_PROBE_MAX_BYTES = 256 * 1024 * 1024  # force JVM path
-        jvm = skew._head_sample(df, ["k", "v"], 100)
+        jvm = skew._head_sample(df, ["k", "v"], 100, _util.plan_shape(df))
         assert "mapInPandas" not in jvm._jdf.queryExecution() \
             .analyzed().toString()
         jvm_rows = sorted((r["k"], r["v"]) for r in jvm.collect())
         _util._JVM_PROBE_MAX_BYTES = 0  # force Python path
-        py = skew._head_sample(df, ["k", "v"], 100)
+        py = skew._head_sample(df, ["k", "v"], 100, _util.plan_shape(df))
         py_rows = sorted((r["k"], r["v"]) for r in py.collect())
     finally:
         _util._JVM_PROBE_MAX_BYTES = old
@@ -44,16 +44,17 @@ def test_head_sample_jvm_path_requires_scan_shape(spark, tmp_path):
     bytes, so a row-expanding plan below (explode) must fall back to
     the early-stopping mapInPandas path; a plain scan keeps the
     codegen path (no Python nodes in the plan)."""
+    from sstable_hadoop_spark.operators._util import plan_shape
     from sstable_hadoop_spark.operators.skew import _head_sample
 
     df = mk_parquet(spark, tmp_path, n=200, name="hs")
-    plain = _head_sample(df, ["k"], 5)
+    plain = _head_sample(df, ["k"], 5, plan_shape(df))
     plan = plain._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInPandas" not in plan
 
     exploded = df.select(F.explode(F.array_repeat(F.col("k"), 3))
                          .alias("k"))
-    ex = _head_sample(exploded, ["k"], 5)
+    ex = _head_sample(exploded, ["k"], 5, plan_shape(exploded))
     plan_ex = ex._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan_ex or "EvalPython" in plan_ex
 
@@ -62,12 +63,13 @@ def test_head_sample_python_map_takes_python_path(spark, tmp_path):
     """A Python map below changes per-partition row positions and
     would run in full under the codegen filter: a tiny input under
     mapInPandas or mapInArrow keeps the early-stopping Python path."""
+    from sstable_hadoop_spark.operators._util import plan_shape
     from sstable_hadoop_spark.operators.skew import _head_sample
 
     df = mk_parquet(spark, tmp_path, n=200, name="pm")
     for mapped in (df.mapInPandas(lambda it: it, df.schema),
                    df.mapInArrow(lambda it: it, df.schema)):
-        sample = _head_sample(mapped, ["k"], 5)
+        sample = _head_sample(mapped, ["k"], 5, plan_shape(mapped))
         plan = sample._jdf.queryExecution().analyzed()
         assert plan.nodeName() == "MapInPandas"  # the early-stopping take
         assert "monotonically_increasing_id" not in plan.toString()
@@ -110,3 +112,26 @@ def test_skew_probe_size_gate(spark, tmp_path):
     assert jobs2 == 0
     assert sorted(map(tuple, j.collect())) == \
         sorted(map(tuple, df.join(right, "k", "inner").collect()))
+
+
+def test_skew_decision_walks_the_plan_once(spark, tmp_path, monkeypatch):
+    """The size gate and the head-sample path choice read one
+    ``plan_shape`` walk: a probing ``detect_group_skew`` and
+    ``skew_join`` each build exactly one shape."""
+    from sstable_hadoop_spark.operators import _util, skew
+
+    calls = []
+    real = _util.plan_shape
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(_util, "plan_shape", counting)
+    monkeypatch.setattr(_util, "_SKEW_MIN_INPUT_BYTES", 0)  # probe runs
+    df = mk_parquet(spark, tmp_path, n=300, name="once")
+    skew.detect_group_skew(df, ["k"])
+    assert len(calls) == 1
+    right = spark.range(5).select(F.col("id").alias("k"))
+    skew.skew_join(df, right, "k", hot_keys=None)
+    assert len(calls) == 2

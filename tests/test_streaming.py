@@ -1313,3 +1313,16 @@ def test_append_stream_to_txlog_exactly_once(spark, tmp_path):
     assert txlog_snapshot(table)["version"] == v_after
     assert sorted(tuple(r) for r in
                   txlog_read(spark, table).collect()) == want
+
+
+def test_streaming_builder_keeps_session_shuffle_width(spark):
+    """A streaming query builder pins the state-store shuffle width for
+    its own stream only: after building ``streaming_lww_flush`` the
+    session's ``spark.sql.shuffle.partitions`` is what it was."""
+    from sstable_hadoop_spark.queries import all_queries
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "32"  # otherwise a leak would not show
+    all_queries()["streaming_lww_flush"](spark, SF)
+    assert spark.conf.get(key) == before
