@@ -47,12 +47,12 @@ _JVM_PROBE_MAX_BYTES = 64 * 1024 * 1024
 #: below this total input size no reducer partition can exceed AQE's
 #: own skew definition (``spark.sql.adaptive.skewJoin.
 #: skewedPartitionThresholdInBytes``, default 256 MB: a partition only
-#: COUNTS as skewed above it), so skew probing is pure overhead and the
-#: detectors answer from file metadata alone, no job.  64 MiB, not 256:
-#: file bytes are COMPRESSED parquet while AQE's threshold measures
-#: shuffle bytes, and dictionary/RLE-encoded columns commonly expand
-#: several-fold at shuffle (results stay exact either way, the gate
-#: trades only probe latency).
+#: COUNTS as skewed above it), so skew probing is pure overhead and
+#: ``skew_join`` finds no hot keys from file metadata alone, no job.
+#: 64 MiB, not 256: file bytes are COMPRESSED parquet while AQE's
+#: threshold measures shuffle bytes, and dictionary/RLE-encoded columns
+#: commonly expand several-fold at shuffle (results stay exact either
+#: way, the gate trades only probe latency).
 _SKEW_MIN_INPUT_BYTES = 64 * 1024 * 1024
 
 #: rows one task needs to amortize its scheduling cost, per per-row

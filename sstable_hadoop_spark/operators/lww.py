@@ -74,48 +74,38 @@ def explode_cells(df: DataFrame) -> DataFrame:
               .select("key", "cell.*", "generation"))
 
 
-def lww_cell(cells: DataFrame, *, skew: str = "never",
-             n_salts: int = 16) -> DataFrame:
+def _argmax(cells: DataFrame, keys: list[str]) -> DataFrame:
+    """The newest cell per ``keys`` group under the LWW total order:
+    one ``max_by`` aggregation, partial below its shuffle."""
+    payload = F.struct(*[F.col(c) for c in CELL_COLS])
+    return (cells
+            .groupBy(*keys)
+            .agg(F.max_by(payload, _order_key()).alias("w"))
+            .select(*keys, *[f"w.{c}" for c in CELL_COLS if c not in keys]))
+
+
+def lww_cell(cells: DataFrame) -> DataFrame:
     """One winning cell per (key, name) across all generations.
 
     Topology identical to the reference's shuffle→HashMap-merge
     (SSTableData.scala:85-95) but with partial aggregation: one
     hash-agg, one shuffle on (key, name).
 
-    ``skew`` handles the Cassandra wide-row pathology (millions of
-    writes to one cell serializing on a single reducer at 100 TB):
+    Hot keys need no special path: ``partial_max_by`` runs below the
+    only Exchange, so a (key, name) group reaches its reducer as at
+    most one candidate per map partition however many cells it holds
+    (the Cassandra wide-row pathology that would serialize the
+    reference's MR reducer).
 
-    - ``"never"`` (default): single hash-agg — right for typical data;
-      map-side partial aggregation already absorbs per-partition
-      duplication.
-    - ``"always"``: two-phase salted merge over ``n_salts`` reducers
-      (``skew.salted_lww_cell``; result-identical, max_by is
-      associative).
-    - ``"auto"``: probe with ``skew.detect_group_skew`` (partition-head
-      sample, one tiny driver collect) and pick the path — the user no
-      longer needs to know the salted variant exists.
+    On a streaming DataFrame the same plan runs as a stateful
+    aggregation: with ``outputMode("update")`` each micro-batch emits
+    the current winner of every (key, name) it touched.
     """
-    if skew not in ("never", "auto", "always"):
-        raise ValueError(f"skew must be never|auto|always, got {skew!r}")
-    if skew == "auto":
-        from .skew import detect_group_skew
-
-        skew = "always" if detect_group_skew(cells, ["key", "name"]) \
-            else "never"
-    if skew == "always":
-        from .skew import salted_lww_cell
-
-        return salted_lww_cell(cells, n_salts=n_salts)
-    payload = F.struct(*[F.col(c) for c in CELL_COLS])
-    return (cells
-            .groupBy("key", "name")
-            .agg(F.max_by(payload, _order_key()).alias("w"))
-            .select("key", "name", "w.state", "w.data", "w.timestamp",
-                    "w.ttl", "w.expiration", "w.generation"))
+    return _argmax(cells, ["key", "name"])
 
 
-def lww_refresh(stored_winners: DataFrame, new_cells: DataFrame, *,
-                skew: str = "never", n_salts: int = 16) -> DataFrame:
+def lww_refresh(stored_winners: DataFrame,
+                new_cells: DataFrame) -> DataFrame:
     """Incremental LWW view maintenance: fold a DELTA (new generations'
     cells) into a previously-materialized winners table without
     re-merging old generations.
@@ -137,19 +127,13 @@ def lww_refresh(stored_winners: DataFrame, new_cells: DataFrame, *,
     cols = ["key", "name", *[c for c in CELL_COLS
                              if c not in ("key", "name")]]
     sw = stored_winners.select(*cols)
-    return lww_cell(sw.unionByName(new_cells.select(*cols)),
-                    skew=skew, n_salts=n_salts)
+    return lww_cell(sw.unionByName(new_cells.select(*cols)))
 
 
 def lww_row(cells: DataFrame) -> DataFrame:
     """The single newest cell of the entire row (coarse merge,
     reference SSTableDataReducer argmax, SSTableData.scala:48-53)."""
-    payload = F.struct(*[F.col(c) for c in CELL_COLS])
-    return (cells
-            .groupBy("key")
-            .agg(F.max_by(payload, _order_key()).alias("w"))
-            .select("key", "w.name", "w.state", "w.data", "w.timestamp",
-                    "w.ttl", "w.expiration", "w.generation"))
+    return _argmax(cells, ["key"])
 
 
 def live_view(cells: DataFrame, as_of_ms: int) -> DataFrame:
@@ -192,8 +176,7 @@ def collect_rows(cells: DataFrame, by_generation: bool = True) -> DataFrame:
             .select(*out_cols))
 
 
-def winner_diff(cells_a: DataFrame, cells_b: DataFrame, *,
-                skew: str = "never") -> DataFrame:
+def winner_diff(cells_a: DataFrame, cells_b: DataFrame) -> DataFrame:
     """Anti-entropy diff between two cell sets (r6): per-cell LWW
     winners of A and B full-outer-joined on (key, name), keeping only
     the cells whose winning version differs — the repair work-list a
@@ -211,9 +194,9 @@ def winner_diff(cells_a: DataFrame, cells_b: DataFrame, *,
     (key, name), map-side partials) feeding a full outer sort-merge
     join on the SAME (key, name) keys — AQE reuses co-partitioning, no
     extra exchange beyond the three unavoidable ones."""
-    wa = lww_cell(cells_a, skew=skew).withColumnsRenamed(
+    wa = lww_cell(cells_a).withColumnsRenamed(
         {c: f"a_{c}" for c in CELL_COLS if c not in ("key", "name")})
-    wb = lww_cell(cells_b, skew=skew).withColumnsRenamed(
+    wb = lww_cell(cells_b).withColumnsRenamed(
         {c: f"b_{c}" for c in CELL_COLS if c not in ("key", "name")})
     j = wa.join(wb, ["key", "name"], "full_outer")
     same = (

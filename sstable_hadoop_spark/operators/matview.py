@@ -45,7 +45,7 @@ MATVIEW_APP = "matview-refresh"
 
 
 #: Below this many journaled base rows a FULL recompute beats the
-#: incremental fold at local[32] (PERF r11 scale_r11h: the
+#: incremental fold at local[32] (PERF.md, r11 matview crossover: the
 #: incremental side is a fixed ~2-4 s of snapshot/diff/commit
 #: machinery, flat in base size, while recompute tracks the base —
 #: crossover ~sf3-5 ≈ 4-7M rows).  Metadata-only signal (the

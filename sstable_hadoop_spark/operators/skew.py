@@ -1,19 +1,20 @@
-"""Skew-mitigation helpers for hot keys at scale.
+"""Hot-key join splitting.
 
-AQE's skew-join splitting handles joins automatically
-(``spark.sql.adaptive.skewJoin.enabled``, on in the session factory),
-but a single hot GROUP BY key still lands on one reducer.  Salted
-two-phase aggregation spreads the hot key over ``n_salts`` reducers,
-then merges the partials — the standard remedy when one row key holds
-millions of cells (a known Cassandra wide-row pathology the reference's
-MR jobs would also serialize on a single reducer).
+A hot GROUP BY key needs no remedy here: the engine's aggregations
+(``lww_cell`` included) run a partial aggregate below their shuffle,
+so a hot group reaches its reducer as at most one row per map
+partition.  A join has no partial step — every row of a hot key meets
+every matching row in one task — and AQE's skew-join split only
+spreads the oversized partition's files.  ``skew_join`` routes the hot
+keys through a broadcast leg instead, finding them with a cheap
+partition-head sample when the caller names none.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import _util
@@ -63,90 +64,6 @@ def _head_sample(df: DataFrame, cols: Sequence[str],
     return proj.mapInPandas(take, proj.schema)
 
 
-def detect_group_skew(df: DataFrame, keys: Sequence[str],
-                      rows_per_partition: int = 1000,
-                      skew_factor: int = 32,
-                      min_hot: int = 100) -> bool:
-    """Cheap pre-flight skew probe for a ``groupBy(keys)``: head-sample
-    each partition, count per key, and flag when the hottest sampled key
-    holds ≥ ``skew_factor``× the mean group size (and at least
-    ``min_hot`` sampled rows, so near-empty samples never trigger).
-
-    One small driver-side collect of a 1-row aggregate; the sample scan
-    touches only the first batch(es) of each partition.  Inputs whose
-    leaf files total ≤ ``_util._SKEW_MIN_INPUT_BYTES`` answer False from
-    metadata alone (r12): skew mitigation exists to keep one reducer
-    from drowning, and below the size a single partition must EXCEED
-    to count as skewed (AQE's 256 MB threshold) the worst case — one
-    reducer handling the whole input — is already cheaper than the
-    probe job itself.  Which path runs never changes results (the
-    salted merge is exact), so the gate trades only probe latency."""
-    shape = _util.plan_shape(df)
-    if _util.tiny_input(shape, _util._SKEW_MIN_INPUT_BYTES):
-        return False
-    row = (_head_sample(df, keys, rows_per_partition, shape)
-           .groupBy(*keys).count()
-           .agg(F.max("count").alias("mx"), F.sum("count").alias("n"),
-                F.count(F.lit(1)).alias("g"))
-           .collect()[0])
-    if not row["g"]:
-        return False
-    mean = row["n"] / row["g"]
-    return row["mx"] >= min_hot and row["mx"] >= skew_factor * mean
-
-
-def salted_agg(df: DataFrame, keys: Sequence[str],
-               aggs: dict[str, tuple[str, str]],
-               n_salts: int = 16) -> DataFrame:
-    """Two-phase salted aggregation for algebraic aggregates.
-
-    ``aggs`` maps output column → (input column, fn) with fn one of
-    ``sum | count | min | max``.  Phase 1 aggregates on
-    (keys + salt) — the hot key spreads over ``n_salts`` reducers —
-    phase 2 merges partials on the true keys (count partials re-merge
-    with sum).
-
-    >>> salted_agg(cells, ["key"], {"n": ("*", "count"),
-    ...                             "max_ts": ("timestamp", "max")})
-    """
-    merge_fn = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
-    salt = (F.abs(F.hash(F.monotonically_increasing_id())) % n_salts) \
-        .alias("_salt")
-    phase1_aggs = []
-    for out, (col, fn) in aggs.items():
-        c = F.lit(1) if col == "*" else F.col(col)
-        phase1_aggs.append(getattr(F, "count" if fn == "count" else fn)(c)
-                           .alias(f"_p_{out}"))
-    phase1 = (df.withColumn("_salt", salt)
-                .groupBy(*keys, "_salt")
-                .agg(*phase1_aggs))
-    phase2_aggs = [getattr(F, merge_fn[fn])(F.col(f"_p_{out}")).alias(out)
-                   for out, (_col, fn) in aggs.items()]
-    return phase1.groupBy(*keys).agg(*phase2_aggs)
-
-
-def salted_lww_cell(cells: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Per-cell LWW for pathologically hot row keys: phase 1 picks a
-    local winner per (key, name, salt); phase 2 merges the ≤n_salts
-    survivors per (key, name).  Same result as ``lww_cell`` (max_by is
-    associative), bounded reducer load."""
-    from .lww import CELL_COLS, _order_key
-
-    payload = F.struct(*[F.col(c) for c in CELL_COLS])
-    salt = (F.abs(F.hash(F.monotonically_increasing_id())) % n_salts)
-    local = (cells.withColumn("_salt", salt)
-             .groupBy("key", "name", "_salt")
-             .agg(F.max_by(payload, _order_key()).alias("w"))
-             .select("key", "name", "w.state", "w.data", "w.timestamp",
-                     "w.ttl", "w.expiration", "w.generation"))
-    return (local
-            .groupBy("key", "name")
-            .agg(F.max_by(F.struct(*[F.col(c) for c in CELL_COLS]),
-                          _order_key()).alias("w"))
-            .select("key", "name", "w.state", "w.data", "w.timestamp",
-                    "w.ttl", "w.expiration", "w.generation"))
-
-
 def skew_join(left: DataFrame, right: DataFrame, on: str,
               how: str = "inner",
               hot_keys: Sequence | None = None,
@@ -166,7 +83,7 @@ def skew_join(left: DataFrame, right: DataFrame, on: str,
     ``hot_keys``: explicit hot key values (deterministic, the
     oracle-checkable path).  When None, keys claiming more than
     ``hot_fraction_milli`` per-mille of a head-sample
-    (:func:`detect_group_skew`'s probe) are taken — detection reads
+    (:func:`_head_sample`) are taken — detection reads
     only the first Arrow batches of each partition, O(partitions) at
     any scale; which leg a key takes NEVER changes the result, so a
     detection miss costs speed, not correctness.

@@ -2860,15 +2860,13 @@ QUALIFY row_number() OVER (PARTITION BY key_str, name_str
 def streaming_lww_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming LWW under the oracle: cells arrive one
     generation per micro-batch (file stream, ``maxFilesPerTrigger=1``,
-    ``availableNow`` flush); ``applyInPandasWithState`` folds each batch
-    into per-key state (streaming/lww_stream.py) and emits changed
-    winners.  Winners only ever improve under the LWW total order, so
-    the max-order emission per (key, name) — reduced with the batch
-    ``lww_cell`` operator over the memory-sink emissions — must equal
-    the batch winners exactly."""
+    ``availableNow`` flush); ``lww_cell`` over the stream runs as a
+    stateful aggregation and, in update mode, emits the changed
+    winners of each batch.  Winners only ever improve under the LWW
+    total order, so the max-order emission per (key, name) — reduced
+    with the batch ``lww_cell`` over the memory-sink emissions — must
+    equal the batch winners exactly."""
     import uuid
-
-    from sstable_hadoop_spark.streaming import streaming_lww_cells
 
     src = _stage_cell_stream(spark, sf_dir)
     cells = derived_cells(spark, sf_dir)
@@ -2876,7 +2874,7 @@ def streaming_lww_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
               .option("maxFilesPerTrigger", "1").parquet(src))
     sink = f"lww_flush_{uuid.uuid4().hex[:8]}"
     _drain_stream(spark, lambda: (
-        streaming_lww_cells(stream)
+        lww_cell(stream)
         .writeStream.format("memory").queryName(sink)
         .outputMode("update").trigger(availableNow=True).start()))
     return _render_winners(lww_cell(spark.table(sink)))
@@ -2942,21 +2940,18 @@ QUALIFY row_number() OVER (PARTITION BY key_str, name_str
 def lww_skewed_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key LWW under the oracle: ~40% of all cells are remapped onto
     one row key (the Cassandra wide-row pathology), then merged with
-    ``lww_cell(skew="auto")`` — the partition-head skew probe
-    (operators/skew.py detect_group_skew) decides between the plain
-    hash-agg and the two-phase salted merge; either path must equal the
-    SQL winners exactly.  (r12: inputs below AQE's skewed-partition
-    threshold short-circuit the probe from file metadata — no key can
-    flood a reducer there — so at driver SF this runs the plain path
-    with zero probe jobs; the probe+salted machinery is size-gated,
-    not removed, and stays pinned by the operator tests.)"""
+    the plain ``lww_cell``, which must equal the SQL winners exactly.
+    Its ``partial_max_by`` runs below the only Exchange, so the hot
+    (key, name) groups reach their reducers as at most one candidate
+    per map partition.  The name is kept because the correctness
+    ledger records it."""
     cells = derived_cells(spark, sf_dir)
     skewed = cells.withColumn(
         "key",
         F.when(F.decode(F.col("key"), "UTF-8").cast("int") % 5 < 2,
                F.encode(F.lit("hot"), "UTF-8"))
          .otherwise(F.col("key")))
-    return _render_winners(lww_cell(skewed, skew="auto"))
+    return _render_winners(lww_cell(skewed))
 
 
 @query("sstable_index_keys", oracle=f"""
@@ -9746,7 +9741,7 @@ def stats_ols_degenerate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ROUND_PRIORITY: tuple[str, ...] = (
     "flagship_lww_merge",        # permanent regression anchor
     "streaming_lww_flush",       # stream run restores the session's
-                                 # shuffle width
+                                 # shuffle width; lww_cell over the stream
     # An entry leaves once its fresh driver pass is green in the
     # ledger: every entry kept crowds one stale rotation row out of the
     # window, and the staleness guard fails when a stale row is left out.

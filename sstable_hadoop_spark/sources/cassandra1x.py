@@ -314,14 +314,15 @@ def read_cassandra_summary_entries(path: str) -> "Iterator[tuple[bytes, int]]":
     ``writeInt`` sample count, then per sample ``writeUTF`` key
     (u16 length + modified-UTF-8 bytes) / ``writeLong`` index offset.
     Keys are returned as UTF-8 bytes to match the engine's binary key
-    model."""
+    model; a key the writer below escaped (non-UTF-8 bytes as lone
+    surrogates, ``surrogateescape``) comes back byte-identical."""
     with fs.open_input(path) as f:
         (count,) = struct.unpack(">i", _read_exact(f, 4))
         if count < 0:
             raise IOError(f"corrupt 1.x Summary.db {path}: "
                           f"negative sample count {count}")
         for _ in range(count):
-            key = _read_java_utf(f).encode("utf-8")
+            key = _read_java_utf(f).encode("utf-8", "surrogateescape")
             (off,) = struct.unpack(">q", _read_exact(f, 8))
             yield key, off
 
@@ -330,13 +331,16 @@ def write_cassandra_summary(path: str,
                             entries: "list[tuple[bytes, int]]") -> None:
     """Fixture/test support: serialize ``(key, index_offset)`` samples
     in the real 1.x ``IndexSummary`` layout parsed above — keys go
-    through Java modified UTF-8 (writeUTF), same as the reader."""
+    through Java modified UTF-8 (writeUTF), same as the reader.  Binary
+    keys that are not UTF-8 decode with ``surrogateescape``: each bad
+    byte becomes a lone surrogate, which modified UTF-8 can carry and
+    the reader turns back into the same byte."""
     entries = list(entries)
     with fs.open_output(path) as f:
         f.write(struct.pack(">i", len(entries)))
         for key, off in entries:
-            s = (key.decode("utf-8") if isinstance(key, bytes)
-                 else str(key))
+            s = (key.decode("utf-8", "surrogateescape")
+                 if isinstance(key, bytes) else str(key))
             kb = _encode_modified_utf8(s)
             f.write(struct.pack(">H", len(kb)) + kb)
             f.write(struct.pack(">q", off))

@@ -53,35 +53,22 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import BinaryIO, Iterable, Iterator
 
+import pyarrow as _pa  # ships snappy/lz4/zstd codecs; no python-snappy needed
+
 from . import fs
 
-try:  # pyarrow ships snappy/lz4/zstd codecs; no python-snappy needed
-    import pyarrow as _pa
 
-    def _compress(data: bytes, algo: str) -> bytes:
-        if algo == "deflate":  # zlib stream (Cassandra DeflateCompressor)
-            return zlib.compress(data)
-        return _pa.compress(data, codec=algo, asbytes=True)
-
-    def _decompress(data: bytes, algo: str, uncompressed_size: int) -> bytes:
-        if algo == "deflate":
-            return zlib.decompress(data)
-        return _pa.decompress(data, decompressed_size=uncompressed_size,
-                              codec=algo, asbytes=True)
-
-    _HAVE_CODECS = True
-except ImportError:  # pragma: no cover - pyarrow is a hard dep of pyspark
-    _HAVE_CODECS = False
-
-    def _compress(data: bytes, algo: str) -> bytes:
-        if algo not in ("zlib", "deflate"):
-            raise RuntimeError("pyarrow unavailable; only zlib supported")
+def _compress(data: bytes, algo: str) -> bytes:
+    if algo == "deflate":  # zlib stream (Cassandra DeflateCompressor)
         return zlib.compress(data)
+    return _pa.compress(data, codec=algo, asbytes=True)
 
-    def _decompress(data: bytes, algo: str, uncompressed_size: int) -> bytes:
-        if algo not in ("zlib", "deflate"):
-            raise RuntimeError("pyarrow unavailable; only zlib supported")
+
+def _decompress(data: bytes, algo: str, uncompressed_size: int) -> bytes:
+    if algo == "deflate":
         return zlib.decompress(data)
+    return _pa.decompress(data, decompressed_size=uncompressed_size,
+                          codec=algo, asbytes=True)
 
 
 STATE_NORMAL = "NORMAL"

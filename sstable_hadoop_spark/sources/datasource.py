@@ -626,9 +626,10 @@ class SSTableReader(DataSourceReader):
 class SSTableStreamReader(DataSourceStreamReader):
     """Streaming scan: each micro-batch reads SSTable generation files
     that appeared in the directory since the last offset — the
-    continuous view of the cell model (SURVEY.md §1.3/§2.8).  Feed into
-    ``streaming.streaming_lww_cells`` for a continuously-maintained
-    merged table.
+    continuous view of the cell model (SURVEY.md §1.3/§2.8).  Feed a
+    ``kind=cells`` stream into ``operators.lww_cell`` with
+    ``outputMode("update")`` for a continuously-maintained merged
+    table.
 
     Offsets are a compact ``(mtime_ns, basename)`` high-water mark
     plus a BOUNDED tail of recently-seen basenames — the same shape as

@@ -1,8 +1,6 @@
 from .windows import session_counts, sliding_counts, tumbling_counts
-from .lww_stream import streaming_lww_cells
 from .compaction import flush_stream_to_sstables
 from .dedup import dedup_events_stream
 
 __all__ = ["session_counts", "sliding_counts", "tumbling_counts",
-           "streaming_lww_cells", "flush_stream_to_sstables",
-           "dedup_events_stream"]
+           "flush_stream_to_sstables", "dedup_events_stream"]

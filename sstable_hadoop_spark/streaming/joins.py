@@ -13,8 +13,8 @@ O(stream length).
 The same function runs unchanged on batch DataFrames (Structured
 Streaming's unified model), which makes the batch mode the
 DuckDB-checkable oracle twin of the stream — the house pattern every
-streaming operator here follows (streaming/windows.py, lww_stream.py,
-sketch_stream.py).
+streaming operator here follows (streaming/windows.py,
+sketch_stream.py, and ``lww_cell`` over a stream).
 
 Scale notes (100 TB/day event streams): the join shuffles both sides
 on the key columns once; the range condition is evaluated inside the

@@ -765,6 +765,58 @@ def test_cassandra_sink_roundtrip(spark, tmp_path):
     assert keys == [f"k{i:03d}".encode() for i in range(0, 80, 16)]
 
 
+def test_cassandra_sink_binary_keys_match_native(spark, tmp_path,
+                                                 cell_fixture):
+    """The random-bytes cell fixture (some keys are not UTF-8) written
+    through ``format=cassandra`` reads back the same cells as through
+    the native sink.  Every key is sampled into Summary.db
+    (``summary_rate=1``), whose writeUTF keys must carry the non-UTF-8
+    bytes; expirations are whole seconds because 1.x stores them so."""
+    from sstable_hadoop_spark.sources.cassandra1x import (
+        read_cassandra_summary_entries,
+    )
+    from sstable_hadoop_spark.sources.datasource import register
+
+    register(spark)
+    rows = [(row.key,
+             [(c.name, c.state, c.data, c.timestamp, c.ttl,
+               None if c.expiration is None else c.expiration // 1000 * 1000)
+              for c in row.cells], g)
+            for g, row in cell_fixture]
+    assert any(not _is_utf8(k) for k, _c, _g in rows)
+    schema = ("key binary, columns array<struct<name:binary,state:string,"
+              "data:binary,timestamp:long,ttl:int,expiration:long>>, "
+              "generation int")
+    df = spark.createDataFrame(rows, schema).repartition(2, "generation")
+
+    def roundtrip(fmt):
+        d = str(tmp_path / fmt)
+        (df.write.format("sstable").option("path", d)
+           .option("format", fmt).option("name", "ks-cf")
+           .option("task_suffix", "false").option("summary_rate", "1")
+           .mode("append").save())
+        back = (spark.read.format("sstable").option("format", fmt)
+                .option("kind", "cells").load(d))
+        return d, sorted(tuple(r) for r in back.collect())
+
+    d, cassandra = roundtrip("cassandra")
+    _d, native = roundtrip("native")
+    assert cassandra == native
+    assert len(native) == sum(len(c) for _k, c, _g in rows)
+    sampled = {k for f in os.listdir(d) if f.endswith("-Summary.db")
+               for k, _off in read_cassandra_summary_entries(
+                   os.path.join(d, f))}
+    assert sampled == {k for k, _c, _g in rows}
+
+
+def _is_utf8(b: bytes) -> bool:
+    try:
+        b.decode("utf-8")
+    except UnicodeDecodeError:
+        return False
+    return True
+
+
 def test_sink_task_suffix_collision_guard(spark, tmp_path):
     """task_suffix=false with a generation spanning two tasks must fail
     loudly, not interleave two writers' rows."""

@@ -354,77 +354,169 @@ def test_similarity_ivf_recall_vs_bruteforce(spark):
     assert recall >= 0.3, f"IVF recall too low: {recall}"
 
 
+def _shuffle_write_records(spark, fn):
+    """(fn(), records written to shuffle by the jobs ``fn`` ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"shuffle-records-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    n = 0
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            n += store.lastStageAttempt(sid).shuffleWriteRecords()
+    return out, n
+
+
+def _exchange_and_below(df):
+    """(number of Exchange nodes, simpleStrings of the nodes below the
+    first one) of ``df``'s planned physical plan."""
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    exchanges = [n for n in walk(plan) if n.nodeName() == "Exchange"]
+    below = [n.simpleString(100) for n in walk(exchanges[0])][1:] \
+        if exchanges else []
+    return len(exchanges), below
+
+
 def test_salted_agg_matches_plain(spark):
-    from sstable_hadoop_spark.operators.skew import salted_agg
+    """A hot GROUP BY key needs no salting for algebraic aggregates:
+    the plan aggregates partially below its single Exchange, so the
+    shuffle carries at most one row per group per map partition, and
+    the result equals a plain Python reference."""
     from sstable_hadoop_spark.queries import load
 
     li = load(spark, SF, "lineitem")
-    plain = {(r["l_returnflag"],): (r["n"], r["s"], r["mx"])
-             for r in li.groupBy("l_returnflag").agg(
-                 F.count(F.lit(1)).alias("n"),
-                 F.round(F.sum("l_quantity"), 4).alias("s"),
-                 F.max("l_extendedprice").alias("mx")).collect()}
-    salted = {(r["l_returnflag"],): (r["n"], round(r["s"], 4), r["mx"])
-              for r in salted_agg(
-                  li, ["l_returnflag"],
-                  {"n": ("*", "count"), "s": ("l_quantity", "sum"),
-                   "mx": ("l_extendedprice", "max")}).collect()}
-    salted = {k: (n, s, mx) for k, (n, s, mx) in salted.items()}
-    for k in plain:
-        pn, ps, pmx = plain[k]
-        sn, ss, smx = salted[k]
-        assert pn == sn and pmx == smx
-        assert abs(ps - ss) < 1e-6
+    agg = li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("l_quantity").alias("s"),
+        F.max("l_extendedprice").alias("mx"))
+    n_ex, below = _exchange_and_below(agg)
+    assert n_ex == 1
+    assert any("partial_sum" in s and "partial_max" in s for s in below)
+
+    rows, shuffled = _shuffle_write_records(spark, agg.collect)
+    src = li.select("l_returnflag", "l_quantity", "l_extendedprice") \
+        .collect()
+    want = {}
+    for flag, qty, price in src:
+        n, s, mx = want.get(flag, (0, 0.0, None))
+        want[flag] = (n + 1, s + qty, price if mx is None else max(mx, price))
+    got = {r["l_returnflag"]: (r["n"], r["s"], r["mx"]) for r in rows}
+    assert got.keys() == want.keys()
+    for k, (n, s, mx) in want.items():
+        assert got[k][0] == n and got[k][2] == mx
+        assert abs(got[k][1] - s) < 1e-6
+    assert shuffled <= len(want) * li.rdd.getNumPartitions() < len(src)
+
+
+def _reference_winners(sstable_dir, key_of):
+    """Per-(key, name) LWW winners decoded with ``read_data_rows``,
+    each row key mapped through ``key_of``: the newest timestamp wins,
+    then DELETED > EXPIRING > NORMAL, then the newer generation, then
+    the larger base64 of the value."""
+    import base64
+
+    from sstable_hadoop_spark.sources import codec
+
+    rank = {"DELETED": 2, "EXPIRING": 1, "NORMAL": 0}
+    best = {}
+    for f in sorted(os.listdir(sstable_dir)):
+        if codec.component_of(f) != "Data":
+            continue
+        gen = codec.generation_of(f)
+        for row in codec.read_data_rows(os.path.join(sstable_dir, f)):
+            for c in row.cells:
+                k = (key_of(row.key), c.name)
+                order = (c.timestamp, rank[c.state], gen,
+                         base64.b64encode(c.data or b"").decode())
+                if k not in best or order > best[k][0]:
+                    best[k] = (order, (c.state, c.data, c.timestamp,
+                                       c.ttl, c.expiration, gen))
+    return {k: v for k, (_o, v) in best.items()}
 
 
 def test_salted_lww_matches_plain(spark, sstable_dir):
+    """Hot-key ``lww_cell``: with most row keys remapped onto one, the
+    plan runs ``partial_max_by`` below its single Exchange, the shuffle
+    carries at most one candidate per (key, name) per map partition,
+    and the winners equal the ``read_data_rows`` reference."""
     from sstable_hadoop_spark.operators import explode_cells, lww_cell
-    from sstable_hadoop_spark.operators.skew import salted_lww_cell
+
+    def hot(key):
+        return b"hot" if key[-1] % 4 else key
 
     cells = explode_cells(spark.read.format("sstable").load(sstable_dir))
-    plain = {(bytes(r["key"]), bytes(r["name"])): (r["state"], r["timestamp"])
-             for r in lww_cell(cells).collect()}
-    salted = {(bytes(r["key"]), bytes(r["name"])): (r["state"], r["timestamp"])
-              for r in salted_lww_cell(cells, n_salts=8).collect()}
-    assert plain == salted
+    last_byte = F.conv(F.hex(F.substring("key", -1, 1)), 16, 10) \
+        .cast("int")
+    skewed = cells.withColumn(
+        "key", F.when(last_byte % 4 != 0, F.lit(b"hot"))
+                .otherwise(F.col("key")))
+    merged = lww_cell(skewed)
+    n_ex, below = _exchange_and_below(merged)
+    assert n_ex == 1
+    assert any("partial_max_by" in s for s in below)
+
+    rows, shuffled = _shuffle_write_records(spark, merged.collect)
+    want = _reference_winners(sstable_dir, hot)
+    got = {(bytes(r["key"]), bytes(r["name"])):
+           (r["state"], None if r["data"] is None else bytes(r["data"]),
+            r["timestamp"], r["ttl"], r["expiration"], r["generation"])
+           for r in rows}
+    assert got == want
+    hot_cells = skewed.filter(F.col("key") == F.lit(b"hot")).count()
+    hot_groups = sum(1 for k in want if k[0] == b"hot")
+    assert hot_cells > 4 * hot_groups  # the hot groups really are hot
+    assert shuffled <= len(want) * cells.rdd.getNumPartitions()
 
 
 def test_lww_cell_skew_modes_agree(spark, sstable_dir):
-    import pytest
-
-    from sstable_hadoop_spark.operators import explode_cells, lww_cell
+    """``lww_cell`` and ``lww_row`` share one argmax, so the coarse
+    row merge of the per-cell winners equals the row merge of all
+    cells."""
+    from sstable_hadoop_spark.operators import explode_cells, lww_cell, lww_row
 
     cells = explode_cells(spark.read.format("sstable").load(sstable_dir))
 
     def snap(df):
-        return {(bytes(r["key"]), bytes(r["name"])):
-                (r["state"], r["timestamp"], r["generation"])
-                for r in df.collect()}
+        return sorted(tuple(bytes(v) if isinstance(v, bytearray) else v
+                            for v in r) for r in df.collect())
 
-    plain = snap(lww_cell(cells))
-    assert snap(lww_cell(cells, skew="always", n_salts=8)) == plain
-    assert snap(lww_cell(cells, skew="auto")) == plain
-    with pytest.raises(ValueError, match="skew"):
-        lww_cell(cells, skew="sometimes")
+    assert snap(lww_row(lww_cell(cells))) == snap(lww_row(cells))
 
 
 def test_detect_group_skew(spark):
-    from pyspark.sql import functions as F
+    """``skew_join`` finds its own hot keys: half of all rows on one key
+    plans a broadcast leg for it, uniform or empty input plans the
+    plain join, and every plan is row-identical to the plain join."""
+    from sstable_hadoop_spark.operators.skew import skew_join
 
-    from sstable_hadoop_spark.operators.skew import detect_group_skew
-
-    # uniform: 10k rows over 1k keys → no group dominates
+    right = spark.range(1000).select(F.col("id").alias("k"),
+                                     (F.col("id") * 2).alias("w"))
     uniform = spark.range(10000).select(
         (F.col("id") % 1000).alias("k"), F.col("id").alias("v"))
-    assert not detect_group_skew(uniform, ["k"])
-    # skewed: half of all rows share one key
     skewed = spark.range(10000).select(
-        F.when(F.col("id") % 2 == 0, F.lit(-1))
-         .otherwise(F.col("id")).alias("k"),
+        F.when(F.col("id") % 2 == 0, F.lit(0))
+         .otherwise(F.col("id") % 1000).alias("k"),
         F.col("id").alias("v"))
-    assert detect_group_skew(skewed, ["k"])
-    # empty input never flags
-    assert not detect_group_skew(uniform.filter("k < 0"), ["k"])
+    for left, hot in ((uniform, False), (skewed, True),
+                      (uniform.filter("k < 0"), False)):
+        j = skew_join(left, right, "k", hot_keys=None)
+        plan = j._jdf.queryExecution().analyzed().toString()
+        assert ("Union" in plan) is hot
+        assert sorted(map(tuple, j.collect())) == \
+            sorted(map(tuple, left.join(right, "k").collect()))
 
 
 def test_streaming_dedup_drops_duplicates(spark, tmp_path):

@@ -17,11 +17,15 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def _duck():
+@pytest.fixture(scope="module")
+def duck():
+    """One DuckDB connection with a view per testdata table, shared by
+    every oracle in the module: the oracles are read-only SELECTs."""
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return con
+    yield con
+    con.close()
 
 
 def _canon(v):
@@ -56,7 +60,7 @@ def _query_names():
 
 
 @pytest.mark.parametrize("name", _query_names())
-def test_query_matches_oracle(spark, name):
+def test_query_matches_oracle(spark, duck, name):
     import __spark_entry__ as entrymod
 
     fn = entrymod.queries()[name]
@@ -66,8 +70,7 @@ def test_query_matches_oracle(spark, name):
     if oracle is None:
         assert len(spdf) >= 0  # rows-only check, mirrors driver behavior
         return
-    con = _duck()
-    ddf = con.sql(oracle).df()
+    ddf = duck.sql(oracle).df()
     assert len(spdf) == len(ddf), f"{name}: rowcount {len(spdf)} != {len(ddf)}"
     scols, srows = _rows_canon(spdf)
     dcols, drows = _rows_canon(ddf)
@@ -157,7 +160,7 @@ def test_driver_window_staleness_guard():
         f"the driver window: {overdue}")
 
 
-def test_oracle_output_types_driver_hashable():
+def test_oracle_output_types_driver_hashable(duck):
     """VERDICT r6 #1: DuckDB widens some aggregate outputs past what the
     driver's value-hash canonicalizes identically to Spark — windowed
     SUM(BIGINT) → HUGEINT (int128) is the trap that made
@@ -172,10 +175,9 @@ def test_oracle_output_types_driver_hashable():
     allowed = {"BIGINT", "INTEGER", "SMALLINT", "TINYINT", "UTINYINT",
                "DOUBLE", "FLOAT", "VARCHAR", "BOOLEAN"}
     decimal = re.compile(r"^DECIMAL\(\d+,\d+\)$")
-    con = _duck()
     offenders = []
     for name, sql in entrymod.oracle_sql().items():
-        rel = con.sql(sql)
+        rel = duck.sql(sql)
         for col, typ in zip(rel.columns, (str(t) for t in rel.types)):
             if typ not in allowed and not decimal.match(typ):
                 offenders.append((name, col, typ))

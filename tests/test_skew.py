@@ -1,5 +1,5 @@
 """``operators/skew.py``: the head-sample probe's two paths and the
-size gate in front of the skew detectors.
+size gate in front of ``skew_join``'s hot-key detection.
 
 The JVM and Python head-sample paths must sample the same rows, the
 JVM path is only taken for small scan-shaped inputs, and inputs below
@@ -78,8 +78,8 @@ def test_head_sample_python_map_takes_python_path(spark, tmp_path):
 
 def test_skew_probe_size_gate(spark, tmp_path):
     """Inputs provably below AQE's skewed-partition threshold answer
-    the skew question from metadata — zero probe jobs — and the gated
-    decision can never change results (both paths exact)."""
+    the hot-key question from metadata — zero probe jobs — and the
+    gated decision can never change results (both join legs exact)."""
     from sstable_hadoop_spark.operators import _util, skew
 
     src = str(tmp_path / "tiny.parquet")
@@ -87,37 +87,35 @@ def test_skew_probe_size_gate(spark, tmp_path):
         F.when(F.col("id") % 2 == 0, F.lit(-1)).otherwise(F.col("id"))
          .alias("k"), F.col("id").alias("v")).coalesce(1).write.parquet(src)
     df = spark.read.parquet(src)
+    right = spark.range(50).select(F.col("id").alias("k"),
+                                   (F.col("id") * 2).alias("w"))
+    want = sorted(map(tuple, df.join(right, "k", "inner").collect()))
 
-    # heavily skewed data, but tiny: the gate answers False, no jobs
-    flagged, jobs = jobs_triggered(
-        spark, lambda: skew.detect_group_skew(df, ["k"]))
-    assert jobs == 0 and flagged is False
+    # heavily skewed data, but tiny: no probe jobs at build, the plain
+    # join, row-identical
+    j, jobs = jobs_triggered(
+        spark, lambda: skew.skew_join(df, right, "k", "inner",
+                                      hot_keys=None))
+    assert jobs == 0
+    assert "Union" not in j._jdf.queryExecution().analyzed().toString()
+    assert sorted(map(tuple, j.collect())) == want
 
-    # the same data through the probe (gate disabled) DOES flag it —
-    # the gate is a size decision, not a detection change
+    # the same data through the probe (gate disabled) DOES find the hot
+    # key — the gate is a size decision, not a detection change
     old = _util._SKEW_MIN_INPUT_BYTES
     try:
         _util._SKEW_MIN_INPUT_BYTES = 0
-        assert skew.detect_group_skew(df, ["k"]) is True
+        j = skew.skew_join(df, right, "k", "inner", hot_keys=None)
     finally:
         _util._SKEW_MIN_INPUT_BYTES = old
-
-    # skew_join auto on a tiny left side: no probe jobs at build, and
-    # row-identical to the plain join
-    right = spark.range(50).select(F.col("id").alias("k"),
-                                   (F.col("id") * 2).alias("w"))
-    j, jobs2 = jobs_triggered(
-        spark, lambda: skew.skew_join(df, right, "k", "inner",
-                                      hot_keys=None))
-    assert jobs2 == 0
-    assert sorted(map(tuple, j.collect())) == \
-        sorted(map(tuple, df.join(right, "k", "inner").collect()))
+    assert "Union" in j._jdf.queryExecution().analyzed().toString()
+    assert sorted(map(tuple, j.collect())) == want
 
 
 def test_skew_decision_walks_the_plan_once(spark, tmp_path, monkeypatch):
     """The size gate and the head-sample path choice read one
-    ``plan_shape`` walk: a probing ``detect_group_skew`` and
-    ``skew_join`` each build exactly one shape."""
+    ``plan_shape`` walk: a probing ``skew_join`` builds exactly one
+    shape."""
     from sstable_hadoop_spark.operators import _util, skew
 
     calls = []
@@ -130,8 +128,6 @@ def test_skew_decision_walks_the_plan_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(_util, "plan_shape", counting)
     monkeypatch.setattr(_util, "_SKEW_MIN_INPUT_BYTES", 0)  # probe runs
     df = mk_parquet(spark, tmp_path, n=300, name="once")
-    skew.detect_group_skew(df, ["k"])
-    assert len(calls) == 1
     right = spark.range(5).select(F.col("id").alias("k"))
     skew.skew_join(df, right, "k", hot_keys=None)
-    assert len(calls) == 2
+    assert len(calls) == 1

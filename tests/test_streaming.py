@@ -1,7 +1,8 @@
 """Structured Streaming: the same window functions run as real streams
 (file source, availableNow trigger) must equal their batch twins, and
-the applyInPandasWithState LWW upsert must converge to the batch
-lww_cell result when generations arrive in separate micro-batches."""
+``lww_cell`` over a stream (a stateful aggregation in update mode) must
+converge to the batch lww_cell result when generations arrive in
+separate micro-batches."""
 
 from __future__ import annotations
 
@@ -47,7 +48,6 @@ def test_streaming_lww_converges_to_batch(spark, tmp_path):
     final winner per (key, name) must equal batch lww_cell."""
     from sstable_hadoop_spark.operators import lww_cell
     from sstable_hadoop_spark.queries import derived_cells
-    from sstable_hadoop_spark.streaming import streaming_lww_cells
 
     cells = derived_cells(spark, SF)
     src = str(tmp_path / "cells_stream")
@@ -58,7 +58,7 @@ def test_streaming_lww_converges_to_batch(spark, tmp_path):
 
     stream = (spark.readStream.schema(cells.schema)
               .option("maxFilesPerTrigger", "1").parquet(src))
-    q = (streaming_lww_cells(stream)
+    q = (lww_cell(stream)
          .writeStream.format("memory").queryName("lww_sink")
          .outputMode("update").trigger(availableNow=True).start())
     _await(q)
@@ -133,14 +133,13 @@ def test_sstable_stream_source_incremental(spark, tmp_path):
 
 
 def test_streaming_cells_kind_feeds_lww_state(spark, tmp_path):
-    """kind=cells stream: flat records match streaming_lww_cells' input
+    """kind=cells stream: flat records match ``lww_cell``'s input
     schema directly — stream the directory, fold through the stateful
     LWW, final winners equal batch lww over the same files."""
     from pyspark.sql import functions as F
 
     from sstable_hadoop_spark.operators import explode_cells, lww_cell
     from sstable_hadoop_spark.sources.codec import Cell, Row, write_sstable
-    from sstable_hadoop_spark.streaming import streaming_lww_cells
 
     d = str(tmp_path / "cells_src")
     for g in (1, 2):
@@ -153,7 +152,7 @@ def test_streaming_cells_kind_feeds_lww_state(spark, tmp_path):
 
     stream = (spark.readStream.format("sstable")
               .option("kind", "cells").load(d))
-    q = (streaming_lww_cells(stream)
+    q = (lww_cell(stream)
          .writeStream.format("memory").queryName("cells_lww_sink")
          .outputMode("update").trigger(availableNow=True).start())
     q.awaitTermination(120)
