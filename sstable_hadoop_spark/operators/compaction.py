@@ -78,6 +78,12 @@ def compact(spark: SparkSession, in_dir: str, out_dir: str,
     """Compact ``in_dir`` (all generations) into one merged generation
     at ``out_dir``.  Returns the merged-cell DataFrame (lazy reuse).
 
+    One generation, not one file: each reducer task of the final merge
+    writes its own key-sorted Data.db, and AQE sizes that width from
+    the shuffle bytes, so a mid-size input lands as a few files whose
+    key ranges may overlap.  Pass ``target_partitions`` for exactly
+    that many range-disjoint files.
+
     ``generation`` defaults to one past the largest generation in the
     input ``-Data.db`` file names, so the compacted file wins any future
     tie against its inputs.  It is read from the directory listing, not

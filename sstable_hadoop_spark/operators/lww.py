@@ -23,13 +23,14 @@ fixes a deterministic total order instead (SURVEY.md §2.4):
 ``timestamp DESC, state precedence DELETED > EXPIRING > NORMAL,
 generation DESC, base64(data) DESC``.  This is a documented deviation.
 
-Scale notes: merges are expressed as ``groupBy().agg(max_by(payload,
-order_key))`` rather than window ``row_number``, so Spark runs them as
-hash aggregations WITH map-side partial aggregation — each executor
-pre-merges its local generations before the shuffle, exactly the
-combiner topology the reference's MR jobs lack (they shuffle every
-cell).  At 100 TB this is the difference between shuffling all cells
-and shuffling one winner candidate per (key, name) per map partition.
+Scale notes: merges are expressed as ``groupBy().agg(max(struct))``
+rather than window ``row_number``, so Spark runs them as aggregations
+WITH map-side partial aggregation — each executor pre-merges its local
+generations before the shuffle, exactly the combiner topology the
+reference's MR jobs lack (they shuffle every cell).  The struct's
+leading fields ARE the total order, so each cell crosses the shuffle
+once: ``data`` travels only as its base64 order field and ``name`` not
+at all when it is a grouping key.
 """
 
 from __future__ import annotations
@@ -51,19 +52,6 @@ def _state_rank(state: Column) -> Column:
              .otherwise(F.lit(0)))
 
 
-def _order_key() -> Column:
-    """Deterministic total order for the LWW argmax; struct comparison
-    is lexicographic field-by-field."""
-    return F.struct(
-        F.col("timestamp").alias("ts"),
-        _state_rank(F.col("state")).alias("sr"),
-        F.col("generation").alias("gen"),
-        F.coalesce(F.base64(F.col("data")), F.lit("")).alias("db64"),
-        # name disambiguates lww_row ties (constant within an lww_cell group)
-        F.base64(F.col("name")).alias("nb64"),
-    )
-
-
 def explode_cells(df: DataFrame) -> DataFrame:
     """Nested rows → one record per (key, cell).  The reference's
     ``SSTableDataMapper`` (mapred/SSTableData.scala:21-33), minus its
@@ -76,12 +64,24 @@ def explode_cells(df: DataFrame) -> DataFrame:
 
 def _argmax(cells: DataFrame, keys: list[str]) -> DataFrame:
     """The newest cell per ``keys`` group under the LWW total order:
-    one ``max_by`` aggregation, partial below its shuffle."""
-    payload = F.struct(*[F.col(c) for c in CELL_COLS])
+    one ``max`` over a struct led by the order fields (``name`` breaks
+    ties only where it is not a key), partial below its shuffle.
+    ``data`` is rebuilt from its order field; a present value beats a
+    missing one on a full tie."""
+    order = [F.col("timestamp"), _state_rank(F.col("state")).alias("sr"),
+             F.col("generation"),
+             F.coalesce(F.base64("data"), F.lit("")).alias("db64")]
+    if "name" not in keys:
+        order.append(F.base64("name").alias("nb64"))
+    w = F.struct(*order, F.col("data").isNotNull().alias("has_data"),
+                 "state", "ttl", "expiration")
+    rebuilt = {"name": F.unbase64("w.nb64"),
+               "data": F.when(F.col("w.has_data"), F.unbase64("w.db64"))}
     return (cells
             .groupBy(*keys)
-            .agg(F.max_by(payload, _order_key()).alias("w"))
-            .select(*keys, *[f"w.{c}" for c in CELL_COLS if c not in keys]))
+            .agg(F.max(w).alias("w"))
+            .select(*keys, *[rebuilt.get(c, F.col(f"w.{c}")).alias(c)
+                             for c in CELL_COLS if c not in keys]))
 
 
 def lww_cell(cells: DataFrame) -> DataFrame:
@@ -91,7 +91,7 @@ def lww_cell(cells: DataFrame) -> DataFrame:
     (SSTableData.scala:85-95) but with partial aggregation: one
     hash-agg, one shuffle on (key, name).
 
-    Hot keys need no special path: ``partial_max_by`` runs below the
+    Hot keys need no special path: the partial ``max`` runs below the
     only Exchange, so a (key, name) group reaches its reducer as at
     most one candidate per map partition however many cells it holds
     (the Cassandra wide-row pathology that would serialize the

@@ -30,11 +30,10 @@ def session_builder(app_name: str = "sstable_hadoop_spark",
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # coalesce small shuffles down to their real size instead of
-        # defaulting to full parallelism (huge win for metadata-sized
-        # stages; at scale AQE still targets 64 MiB partitions)
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                "false")
+        # AQE's default coalescing: a reducer partition targets
+        # total/defaultParallelism bytes, capped at the 64 MiB advisory
+        # size and floored at the 1 MiB minPartitionSize — metadata-sized
+        # shuffles collapse to one task, mid-size ones use every core.
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")

@@ -129,7 +129,7 @@ def derived_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doubles exchange volume for zero parallelism gain.  Re-measured in
     # the r12 optimization round (interleaved A/B at sf0.1): adding the
     # repartition is 0.49 s → 0.80 s on flagship — the single-core
-    # partial max_by over 100k cells (~0.2 s) is cheaper than the extra
+    # partial LWW max over 100k cells (~0.2 s) is cheaper than the extra
     # exchange barrier + 32-reducer scheduling it buys.  Per-row-heavy
     # operators (shingling, regex, vector math) call ensure_parallelism
     # themselves; see operators/_util.py.
@@ -173,7 +173,8 @@ WITH cells AS (
 """
 
 # Deterministic LWW total order (SURVEY.md §2.4) in DuckDB terms;
-# matches operators.lww._order_key exactly (base64 of UTF-8 bytes).
+# matches the leading order fields of operators.lww._argmax's struct
+# exactly (base64 of UTF-8 bytes).
 _ORDER = ("ts_us DESC, CASE state WHEN 'DELETED' THEN 2 WHEN 'EXPIRING' "
           "THEN 1 ELSE 0 END DESC, generation DESC, "
           "coalesce(to_base64(encode(data_str)), '') DESC, "
@@ -2941,7 +2942,7 @@ def lww_skewed_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key LWW under the oracle: ~40% of all cells are remapped onto
     one row key (the Cassandra wide-row pathology), then merged with
     the plain ``lww_cell``, which must equal the SQL winners exactly.
-    Its ``partial_max_by`` runs below the only Exchange, so the hot
+    Its partial ``max`` runs below the only Exchange, so the hot
     (key, name) groups reach their reducers as at most one candidate
     per map partition.  The name is kept because the correctness
     ledger records it."""

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 import zipfile
 import struct
 from dataclasses import dataclass
@@ -67,6 +68,11 @@ from pyspark.sql.types import (
 )
 
 from . import cassandra1x, codec, fs
+
+try:
+    import fcntl
+except ImportError:  # no flock: zips are neither held nor swept
+    fcntl = None
 
 CELL_STRUCT = StructType([
     StructField("name", BinaryType(), False),
@@ -1000,7 +1006,6 @@ class SSTableWriteTask(DataSourceArrowWriter):
         rename source is gone), never corrupts data — but loud
         failures on 100 TB jobs are expensive, so err long."""
         import re
-        import time
 
         stale_re = re.compile(r"^\.[0-9a-f]{10}x\d+x.*\.db$")
         cutoff_ns = (time.time() - 24 * 3600) * 1e9
@@ -1085,6 +1090,73 @@ class SSTableDataSource(DataSource):
         return SSTableWriteTask(dict(self.options))
 
 
+_PKG_PREFIX = "sstable_hadoop_spark_pkg_"
+_PKG_SWEEP_AGE_S = 3600
+# zip path -> descriptor holding a shared flock on it for the life of
+# this process: the driver serves an addPyFile'd path to executors that
+# join later, so no other process may delete a zip while one is open.
+_PKG_HELD: dict[str, int] = {}
+
+
+def _package_zip(sources, digest: str) -> str:
+    """The package zip for ``digest`` in the temp dir, built once under
+    a per-process temp name and held open under a shared flock; other
+    digests' zips that no live process holds are swept."""
+    tmp_dir = tempfile.gettempdir()
+    zip_path = os.path.join(tmp_dir, f"{_PKG_PREFIX}{digest}.zip")
+    while zip_path not in _PKG_HELD:
+        if not os.path.exists(zip_path):
+            tmp = f"{zip_path}.{os.getpid()}.tmp"
+            with zipfile.ZipFile(tmp, "w") as zf:
+                for full, rel, _mt, _sz in sources:
+                    zf.write(full, rel)
+            os.replace(tmp, zip_path)
+        if fcntl is None:
+            _PKG_HELD[zip_path] = -1
+            break
+        try:
+            fd = os.open(zip_path, os.O_RDONLY)
+        except FileNotFoundError:
+            continue
+        fcntl.flock(fd, fcntl.LOCK_SH)
+        try:  # a sweeper may have unlinked it before we held the lock
+            same = os.stat(zip_path).st_ino == os.fstat(fd).st_ino
+        except FileNotFoundError:
+            same = False
+        if same:
+            _PKG_HELD[zip_path] = fd
+        else:
+            os.close(fd)
+    if fcntl is not None:
+        _sweep_package_zips(tmp_dir)
+    return zip_path
+
+
+def _sweep_package_zips(tmp_dir: str) -> None:
+    """Delete package zips (and temp leftovers) older than an hour that
+    no process holds: an exclusive non-blocking flock succeeds only on
+    a zip no live session keeps open."""
+    cutoff = time.time() - _PKG_SWEEP_AGE_S
+    for fn in os.listdir(tmp_dir):
+        path = os.path.join(tmp_dir, fn)
+        if (not fn.startswith(_PKG_PREFIX) or path in _PKG_HELD
+                or not fn.endswith((".zip", ".tmp"))):
+            continue
+        try:
+            if os.stat(path).st_mtime > cutoff:
+                continue
+            fd = os.open(path, os.O_RDONLY)
+        except OSError:
+            continue
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            os.unlink(path)
+        except OSError:
+            pass
+        finally:
+            os.close(fd)
+
+
 def ship_package(spark) -> None:
     """Ship this package to Spark's Python workers via ``addPyFile``.
 
@@ -1093,7 +1165,8 @@ def ship_package(spark) -> None:
     package modules — since workers' ``sys.path`` does not necessarily
     include this package's location (it is not site-installed).
     Idempotent per session; the zip name is content-addressed so stale
-    caches from earlier package versions are never shipped."""
+    caches from earlier package versions are never shipped, and zips
+    of earlier versions are swept once no process holds them."""
     import hashlib
 
     import sstable_hadoop_spark
@@ -1113,13 +1186,7 @@ def ship_package(spark) -> None:
                                for s in sources]).encode()).hexdigest()[:12]
     if getattr(spark, "_sstable_pkg_digest", None) == digest:
         return
-    zip_path = os.path.join(tempfile.gettempdir(),
-                            f"sstable_hadoop_spark_pkg_{digest}.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path + ".tmp", "w") as zf:
-            for full, rel, _mt, _sz in sources:
-                zf.write(full, rel)
-        os.replace(zip_path + ".tmp", zip_path)
+    zip_path = _package_zip(sources, digest)
     spark.sparkContext.addPyFile(zip_path)
     # Streaming source runner processes are spawned BY THE JVM with the
     # environment captured at JVM launch, so mutating os.environ here

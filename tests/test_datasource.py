@@ -743,3 +743,38 @@ def test_named_file_of_another_component_fails_planning(sstable_dir):
         with pytest.raises(ValueError, match="is not a"):
             for p in reader.partitions():
                 list(reader.read(p))
+
+
+def test_ship_package_sweeps_unheld_zips(tmp_path, monkeypatch):
+    """``ship_package`` builds its zip under a per-process temp name,
+    holds it, and deletes older package zips and temp leftovers that
+    no process holds; a held or young zip of another version stays."""
+    import fcntl
+    import tempfile
+    import time
+    from types import SimpleNamespace
+
+    from sstable_hadoop_spark.sources import datasource
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    prefix = "sstable_hadoop_spark_pkg_"
+    old = time.time() - 2 * 3600
+    for name in ("aaaaaaaaaaaa.zip", "bbbbbbbbbbbb.zip",
+                 "cccccccccccc.zip.123.tmp", "dddddddddddd.zip"):
+        (tmp_path / f"{prefix}{name}").write_bytes(b"x")
+        if not name.startswith("d"):
+            os.utime(tmp_path / f"{prefix}{name}", (old, old))
+    held = os.open(tmp_path / f"{prefix}bbbbbbbbbbbb.zip", os.O_RDONLY)
+    fcntl.flock(held, fcntl.LOCK_SH)  # a live session of another version
+    try:
+        shipped = []
+        for _ in range(2):
+            datasource.ship_package(SimpleNamespace(
+                sparkContext=SimpleNamespace(addPyFile=shipped.append)))
+    finally:
+        os.close(held)
+    assert len(set(shipped)) == 1
+    assert os.path.dirname(shipped[0]) == str(tmp_path)
+    assert sorted(os.listdir(tmp_path)) == sorted([
+        os.path.basename(shipped[0]), f"{prefix}bbbbbbbbbbbb.zip",
+        f"{prefix}dddddddddddd.zip"])

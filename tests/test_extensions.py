@@ -449,7 +449,7 @@ def _reference_winners(sstable_dir, key_of):
 
 def test_salted_lww_matches_plain(spark, sstable_dir):
     """Hot-key ``lww_cell``: with most row keys remapped onto one, the
-    plan runs ``partial_max_by`` below its single Exchange, the shuffle
+    plan runs the partial ``max`` below its single Exchange, the shuffle
     carries at most one candidate per (key, name) per map partition,
     and the winners equal the ``read_data_rows`` reference."""
     from sstable_hadoop_spark.operators import explode_cells, lww_cell
@@ -466,7 +466,7 @@ def test_salted_lww_matches_plain(spark, sstable_dir):
     merged = lww_cell(skewed)
     n_ex, below = _exchange_and_below(merged)
     assert n_ex == 1
-    assert any("partial_max_by" in s for s in below)
+    assert any("partial_max(" in s for s in below)
 
     rows, shuffled = _shuffle_write_records(spark, merged.collect)
     want = _reference_winners(sstable_dir, hot)

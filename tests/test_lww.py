@@ -19,6 +19,7 @@ from sstable_hadoop_spark.operators import (
     lww_cell,
     lww_row,
 )
+from sstable_hadoop_spark.operators.lww import CELL_COLS
 from sstable_hadoop_spark.sources.codec import Cell, Row
 from tests.conftest import AS_OF_MS, cells_as_records
 
@@ -229,3 +230,98 @@ def test_lww_refresh_equals_full_merge(spark):
     again = canon(lww_refresh(
         lww_refresh(stored, delta), delta))
     assert again == full
+
+
+_CELLS = ("key binary, name binary, state string, data binary, "
+          "timestamp long, ttl long, expiration long, generation int")
+
+
+def _py_winners(rows, by_name):
+    """Winners of ``rows`` (tuples in ``_CELLS`` order) under the LWW
+    total order: timestamp, state rank, generation, base64(data), then
+    base64(name) for the row merge, then a present value over a
+    missing one."""
+    rank = {"DELETED": 2, "EXPIRING": 1}
+    b64 = lambda b: base64.b64encode(b or b"").decode()
+    best = {}
+    for r in rows:
+        key, name, state, data, ts, _ttl, _exp, gen = r
+        group = (key, name) if by_name else key
+        order = (ts, rank.get(state, 0), gen, b64(data),
+                 "" if by_name else b64(name), data is not None)
+        if group not in best or order > best[group][0]:
+            best[group] = (order, r)
+    return sorted(r for _o, r in best.values())
+
+
+def test_lww_full_ties_follow_base64_order(spark):
+    """Cells equal on (timestamp, state, generation) fall to
+    ``base64(data) DESC`` — ``YQ==`` (b"a") beats ``/w==`` (b"\\xff"),
+    where raw bytes would pick b"\\xff" — the row merge then breaks a
+    name tie by ``base64(name) DESC``, and a present empty value beats
+    a missing one.  The winners do not depend on input order."""
+    import random
+
+    rows = [
+        (b"k1", b"c", "NORMAL", b"a", 100, None, None, 1),
+        (b"k1", b"c", "NORMAL", b"\xff", 100, None, None, 1),
+        (b"k2", b"a", "NORMAL", b"v", 100, None, None, 2),
+        (b"k2", b"\xff", "NORMAL", b"v", 100, None, None, 2),
+        (b"k3", b"c", "NORMAL", None, 100, None, None, 3),
+        (b"k3", b"c", "NORMAL", b"", 100, None, None, 3),
+    ]
+    canon = lambda df: sorted(
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+        for r in df.select("key", *CELL_COLS).collect())
+    cell = _py_winners(rows, by_name=True)
+    row = _py_winners(rows, by_name=False)
+    assert [r[3] for r in cell if r[0] != b"k2"] == [b"a", b""]
+    assert [r[1] for r in row if r[0] == b"k2"] == [b"a"]
+    rng = random.Random(7)
+    for _ in range(3):
+        df = spark.createDataFrame(rows, _CELLS).repartition(4)
+        assert canon(lww_cell(df)) == cell
+        assert canon(lww_row(df)) == row
+        rng.shuffle(rows)
+
+
+def _reducer_tasks(spark, df):
+    """Task counts of the stages that read a shuffle when ``df`` runs
+    into the ``noop`` sink."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"lww-width-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup(None, None)
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    stages = [store.lastStageAttempt(sid)
+              for job in tracker.getJobIdsForGroup(group)
+              for sid in tracker.getJobInfo(job).stageIds]
+    return [s.numTasks() for s in stages
+            if s.status().toString() == "COMPLETE"
+            and s.shuffleReadRecords() > 0]
+
+
+def test_lww_reduce_width_follows_shuffle_size(spark):
+    """Under the session's AQE settings the final merge of a few-MiB
+    cell shuffle runs on more than one reducer, while a sub-MiB one
+    still coalesces to a single task."""
+    def cells(n):
+        rand = lambda i: F.unhex(F.sha2((F.col("id") + i).cast("string"),
+                                        512))
+        return spark.range(n).select(
+            F.unhex(F.sha2(F.col("id").cast("string"), 256)).alias("key"),
+            F.lit(b"c").alias("name"), F.lit("NORMAL").alias("state"),
+            F.concat(rand(1), rand(2), rand(3)).alias("data"),
+            F.col("id").alias("timestamp"),
+            F.lit(None).cast("long").alias("ttl"),
+            F.lit(None).cast("long").alias("expiration"),
+            F.lit(1).alias("generation"))
+
+    wide = _reducer_tasks(spark, lww_cell(cells(40_000)))
+    assert max(wide) >= min(2, spark.sparkContext.defaultParallelism)
+    assert _reducer_tasks(spark, lww_cell(cells(1_000))) == [1]
