@@ -27,6 +27,7 @@ file.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -78,11 +79,12 @@ def compact(spark: SparkSession, in_dir: str, out_dir: str,
     """Compact ``in_dir`` (all generations) into one merged generation
     at ``out_dir``.  Returns the merged-cell DataFrame (lazy reuse).
 
-    One generation, not one file: each reducer task of the final merge
-    writes its own key-sorted Data.db, and AQE sizes that width from
-    the shuffle bytes, so a mid-size input lands as a few files whose
-    key ranges may overlap.  Pass ``target_partitions`` for exactly
-    that many range-disjoint files.
+    One generation, not one file: each reducer task of the regroup
+    shuffle (``collect_rows``, which follows the final merge) writes
+    its own key-sorted Data.db, and AQE sizes that width from the
+    shuffle bytes, so a mid-size input lands as a few files whose key
+    ranges may overlap.  Pass ``target_partitions`` for exactly that
+    many range-disjoint files.
 
     ``generation`` defaults to one past the largest generation in the
     input ``-Data.db`` file names, so the compacted file wins any future
@@ -257,7 +259,9 @@ def pick_leveled(in_dir: str, sstable_mb: float = 160.0,
                  l0_threshold: int = 4) -> dict | None:
     """One due leveled-compaction task, or None when the tree is in
     shape.  Priority: an over-full L0 first (reads suffer most
-    there), then the deepest over-budget level.  Returns
+    there), then the deepest over-budget level.  ``l0_threshold``
+    counts L0 generations (flushes), not files: a flush writes one
+    file per reducer, and that width must not set the cadence.  Returns
     ``{"level", "sources", "overlapping", "target_level"}`` with
     absolute Data.db paths for :func:`compact_leveled_task`.
 
@@ -265,6 +269,7 @@ def pick_leveled(in_dir: str, sstable_mb: float = 160.0,
     first key (a fixed sweep order visits every key range — same
     effect as Cassandra's round-robin cursor without mutable state).
     """
+    from sstable_hadoop_spark.sources.codec import generation_of
     from sstable_hadoop_spark.sources.datasource import _list_files
 
     files = _list_files(in_dir, "-Data.db")
@@ -282,7 +287,7 @@ def pick_leveled(in_dir: str, sstable_mb: float = 160.0,
                 if _overlaps(lo, hi, *ranges[f])]
 
     l0 = by_level.get(0, [])
-    if len(l0) >= l0_threshold:
+    if len(set(map(generation_of, l0))) >= l0_threshold:
         lo = min(ranges[f][0] for f in l0)
         hi = max(ranges[f][1] for f in l0)
         return {"level": 0, "sources": sorted(l0),
@@ -322,13 +327,19 @@ def _remove_family(data_path: str) -> None:
 def compact_leveled_task(spark: SparkSession, in_dir: str,
                          task: dict,
                          target_partitions: int | None = None,
-                         compressed: bool = False) -> list[str]:
+                         compressed: bool = False,
+                         sstable_mb: float = 160.0) -> list[str]:
     """Execute one :func:`pick_leveled` task IN PLACE: merge the
     source + overlapping files into a new generation (the range-
     partitioned writer emits key-sorted, non-overlapping files — the
     level invariant by construction), register its Data.db files at
     the target level, then remove the consumed families and their
     sidecar entries.  Returns the new Data.db paths.
+
+    The output is always range-partitioned: into ``target_partitions``
+    files, or by default one file per ``sstable_mb`` of consumed
+    Data.db bytes (at least one), so the file count never follows the
+    shuffle width.
 
     A level-N≥1 victim with NO overlap in N+1 is a TRIVIAL MOVE
     (LevelDB/RocksDB's optimization): the file is re-registered at
@@ -354,6 +365,10 @@ def compact_leveled_task(spark: SparkSession, in_dir: str,
         _write_levels(in_dir, levels)
         return list(task["sources"])
     consumed = list(task["sources"]) + list(task["overlapping"])
+    if target_partitions is None:
+        in_bytes = sum(os.path.getsize(f) for f in consumed)
+        target_partitions = max(
+            1, math.ceil(in_bytes / (sstable_mb * 1024 * 1024)))
     before = set(_list_files(in_dir, "-Data.db"))
     compact_files(spark, consumed, in_dir,
                   generation=_next_generation(list(before)),
@@ -389,7 +404,8 @@ def compact_leveled(spark: SparkSession, in_dir: str,
             return rounds
         compact_leveled_task(spark, in_dir, task,
                              target_partitions=target_partitions,
-                             compressed=compressed)
+                             compressed=compressed,
+                             sstable_mb=sstable_mb)
         rounds += 1
     raise RuntimeError(
         f"leveled compaction did not quiesce in {max_rounds} rounds "

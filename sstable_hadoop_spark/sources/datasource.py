@@ -34,6 +34,7 @@ capability the reference reads the index for but never exploits
 
 from __future__ import annotations
 
+import fcntl
 import os
 import tempfile
 import time
@@ -68,11 +69,6 @@ from pyspark.sql.types import (
 )
 
 from . import cassandra1x, codec, fs
-
-try:
-    import fcntl
-except ImportError:  # no flock: zips are neither held nor swept
-    fcntl = None
 
 CELL_STRUCT = StructType([
     StructField("name", BinaryType(), False),
@@ -1100,8 +1096,10 @@ _PKG_HELD: dict[str, int] = {}
 
 def _package_zip(sources, digest: str) -> str:
     """The package zip for ``digest`` in the temp dir, built once under
-    a per-process temp name and held open under a shared flock; other
-    digests' zips that no live process holds are swept."""
+    a per-process temp name, hard-linked into place (a zip another
+    process published first is kept and adopted) and held open under a
+    shared flock; other digests' zips that no live process holds are
+    swept."""
     tmp_dir = tempfile.gettempdir()
     zip_path = os.path.join(tmp_dir, f"{_PKG_PREFIX}{digest}.zip")
     while zip_path not in _PKG_HELD:
@@ -1110,10 +1108,12 @@ def _package_zip(sources, digest: str) -> str:
             with zipfile.ZipFile(tmp, "w") as zf:
                 for full, rel, _mt, _sz in sources:
                     zf.write(full, rel)
-            os.replace(tmp, zip_path)
-        if fcntl is None:
-            _PKG_HELD[zip_path] = -1
-            break
+            try:  # publish without replacing a zip another process holds
+                os.link(tmp, zip_path)
+            except FileExistsError:
+                pass
+            finally:
+                os.unlink(tmp)
         try:
             fd = os.open(zip_path, os.O_RDONLY)
         except FileNotFoundError:
@@ -1127,8 +1127,7 @@ def _package_zip(sources, digest: str) -> str:
             _PKG_HELD[zip_path] = fd
         else:
             os.close(fd)
-    if fcntl is not None:
-        _sweep_package_zips(tmp_dir)
+    _sweep_package_zips(tmp_dir)
     return zip_path
 
 

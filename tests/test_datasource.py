@@ -757,6 +757,8 @@ def test_ship_package_sweeps_unheld_zips(tmp_path, monkeypatch):
     from sstable_hadoop_spark.sources import datasource
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    pkg_held: dict[str, int] = {}
+    monkeypatch.setattr(datasource, "_PKG_HELD", pkg_held)
     prefix = "sstable_hadoop_spark_pkg_"
     old = time.time() - 2 * 3600
     for name in ("aaaaaaaaaaaa.zip", "bbbbbbbbbbbb.zip",
@@ -773,8 +775,50 @@ def test_ship_package_sweeps_unheld_zips(tmp_path, monkeypatch):
                 sparkContext=SimpleNamespace(addPyFile=shipped.append)))
     finally:
         os.close(held)
+        for fd in pkg_held.values():
+            os.close(fd)
     assert len(set(shipped)) == 1
     assert os.path.dirname(shipped[0]) == str(tmp_path)
     assert sorted(os.listdir(tmp_path)) == sorted([
         os.path.basename(shipped[0]), f"{prefix}bbbbbbbbbbbb.zip",
         f"{prefix}dddddddddddd.zip"])
+
+
+def test_ship_package_keeps_a_zip_published_first(tmp_path, monkeypatch):
+    """Two processes that both find no zip for a digest both build one;
+    the one that publishes second must adopt the first zip, not replace
+    the inode the first process holds and registered."""
+    import tempfile
+    from types import SimpleNamespace
+
+    from sstable_hadoop_spark.sources import datasource
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first: dict[str, int] = {}
+    second: dict[str, int] = {}
+    shipped = []
+
+    def session():
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(addPyFile=shipped.append))
+
+    try:
+        monkeypatch.setattr(datasource, "_PKG_HELD", first)
+        datasource.ship_package(session())
+        (zip_path,) = shipped
+        inode = os.stat(zip_path).st_ino
+        # the second process checked for the zip before the first
+        # published it, so it builds its own copy
+        real_exists = os.path.exists
+        monkeypatch.setattr(
+            os.path, "exists",
+            lambda p: p != zip_path and real_exists(p))
+        monkeypatch.setattr(datasource, "_PKG_HELD", second)
+        datasource.ship_package(session())
+        assert os.fstat(second[zip_path]).st_ino == inode
+    finally:
+        for fd in [*first.values(), *second.values()]:
+            os.close(fd)
+    assert shipped == [zip_path, zip_path]
+    assert os.stat(zip_path).st_ino == inode
+    assert os.listdir(tmp_path) == [os.path.basename(zip_path)]

@@ -6,6 +6,7 @@ quiescence, level invariants, and crash-tolerant sidecar semantics."""
 from __future__ import annotations
 
 import os
+import random
 
 import pytest
 
@@ -55,6 +56,22 @@ def test_pick_l0_threshold_and_overlap(tmp_path):
     assert [os.path.basename(f) for f in task["sources"]] == files[:4]
     assert [os.path.basename(f)
             for f in task["overlapping"]] == [files[4]]
+
+
+def test_l0_threshold_counts_flushes_not_files(tmp_path):
+    """A flush writes one file per reducer, all of one generation:
+    three flushes of two files each are three L0 entries, not six."""
+    from sstable_hadoop_spark.operators.compaction import pick_leveled
+    from sstable_hadoop_spark.sources.codec import Cell, Row, write_sstable
+
+    for g in (1, 2, 3):
+        for part, keys in (("p0", [b"a", b"m"]), ("p1", [b"b", b"z"])):
+            write_sstable(str(tmp_path), f"flush{part}", [
+                Row(k, [Cell(b"c", "NORMAL", b"v", g)]) for k in keys],
+                generation=g)
+    assert len(_datafiles(tmp_path)) == 6
+    assert pick_leveled(str(tmp_path)) is None
+    assert pick_leveled(str(tmp_path), l0_threshold=3)["level"] == 0
 
 
 def test_pick_level_budget_victim_is_smallest_first_key(tmp_path):
@@ -111,11 +128,7 @@ def test_compact_to_quiescence_preserves_content(spark, tmp_path):
 
 
 def test_levels_are_nonoverlapping_after_quiescence(spark, tmp_path):
-    from sstable_hadoop_spark.operators.compaction import (
-        compact_leveled,
-        file_key_range,
-        read_levels,
-    )
+    from sstable_hadoop_spark.operators.compaction import compact_leveled
     from sstable_hadoop_spark.sources.datasource import register
 
     register(spark)
@@ -125,18 +138,66 @@ def test_levels_are_nonoverlapping_after_quiescence(spark, tmp_path):
     compact_leveled(spark, str(tmp_path), sstable_mb=0.001,
                     l0_threshold=4, max_rounds=30,
                     target_partitions=3)
-    levels = read_levels(str(tmp_path))
+    _assert_levels_disjoint(tmp_path)
+
+
+def _assert_levels_disjoint(d) -> dict[int, list]:
+    """Assert no two files of one level >= 1 overlap in key range;
+    returns the sorted key ranges of each level."""
+    from sstable_hadoop_spark.operators.compaction import (
+        file_key_range,
+        read_levels,
+    )
+
+    levels = read_levels(str(d))
     by_level: dict[int, list] = {}
-    for f in _datafiles(tmp_path):
-        lv = levels.get(f, 0)
-        rng = file_key_range(os.path.join(tmp_path, f))
-        by_level.setdefault(lv, []).append(rng)
+    for f in _datafiles(d):
+        by_level.setdefault(levels.get(f, 0), []).append(
+            file_key_range(os.path.join(d, f)))
     for lv, ranges in by_level.items():
+        ranges.sort()
         if lv == 0:
             continue
-        ranges.sort()
         for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:]):
             assert hi_a < lo_b, f"level {lv} files overlap"
+    return by_level
+
+
+def test_leveled_output_is_range_disjoint_by_default(spark, tmp_path):
+    """Without ``target_partitions`` a merge of a few MiB, which AQE
+    spreads over several reducers, still lands as range-disjoint files:
+    one per ``sstable_mb`` of consumed input."""
+    from sstable_hadoop_spark.operators.compaction import (
+        compact_leveled,
+        pick_leveled,
+    )
+    from sstable_hadoop_spark.operators.lww import explode_cells, lww_cell
+    from sstable_hadoop_spark.sources.datasource import register
+
+    from sstable_hadoop_spark.sources.codec import Cell, Row, write_sstable
+
+    register(spark)
+    rnd = random.Random(7)  # incompressible values: shuffle bytes ~ data
+    for g in range(1, 5):
+        write_sstable(str(tmp_path), "tbl", [
+            Row(f"k{i:06d}".encode(),
+                [Cell(b"c", "NORMAL", rnd.randbytes(200), g)])
+            for i in range(g, 12000, 2)], generation=g)
+    in_bytes = sum(os.path.getsize(os.path.join(tmp_path, f))
+                   for f in _datafiles(tmp_path))
+    assert in_bytes > 4 * 1024 * 1024
+    want = sorted(tuple(r) for r in lww_cell(explode_cells(
+        spark.read.format("sstable").load(str(tmp_path))))
+        .select("key", "data").collect())
+    assert compact_leveled(spark, str(tmp_path), sstable_mb=1.0) == 1
+    assert pick_leveled(str(tmp_path), sstable_mb=1.0) is None
+    by_level = _assert_levels_disjoint(tmp_path)
+    assert list(by_level) == [1]
+    assert len(by_level[1]) == -(-in_bytes // (1024 * 1024))
+    got = sorted(tuple(r) for r in lww_cell(explode_cells(
+        spark.read.format("sstable").load(str(tmp_path))))
+        .select("key", "data").collect())
+    assert got == want
 
 
 def test_lost_sidecar_degrades_to_releveling_not_wrong_reads(
@@ -229,3 +290,57 @@ def test_streaming_lsm_flush_leveled(spark, tmp_path):
                   .select("key", "name", "state", "data",
                           "timestamp").collect())
     assert got == want
+
+
+def test_streaming_leveled_levels_disjoint_at_mib_scale(spark, tmp_path):
+    """``flush_stream_to_leveled`` on overlapping micro-batches of a few
+    MiB, which AQE spreads over several reducers: the compacted levels
+    stay range-disjoint and hold the merged content of everything
+    ingested."""
+    from sstable_hadoop_spark.operators.compaction import read_levels
+    from sstable_hadoop_spark.operators.lww import explode_cells, lww_cell
+    from sstable_hadoop_spark.sources.datasource import register
+    from sstable_hadoop_spark.streaming.compaction import (
+        flush_stream_to_leveled,
+    )
+
+    register(spark)
+    src = str(tmp_path / "src")
+    for g in (1, 2, 3):
+        p = os.path.join(src, f"g{g}")
+        (spark.range(2000 * g, 16000 + 2000 * g)
+         .select(F.format_string("k%06d", "id").cast("binary")
+                 .alias("key"),
+                 F.lit(b"c").alias("name"), F.lit("NORMAL").alias("state"),
+                 F.unhex(F.concat(*[  # incompressible, 192 B
+                     F.sha2(F.format_string(f"%d-{g}-{i}", "id"), 512)
+                     for i in range(3)])).alias("data"),
+                 F.lit(g).cast("long").alias("timestamp"),
+                 F.lit(None).cast("long").alias("ttl"),
+                 F.lit(None).cast("long").alias("expiration"),
+                 F.lit(g).cast("int").alias("generation"))
+         .coalesce(1).write.parquet(p))
+        for f in os.listdir(p):
+            os.utime(os.path.join(p, f), (g * 1000, g * 1000))
+    cells = spark.read.parquet(os.path.join(src, "g*"))
+    out = str(tmp_path / "tree")
+    os.makedirs(out)
+    stream = (spark.readStream.schema(cells.schema)
+              .option("maxFilesPerTrigger", "1")
+              .parquet(os.path.join(src, "g*")))
+    q = flush_stream_to_leveled(stream, out, str(tmp_path / "ckpt"),
+                                l0_threshold=3, sstable_mb=1.0)
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    levels = read_levels(out)
+    assert set(levels.values()) == {1}  # the third flush compacted L0
+    by_level = _assert_levels_disjoint(out)
+    assert list(by_level) == [1] and len(by_level[1]) > 1
+    cols = ["key", "name", "state", "data", "timestamp"]
+    got = lww_cell(explode_cells(
+        spark.read.format("sstable").load(out))).select(*cols)
+    want = lww_cell(cells).select(*cols)
+    assert got.count() == want.count() == 20000
+    assert got.exceptAll(want).count() == 0
