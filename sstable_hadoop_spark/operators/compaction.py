@@ -20,9 +20,9 @@ Scale notes: the default output generation comes from the input
 file names (the scan derives its ``generation`` column from them too),
 so compaction runs no pre-scan: the write is its only query.  Its
 plan is scan + partial LWW merge (map-side combine), final merge +
-regroup of the winners into rows, write; ``target_partitions`` adds a
-key-range shuffle so each task writes a key-sorted, non-overlapping
-file.
+regroup of the winners into rows, write; ``target_partitions`` makes
+the regroup's shuffle a key-range one, so each task writes a
+key-sorted, non-overlapping file.
 """
 
 from __future__ import annotations
@@ -60,9 +60,11 @@ def _write_merged(winners: DataFrame, out_dir: str, generation: int,
                   compressed: bool) -> DataFrame:
     merged = winners.withColumn("generation",
                                 F.lit(generation).cast("int"))
-    nested = collect_rows(merged, by_generation=True)
     if target_partitions:
-        nested = nested.repartitionByRange(target_partitions, "key")
+        # range-partitioned by key already clusters the regroup's
+        # (key, generation), so collect_rows plans no shuffle of its own
+        merged = merged.repartitionByRange(target_partitions, "key")
+    nested = collect_rows(merged, by_generation=True)
     (nested.write.format("sstable")
            .option("path", out_dir)
            .option("name", name)

@@ -2341,7 +2341,11 @@ def _idempotent_tmpdir(tag: str, build) -> str:
     """Deterministic temp dir built exactly once per ``tag``: the first
     caller wins a mkdir guard and runs ``build(out_dir)``; concurrent
     callers wait on the sibling ``.done`` marker (kept OUTSIDE the dir
-    so directory listings — parquet, file streams — never see it)."""
+    so directory listings — parquet, file streams — never see it).
+
+    The marker holds the absolute path the dir was built at: fixtures
+    may record absolute paths (a file sink's ``_spark_metadata``), so a
+    copied or moved dir is rebuilt rather than trusted."""
     import os
     import shutil
     import tempfile
@@ -2349,14 +2353,22 @@ def _idempotent_tmpdir(tag: str, build) -> str:
 
     out = os.path.join(tempfile.gettempdir(), tag)
     done = out + ".done"
-    if os.path.exists(done):
+
+    def built() -> bool:
+        try:
+            with open(done) as f:
+                return f.read() == out
+        except OSError:
+            return False
+
+    if built():
         return out
     guard = out + ".building"
     try:
         os.makedirs(guard)
     except FileExistsError:
         for _ in range(600):
-            if os.path.exists(done):
+            if built():
                 return out
             time.sleep(0.5)
         raise TimeoutError(f"materialize race never completed: {out}")
@@ -2364,7 +2376,8 @@ def _idempotent_tmpdir(tag: str, build) -> str:
         shutil.rmtree(out, ignore_errors=True)
         os.makedirs(out)
         build(out)
-        open(done, "w").close()
+        with open(done, "w") as f:
+            f.write(out)
     finally:
         shutil.rmtree(guard, ignore_errors=True)
     return out
@@ -9813,703 +9826,3 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def all_oracles() -> dict[str, str]:
     return _window_order(_ORACLES)
-
-
-# ---------------------------------------------------------------------
-# DEFERRED queries (r11): implemented + pytest-oracle-verified, NOT yet
-# registered — the r11/r12 driver windows are exactly full (rotation
-# staleness bound; see .claude/skills/verify/SKILL.md).  To register in
-# r13+: wrap each with @query(name, oracle=_DEFERRED_ORACLES[name]).
-# ---------------------------------------------------------------------
-
-_DEFERRED_ORACLES: dict[str, str] = {}
-
-_DEFERRED_ORACLES["tpch_custdist_left"] = """
-WITH per_cust AS (
-    SELECT c.c_custkey,
-           CAST(count(o.o_orderkey) AS BIGINT) AS n_orders
-    FROM customer c LEFT JOIN orders o
-        ON o.o_custkey = c.c_custkey
-       AND o.o_orderpriority <> '1-URGENT'
-    GROUP BY c.c_custkey)
-SELECT n_orders, CAST(count(*) AS BIGINT) AS n_custs
-FROM per_cust GROUP BY n_orders
-"""
-
-
-def tpch_custdist_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13's shape: LEFT OUTER join with a predicate on the
-    JOIN CONDITION itself (not a post-filter — customers whose only
-    orders are urgent must still count as zero), then a second
-    aggregation over the first (the order-count distribution).  The
-    join-side predicate is the part naive rewrites get wrong: pushed
-    below as a WHERE it silently drops the zero-order customers."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("c_q13")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("o_q13")
-    return spark.sql("""
-        WITH per_cust AS (
-            SELECT c.c_custkey,
-                   CAST(count(o.o_orderkey) AS BIGINT) AS n_orders
-            FROM c_q13 c LEFT JOIN o_q13 o
-                ON o.o_custkey = c.c_custkey
-               AND o.o_orderpriority <> '1-URGENT'
-            GROUP BY c.c_custkey)
-        SELECT n_orders, CAST(count(*) AS BIGINT) AS n_custs
-        FROM per_cust GROUP BY n_orders
-    """)
-
-
-_DEFERRED_ORACLES["tpch_only_returning_supplier"] = """
-SELECT s.s_name, CAST(count(*) AS BIGINT) AS n_waiting
-FROM supplier s
-JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
-JOIN orders o ON o.o_orderkey = l1.l_orderkey
-WHERE l1.l_returnflag = 'R'
-  AND o.o_orderstatus = 'F'
-  AND EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_returnflag = 'R')
-GROUP BY s.s_name
-"""
-
-
-def tpch_only_returning_supplier(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """TPC-H Q21's shape on the columns this corpus has: suppliers
-    who were the ONLY one with returned items in a multi-supplier
-    finished order — a correlated EXISTS and a correlated NOT EXISTS
-    against the same fact table, which Catalyst must decorrelate
-    into one left-semi and one left-anti join (per-row re-scans of
-    lineitem would be O(rows × table) — the plan shape IS the
-    operator here)."""
-    load(spark, sf_dir, "supplier").createOrReplaceTempView("s_q21")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("l_q21")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("o_q21")
-    return spark.sql("""
-        SELECT s.s_name, CAST(count(*) AS BIGINT) AS n_waiting
-        FROM s_q21 s
-        JOIN l_q21 l1 ON l1.l_suppkey = s.s_suppkey
-        JOIN o_q21 o ON o.o_orderkey = l1.l_orderkey
-        WHERE l1.l_returnflag = 'R'
-          AND o.o_orderstatus = 'F'
-          AND EXISTS (SELECT 1 FROM l_q21 l2
-                      WHERE l2.l_orderkey = l1.l_orderkey
-                        AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (SELECT 1 FROM l_q21 l3
-                          WHERE l3.l_orderkey = l1.l_orderkey
-                            AND l3.l_suppkey <> l1.l_suppkey
-                            AND l3.l_returnflag = 'R')
-        GROUP BY s.s_name
-    """)
-
-
-_DEFERRED_ORACLES["tpch_idle_rich_customers"] = """
-WITH cents AS (
-    SELECT c_custkey, c_nationkey,
-           CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-    FROM customer),
-pos AS (SELECT CAST(sum(bal_c) AS BIGINT) AS total_c,
-               CAST(count(*) AS BIGINT) AS n
-        FROM cents WHERE bal_c > 0)
-SELECT c.c_nationkey,
-       CAST(count(*) AS BIGINT) AS n_custs,
-       CAST(sum(c.bal_c) AS BIGINT) AS balance_c
-FROM cents c, pos
-WHERE c.c_nationkey < 10
-  AND c.bal_c * pos.n > pos.total_c
-  AND NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-GROUP BY c.c_nationkey
-"""
-
-
-def tpch_idle_rich_customers(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """TPC-H Q22's shape: customers above the average positive
-    balance with no URGENT order (this corpus gives every customer
-    SOME order, so the classic never-ordered predicate is degenerate
-    here) — an UNCORRELATED scalar aggregate gating, plus a
-    correlated NOT EXISTS anti-join with its own predicate.  Cross-engine
-    determinism by construction: balances convert to exact cents and
-    the average test is the cross-multiplied integer inequality
-    ``bal × n > total`` — no IEEE summation-order ulp can flip a
-    boundary customer (the reason the oracle dares an average over
-    non-integral doubles at all)."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("c_q22")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("o_q22")
-    return spark.sql("""
-        WITH cents AS (
-            SELECT c_custkey, c_nationkey,
-                   CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)
-                       AS bal_c
-            FROM c_q22),
-        pos AS (SELECT CAST(sum(bal_c) AS BIGINT) AS total_c,
-                       CAST(count(*) AS BIGINT) AS n
-                FROM cents WHERE bal_c > 0)
-        SELECT c.c_nationkey,
-               CAST(count(*) AS BIGINT) AS n_custs,
-               CAST(sum(c.bal_c) AS BIGINT) AS balance_c
-        FROM cents c, pos
-        WHERE c.c_nationkey < 10
-          AND c.bal_c * pos.n > pos.total_c
-          AND NOT EXISTS (SELECT 1 FROM o_q22 o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderpriority = '1-URGENT')
-        GROUP BY c.c_nationkey
-    """)
-
-
-# ---------------------------------------------------------------------------
-# DEFERRED r13 txlog/matview rows (r12): implemented + pytest-oracle-
-# verified (tests/test_txlog_deferred.py), NOT yet registered — the r12
-# window is exactly full (6 new + flagship + 43 rotation-due).  To
-# register in r13: wrap with @query(name, oracle=_DEFERRED_ORACLES[name]).
-# ---------------------------------------------------------------------------
-
-_DEFERRED_ORACLES["txlog_dv_delete_roundtrip"] = """
-SELECT o_orderkey AS k, o_custkey AS cust,
-       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_c
-FROM orders
-WHERE NOT (o_custkey % 13 = 4 OR o_orderkey % 1000 = 77)
-"""
-
-
-def txlog_dv_delete_roundtrip(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """r11 merge-on-READ deletion vectors (operators/txlog.py
-    txlog_delete_rows): two stacked scattered deletes journal
-    position vectors — ZERO files rewritten, commit cost O(matched
-    rows) — and every read path subtracts them executor-side
-    (the r12 `_dv_entries_df` rework).  The fixture asserts inside
-    build() that no data file was rewritten by either delete AND that
-    time travel to the pre-delete version still sees every row (the
-    already-converged-fixture pattern); the driver row then certifies
-    the live content against the plain anti-filter SQL."""
-    import hashlib
-    import os
-
-    from sstable_hadoop_spark.operators.txlog import (
-        txlog_create,
-        txlog_delete_rows,
-        txlog_read,
-        txlog_snapshot,
-    )
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_custkey").alias("cust"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-         .alias("total_c"))
-
-    def build(out: str) -> None:
-        t = os.path.join(out, "t")
-        txlog_create(spark, t, o, ("k",), 8, sort_by=("k",))
-        n0 = len(txlog_snapshot(t)["files"])
-        txlog_delete_rows(spark, t, "cust % 13 = 4")
-        txlog_delete_rows(spark, t, "k % 1000 = 77")
-        snap = txlog_snapshot(t)
-        if len(snap["files"]) != n0 or not snap["dvs"]:
-            raise AssertionError(
-                "DV delete rewrote files or journaled no vectors")
-        if txlog_read(spark, t, version=1).count() != o.count():
-            raise AssertionError("time travel lost pre-delete rows")
-
-    base = _idempotent_tmpdir("txlog_dvrt_" + h, build)
-    return txlog_read(spark, os.path.join(base, "t"))
-
-
-_DEFERRED_ORACLES["txlog_zorder_range"] = """
-SELECT 'cust' AS probe, o_orderkey AS k, o_custkey AS cust,
-       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_c
-FROM orders WHERE o_custkey BETWEEN 100 AND 500
-UNION ALL
-SELECT 'price' AS probe, o_orderkey AS k, o_custkey AS cust,
-       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_c
-FROM orders
-WHERE CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-      BETWEEN 1000000 AND 1300000
-"""
-
-
-def txlog_zorder_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r11 OPTIMIZE ZORDER (operators/txlog.py txlog_zorder): the
-    orders table re-clustered on (cust, price_c) into Morton
-    PREFIX-cell files, then range-probed on EACH clustered column —
-    the z-order point is that both prune symmetrically (measured
-    FLAT 128/512 files at 1x and 10x data, PERF r11).  Correctness
-    contract under certification: pruning is an optimization only
-    (zone-map misses read defensively, the BETWEEN filter always
-    applies), so each probe equals the oracle's plain scan+filter."""
-    import hashlib
-    import os
-
-    from sstable_hadoop_spark.operators.txlog import (
-        txlog_create,
-        txlog_read_range,
-        txlog_zorder,
-    )
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_custkey").alias("cust"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-         .alias("price_c"))
-
-    def build(out: str) -> None:
-        t = os.path.join(out, "t")
-        txlog_create(spark, t, o, ("k",), 4,
-                     stats_cols=("cust", "price_c"))
-        txlog_zorder(spark, t, ("cust", "price_c"),
-                     files_per_bucket=4, bits=6)
-
-    base = _idempotent_tmpdir("txlog_zr_" + h, build)
-    t = os.path.join(base, "t")
-    a = (txlog_read_range(spark, t, 100, 500, col="cust")
-         .select(F.lit("cust").alias("probe"), "k", "cust",
-                 "price_c"))
-    b = (txlog_read_range(spark, t, 1_000_000, 1_300_000,
-                          col="price_c")
-         .select(F.lit("price").alias("probe"), "k", "cust",
-                 "price_c"))
-    return a.unionByName(b)
-
-
-_DEFERRED_ORACLES["matview_refresh_row"] = """
-SELECT o_orderpriority AS prio,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-            AS BIGINT) AS sum_total_c
-FROM orders
-GROUP BY o_orderpriority
-"""
-
-
-def matview_refresh_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r11 materialized rollup view with exactly-once cursor refresh
-    (operators/matview.py): the view full-builds from the base's
-    first 80 percent, the base then takes a pure append of the rest, and
-    ONE incremental refresh folds the change feed — the stored view
-    must equal the GROUP BY over the complete base.  build() also
-    pins the replay no-op (a second refresh of the same window must
-    not commit) and the fixture certifies the r12 single-snapshot
-    refresh basis end-to-end."""
-    import hashlib
-    import os
-
-    from sstable_hadoop_spark.operators.matview import (
-        matview_read,
-        matview_refresh,
-    )
-    from sstable_hadoop_spark.operators.txlog import (
-        txlog_append,
-        txlog_create,
-        txlog_snapshot,
-    )
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-         .alias("total_c"))
-
-    def build(out: str) -> None:
-        bp = os.path.join(out, "base")
-        vp = os.path.join(out, "view")
-        txlog_create(spark, bp, o.filter(F.col("k") % 5 != 0),
-                     ("k",), 8)
-        matview_refresh(spark, vp, bp, ["prio"], ["total_c"])
-        txlog_append(spark, bp, o.filter(F.col("k") % 5 == 0))
-        v, did = matview_refresh(spark, vp, bp, ["prio"],
-                                 ["total_c"], strategy="incremental")
-        if not did:
-            raise AssertionError("refresh skipped a dirty window")
-        vv = txlog_snapshot(vp)["version"]
-        if matview_refresh(spark, vp, bp, ["prio"],
-                           ["total_c"])[1]:
-            raise AssertionError("replayed refresh was not a no-op")
-        if txlog_snapshot(vp)["version"] != vv:
-            raise AssertionError("replayed refresh advanced the log")
-
-    base = _idempotent_tmpdir("matview_row_" + h, build)
-    return (matview_read(spark, os.path.join(base, "view"))
-            .select("prio", F.col("n_rows").cast("long"),
-                    F.col("sum_total_c").cast("long")))
-
-
-_DEFERRED_ORACLES["txlog_count_row"] = """
-SELECT CAST(count(*) AS BIGINT) AS n_rows
-FROM orders WHERE NOT (o_custkey % 9 = 2)
-"""
-
-
-def txlog_count_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r11 metadata-served COUNT(*) (operators/txlog.py txlog_count):
-    the journaled per-file row counts minus the pending deletion-
-    vector counts give the exact live count with NO Spark job (sub-ms
-    vs a table scan, PERF r11) — certified here against SQL's
-    COUNT(*) over the same anti-filtered content.  The fixture
-    includes a DV delete so the row pins the rows-minus-vectors fold,
-    and build() cross-checks the metadata count against an actual
-    scan once at build time."""
-    import hashlib
-    import os
-
-    from sstable_hadoop_spark.operators.txlog import (
-        txlog_count,
-        txlog_create,
-        txlog_delete_rows,
-        txlog_read,
-    )
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_custkey").alias("cust"))
-
-    def build(out: str) -> None:
-        t = os.path.join(out, "t")
-        txlog_create(spark, t, o, ("k",), 8)
-        txlog_delete_rows(spark, t, "cust % 9 = 2")
-        if txlog_count(t) != txlog_read(spark, t).count():
-            raise AssertionError(
-                "metadata count disagrees with the scan")
-
-    base = _idempotent_tmpdir("txlog_cnt_" + h, build)
-    n = txlog_count(os.path.join(base, "t"))
-    return spark.createDataFrame([(int(n),)], "n_rows long")
-
-
-# ---------------------------------------------------------------------------
-# DEFERRED r14 TPC-H shapes (r12): the queue keeps a round of headroom —
-# these register whenever the rotation census frees slots.
-# ---------------------------------------------------------------------------
-
-_DEFERRED_ORACLES["tpch_late_shipment_priorities"] = """
-SELECT o.o_orderpriority AS prio,
-       CAST(count(*) AS BIGINT) AS n_orders
-FROM orders o
-WHERE o.o_orderkey % 4 = 1
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate)
-GROUP BY o.o_orderpriority
-"""
-
-
-def tpch_late_shipment_priorities(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """TPC-H Q4's shape: per-priority count of orders with at least
-    one late-shipping lineitem — a correlated EXISTS whose inner
-    predicate compares columns from BOTH relations
-    (``l_shipdate > o_orderdate``), so the decorrelation must carry
-    the outer column into the semi-join condition, not just the key
-    (the part per-row re-execution rewrites get catastrophically
-    wrong at scale).  The corpus has no commit/receipt dates; the
-    late-shipment predicate keeps Q4's exact operator shape.  The
-    o_orderkey % 4 window stands in for Q4's date quarter (the
-    corpus's nano-timestamps read as LONG under the session's
-    nanosAsLong — ordering comparisons are engine-identical, date
-    ARITHMETIC is not, so the window predicate stays integer)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("o_q4")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("l_q4")
-    return spark.sql("""
-        SELECT o.o_orderpriority AS prio,
-               CAST(count(*) AS BIGINT) AS n_orders
-        FROM o_q4 o
-        WHERE o.o_orderkey % 4 = 1
-          AND EXISTS (SELECT 1 FROM l_q4 l
-                      WHERE l.l_orderkey = o.o_orderkey
-                        AND l.l_shipdate > o.o_orderdate)
-        GROUP BY o.o_orderpriority
-    """)
-
-
-_DEFERRED_ORACLES["tpch_big_quantity_orders"] = """
-WITH big AS (
-    SELECT l_orderkey
-    FROM lineitem
-    GROUP BY l_orderkey
-    HAVING sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) > 150)
-SELECT c.c_custkey, o.o_orderkey,
-       CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS total_c,
-       CAST(sum(CAST(floor(l.l_quantity + 0.5) AS BIGINT))
-            AS BIGINT) AS qty
-FROM customer c
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE o.o_orderkey IN (SELECT l_orderkey FROM big)
-GROUP BY c.c_custkey, o.o_orderkey, total_c
-"""
-
-
-def tpch_big_quantity_orders(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """TPC-H Q18's shape (large-volume customers): orders whose
-    TOTAL lineitem quantity exceeds a threshold, joined back to
-    customer and re-aggregated — the HAVING-subquery IN that must
-    plan as one aggregate + semi-join (never a per-order recount),
-    with the fact table aggregated BELOW the three-way join.
-    Quantities quantize once to integers so the threshold cut and
-    the output sums are bit-identical cross-engine."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("c_q18")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("o_q18")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("l_q18")
-    return spark.sql("""
-        WITH big AS (
-            SELECT l_orderkey
-            FROM l_q18
-            GROUP BY l_orderkey
-            HAVING sum(CAST(floor(l_quantity + 0.5) AS BIGINT))
-                   > 150)
-        SELECT c.c_custkey, o.o_orderkey,
-               CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT)
-                   AS total_c,
-               CAST(sum(CAST(floor(l.l_quantity + 0.5) AS BIGINT))
-                    AS BIGINT) AS qty
-        FROM c_q18 c
-        JOIN o_q18 o ON o.o_custkey = c.c_custkey
-        JOIN l_q18 l ON l.l_orderkey = o.o_orderkey
-        WHERE o.o_orderkey IN (SELECT l_orderkey FROM big)
-        GROUP BY c.c_custkey, o.o_orderkey, total_c
-    """)
-
-
-_DEFERRED_ORACLES["docs_link_components"] = """
-WITH RECURSIVE d AS (SELECT doc_id FROM documents),
-e0 AS (
-    SELECT doc_id AS u,
-           doc_id - (doc_id % 50) + ((doc_id * 31 + 7) % 50) AS v
-    FROM d
-    UNION ALL
-    SELECT doc_id AS u, doc_id + 1 AS v FROM d
-    WHERE doc_id % 2 = 0 AND doc_id % 50 < 49),
-e1 AS (
-    SELECT u, v FROM e0 JOIN d ON d.doc_id = e0.v WHERE u <> v),
-e AS (SELECT u, v FROM e1 UNION SELECT v AS u, u AS v FROM e1),
-reach(id, r) AS (
-    SELECT u AS id, u AS r FROM e
-    UNION
-    SELECT e.u AS id, reach.r
-    FROM e JOIN reach ON reach.id = e.v)
-SELECT id, CAST(min(r) AS BIGINT) AS component
-FROM reach GROUP BY id
-"""
-
-
-def docs_link_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r12 alternating large-star/small-star connected components
-    (operators/graph.py connected_components — Kiveris et al.
-    SoCC'14): the general-graph O(log n)-round CC the near-dup
-    label-propagation cannot give (a path graph needs diameter
-    rounds there).  The link graph synthesizes deterministically
-    inside 50-doc buckets (one LCG cross-edge per doc + a chain edge
-    from every even doc), so components are nontrivial unions the
-    oracle can afford to certify by RECURSIVE-CTE transitive closure
-    (closure stays bucket-bounded; an unbucketed graph of this size
-    would make the SQL side quadratic in the giant component).
-    Scale shape: each round is two grouped mins + two joins over an
-    edge set that only shrinks; convergence is a one-row checksum."""
-    from sstable_hadoop_spark.operators.graph import (
-        connected_components,
-    )
-
-    d = load(spark, sf_dir, "documents").select("doc_id")
-    lcg = (d.select(
-        F.col("doc_id").alias("u"),
-        (F.col("doc_id") - F.pmod("doc_id", F.lit(50))
-         + F.pmod(F.col("doc_id") * 31 + 7, F.lit(50))).alias("v")))
-    chain = (d.filter((F.pmod("doc_id", F.lit(2)) == 0)
-                      & (F.pmod("doc_id", F.lit(50)) < 49))
-              .select(F.col("doc_id").alias("u"),
-                      (F.col("doc_id") + 1).alias("v")))
-    ids = d.select(F.col("doc_id").alias("v"))
-    edges = (lcg.unionByName(chain)
-                .join(ids, "v")
-                .filter(F.col("u") != F.col("v"))
-                .select(F.col("u").alias("src"),
-                        F.col("v").alias("dst")))
-    return (connected_components(edges)
-            .select("id", F.col("component").cast("long")
-                          .alias("component")))
-
-
-_DEFERRED_ORACLES["docs_link_triangles"] = """
-WITH d AS (SELECT doc_id FROM documents),
-e0 AS (
-    SELECT doc_id AS u, doc_id + 1 AS v FROM d
-    WHERE doc_id % 50 < 49
-    UNION ALL
-    SELECT doc_id AS u, doc_id + 2 AS v FROM d
-    WHERE doc_id % 4 = 0 AND doc_id % 50 < 48
-    UNION ALL
-    SELECT doc_id AS u,
-           doc_id - (doc_id % 50) + ((doc_id * 31 + 7) % 50) AS v
-    FROM d),
-e1 AS (
-    SELECT u, v FROM e0 JOIN d ON d.doc_id = e0.v WHERE u <> v),
-ec AS (SELECT DISTINCT least(u, v) AS u, greatest(u, v) AS v
-       FROM e1),
-tri AS (
-    SELECT a.u AS x, a.v AS y, b.v AS z
-    FROM ec a
-    JOIN ec b ON b.u = a.v
-    JOIN ec c ON c.u = a.u AND c.v = b.v),
-pn AS (
-    SELECT id, count(*) AS n
-    FROM (SELECT x AS id FROM tri
-          UNION ALL SELECT y FROM tri
-          UNION ALL SELECT z FROM tri)
-    GROUP BY id),
-nodes AS (SELECT u AS id FROM ec UNION SELECT v AS id FROM ec)
-SELECT nodes.id, CAST(coalesce(pn.n, 0) AS BIGINT) AS n_triangles
-FROM nodes LEFT JOIN pn ON pn.id = nodes.id
-"""
-
-
-def docs_link_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r12 degree-ordered triangle counting (operators/graph.py
-    triangle_count — the compact-forward orientation): per-node
-    triangle membership over a deterministic 50-doc-bucket link
-    graph that actually CLOSES triples (full in-bucket chains + a
-    skip edge from every 4th doc — the components row's matching +
-    LCG stride provably cannot: 30i ≡ 45 mod 50 has no solution),
-    certified against the oracle's brute-force canonical triple join
-    (affordable because triangles stay bucket-bounded).  The
-    operator's wedge set is bounded O(|E|^1.5) by the (degree, id)
-    orientation regardless of skew — the property the star-graph
-    pytest pins."""
-    from sstable_hadoop_spark.operators.graph import triangle_count
-
-    d = load(spark, sf_dir, "documents").select("doc_id")
-    chain = (d.filter(F.pmod("doc_id", F.lit(50)) < 49)
-              .select(F.col("doc_id").alias("u"),
-                      (F.col("doc_id") + 1).alias("v")))
-    skip = (d.filter((F.pmod("doc_id", F.lit(4)) == 0)
-                     & (F.pmod("doc_id", F.lit(50)) < 48))
-             .select(F.col("doc_id").alias("u"),
-                     (F.col("doc_id") + 2).alias("v")))
-    lcg = (d.select(
-        F.col("doc_id").alias("u"),
-        (F.col("doc_id") - F.pmod("doc_id", F.lit(50))
-         + F.pmod(F.col("doc_id") * 31 + 7, F.lit(50))).alias("v")))
-    ids = d.select(F.col("doc_id").alias("v"))
-    edges = (chain.unionByName(skip).unionByName(lcg)
-                  .join(ids, "v")
-                  .filter(F.col("u") != F.col("v"))
-                  .select(F.col("u").alias("src"),
-                          F.col("v").alias("dst")))
-    return triangle_count(edges)
-
-
-_DEFERRED_ORACLES["txlog_overwrite_roundtrip"] = """
-SELECT o_orderkey AS k, o_custkey AS cust,
-       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) + 77 AS total_c
-FROM orders WHERE o_custkey % 3 = 1
-"""
-
-
-def txlog_overwrite_roundtrip(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """r11 INSERT OVERWRITE (operators/txlog.py txlog_overwrite): one
-    strict-base commit replaces the table's FULL content — dropped
-    rows VANISH, which a delta-keyed upsert cannot express (the
-    materialized-view refresh shape).  The fixture overwrites an
-    all-orders table with a filtered+shifted projection and pins
-    inside build() that time travel still reads the pre-overwrite
-    content (atomic swap, append-only history); the row certifies
-    the head against the replacement SQL."""
-    import hashlib
-    import os
-
-    from sstable_hadoop_spark.operators.txlog import (
-        txlog_count,
-        txlog_create,
-        txlog_overwrite,
-        txlog_read,
-    )
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_custkey").alias("cust"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-         .alias("total_c"))
-
-    def build(out: str) -> None:
-        t = os.path.join(out, "t")
-        txlog_create(spark, t, o, ("k",), 8, sort_by=("k",))
-        n1 = txlog_count(t)
-        txlog_overwrite(
-            spark, t,
-            o.filter(F.col("cust") % 3 == 1)
-             .withColumn("total_c", F.col("total_c") + 77))
-        if txlog_count(t, version=1) != n1:
-            raise AssertionError(
-                "overwrite mutated the pre-overwrite version")
-
-    base = _idempotent_tmpdir("txlog_ow_" + h, build)
-    return txlog_read(spark, os.path.join(base, "t"))
-
-
-_DEFERRED_ORACLES["txlog_restore_roundtrip"] = """
-SELECT o_orderkey AS k, o_custkey AS cust,
-       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_c
-FROM orders
-"""
-
-
-def txlog_restore_roundtrip(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """r9 RESTORE (operators/txlog.py txlog_restore): after an upsert
-    mutates the table, rolling back to version 1 must make the head
-    CONTENT-IDENTICAL to the original — as a NEW commit that only
-    re-references the old files (append-only history; nothing
-    rewritten, pinned by a file-count check inside build()).  The
-    driver row certifies the restored head against the ORIGINAL
-    content's SQL — a restore that leaks one post-upsert row or
-    loses one original row hash-mismatches."""
-    import hashlib
-    import os
-
-    from sstable_hadoop_spark.operators.txlog import (
-        txlog_create,
-        txlog_read,
-        txlog_restore,
-        txlog_snapshot,
-        txlog_upsert,
-    )
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_custkey").alias("cust"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-         .alias("total_c"))
-
-    def merge(stored, delta):
-        return (stored.join(delta, on=["k"], how="left_anti")
-                .select(*stored.columns).unionByName(delta))
-
-    def build(out: str) -> None:
-        t = os.path.join(out, "t")
-        txlog_create(spark, t, o, ("k",), 8, sort_by=("k",))
-        files_v1 = set(txlog_snapshot(t)["files"])
-        txlog_upsert(spark, t,
-                     o.filter(F.col("k") % 5 == 0)
-                      .withColumn("total_c", F.lit(0).cast("long")),
-                     merge, ("k",), 8)
-        txlog_restore(spark, t, 1)
-        if set(txlog_snapshot(t)["files"]) != files_v1:
-            raise AssertionError(
-                "restore did not re-reference the version-1 files")
-
-    base = _idempotent_tmpdir("txlog_restore_" + h, build)
-    return txlog_read(spark, os.path.join(base, "t"))

@@ -479,7 +479,7 @@ class WarcWriteTask(DataSourceWriter):
     content_type, warc_date, record_id).
 
     Commit protocol (ADVICE r6): each task writes a HIDDEN temp
-    (``.part-…-{attempt}-{job}….tmp`` — the reader skips dot/underscore
+    (``.part-…-{tid}-{job}….tmp`` — the reader skips dot/underscore
     names), and only the driver-side ``commit()`` renames successful
     tasks' temps to their final names, then sweeps this job's leftover
     temps from failed/speculative attempts.  The job token — minted
@@ -504,13 +504,16 @@ class WarcWriteTask(DataSourceWriter):
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.attemptNumber()
+        # taskAttemptId, unlike attemptNumber, is unique across stage
+        # REATTEMPTS: a zombie task of a failed stage attempt and its
+        # replacement never share a temp
+        pid, tid = ctx.partitionId(), ctx.taskAttemptId()
         ext = ".warc.gz" if self.compress else ".warc"
         final = os.path.join(self.path,
                              f"part-{pid:05d}-{self.token}{ext}")
         tmp = os.path.join(
             self.path,
-            f".part-{pid:05d}-{attempt}-{self.token}{ext}.tmp")
+            f".part-{pid:05d}-{tid}-{self.token}{ext}.tmp")
         it = iter(iterator)
         try:
             first = next(it)

@@ -24,19 +24,13 @@ from pyspark.sql import functions as F
 def _flush_batch(batch_df: DataFrame, batch_id: int, out_dir: str,
                  name: str, compressed: bool) -> None:
     """Memtable-merge one micro-batch and flush it as a new generation."""
-    from sstable_hadoop_spark.operators import collect_rows, lww_cell
+    from sstable_hadoop_spark.operators import lww_cell
+    from sstable_hadoop_spark.operators.compaction import _write_merged
 
-    winners = lww_cell(batch_df)
     # generation = batch id + 1 (generations are 1-based); newer
     # batches must win ties, matching arrival order
-    rows = collect_rows(
-        winners.withColumn("generation", F.lit(batch_id + 1).cast("int")),
-        by_generation=True)
-    (rows.write.format("sstable")
-         .option("path", out_dir)
-         .option("name", f"{name}-{batch_id + 1}")
-         .option("compressed", str(compressed).lower())
-         .mode("append").save())
+    _write_merged(lww_cell(batch_df), out_dir, batch_id + 1,
+                  f"{name}-{batch_id + 1}", None, compressed)
 
 
 def _start_batches(stream: DataFrame, fn, checkpoint_dir: str):

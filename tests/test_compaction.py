@@ -21,6 +21,14 @@ def _last_execution_id(spark) -> int:
     return store.executionsList(n - 1, 1).head().executionId()
 
 
+def _last_final_plan(spark) -> str:
+    """The final (post-AQE) physical plan of the newest SQL execution."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    desc = store.execution(_last_execution_id(spark)).get() \
+        .physicalPlanDescription()
+    return desc.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
 def _write_gen(d, gen, keys, ts):
     from sstable_hadoop_spark.sources.codec import Cell, Row, write_sstable
 
@@ -172,3 +180,25 @@ def test_default_generation_comes_from_file_names(spark, tmp_path):
                  if f.endswith(("-1-Data.db", "-2-Data.db")))
     compact_files(spark, two, str(tmp_path / "bucket"))
     assert out_gens(tmp_path / "bucket") == {3}
+
+
+def test_target_partitions_adds_no_regroup_shuffle(spark, tmp_path):
+    """With ``target_partitions`` the winners are range-partitioned by
+    key BEFORE the (key, generation) regroup, which that partitioning
+    already clusters: two shuffles (merge, range), not three.  Without
+    it the plan keeps its merge and regroup shuffles."""
+    from sstable_hadoop_spark.operators.compaction import compact
+
+    src = tmp_path / "src"
+    for gen in (1, 2, 3):
+        _write_gen(src, gen, [b"k%04d" % k for k in range(0, 300, gen)],
+                   gen)
+    out = tmp_path / "ranged"
+    compact(spark, str(src), str(out), target_partitions=3)
+    plan = _last_final_plan(spark)
+    assert plan.count("Exchange (") == 2, plan
+    assert len([f for f in os.listdir(out)
+                if f.endswith("-Data.db")]) == 3
+    assert spark.read.format("sstable").load(str(out)).count() == 300
+    compact(spark, str(src), str(tmp_path / "plain"))
+    assert _last_final_plan(spark).count("Exchange (") == 2

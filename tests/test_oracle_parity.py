@@ -160,6 +160,37 @@ def test_driver_window_staleness_guard():
         f"the driver window: {overdue}")
 
 
+def test_fixture_cache_rebuilds_after_move(tmp_path, monkeypatch):
+    """Cached fixtures may hold absolute paths (a file sink's
+    _spark_metadata), so a fixture dir copied to another temp root
+    with its ``.done`` marker must be rebuilt there, not trusted; an
+    untouched cache is reused."""
+    import shutil
+    import tempfile
+
+    from sstable_hadoop_spark import queries as q
+
+    built = []
+
+    def build(out: str) -> None:
+        built.append(out)
+        with open(os.path.join(out, "path.txt"), "w") as f:
+            f.write(out)
+
+    first, second = tmp_path / "a", tmp_path / "b"
+    first.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(first))
+    out1 = q._idempotent_tmpdir("fixture_move_", build)
+    assert q._idempotent_tmpdir("fixture_move_", build) == out1
+    assert built == [out1]
+    shutil.copytree(first, second)
+    monkeypatch.setattr(tempfile, "tempdir", str(second))
+    out2 = q._idempotent_tmpdir("fixture_move_", build)
+    assert built == [out1, out2] and out2 != out1
+    with open(os.path.join(out2, "path.txt")) as f:
+        assert f.read() == out2
+
+
 def test_oracle_output_types_driver_hashable(duck):
     """VERDICT r6 #1: DuckDB widens some aggregate outputs past what the
     driver's value-hash canonicalizes identically to Spark — windowed

@@ -431,6 +431,7 @@ def test_restore_to_version(spark, tpath):
 
     tx.txlog_create(spark, tpath, _mk(spark, 0, 40, 1), ("k",), 4)
     v1 = _content(spark, tpath)
+    files_v1 = set(tx.txlog_snapshot(tpath)["files"])
     tx.txlog_upsert(spark, tpath, _mk(spark, 0, 40, 2), _merge,
                     ("k",), 4)
     tx.txlog_upsert(spark, tpath, _mk(spark, 10, 20, 3), _merge,
@@ -439,6 +440,8 @@ def test_restore_to_version(spark, tpath):
     won = tx.txlog_restore(spark, tpath, 1)
     assert won == 4
     assert _content(spark, tpath) == v1
+    # the restore re-references the version-1 files, rewriting none
+    assert set(tx.txlog_snapshot(tpath)["files"]) == files_v1
     assert tx.txlog_history(tpath)[-1]["op"] == "restore"
     # restoring to the identical content is a version no-op
     assert tx.txlog_restore(spark, tpath, 4) == 4

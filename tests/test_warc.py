@@ -223,6 +223,41 @@ def test_sink_append_jobs_never_collide(spark, tmp_path):
     assert not glob.glob(d + "/.part-*")  # temps swept at commit
 
 
+def test_sink_temps_unique_across_stage_reattempts(tmp_path, monkeypatch):
+    """A stage re-attempt restarts attemptNumber at 0, so a zombie task
+    of the failed stage attempt and its replacement share partition id
+    AND attempt number — only the task attempt id tells them apart,
+    and the two must never write the same temp."""
+    import pyspark
+    from pyspark.sql import Row
+
+    from sstable_hadoop_spark.sources.warc import WarcWriteTask
+
+    class _Ctx:
+        def __init__(self, tid: int) -> None:
+            self.tid = tid
+
+        def partitionId(self) -> int:
+            return 3
+
+        def attemptNumber(self) -> int:
+            return 0
+
+        def taskAttemptId(self) -> int:
+            return self.tid
+
+    sink = WarcWriteTask({"path": str(tmp_path / "out")})
+    temps = []
+    for tid in (17, 42):
+        monkeypatch.setattr(pyspark.TaskContext, "get",
+                            staticmethod(lambda tid=tid: _Ctx(tid)))
+        msg = sink.write(iter([Row(target_uri="http://a/1",
+                                   payload=bytearray(b"x"))]))
+        temps.append({tmp for tmp, _ in msg.files})
+    assert temps[0] and temps[1]
+    assert not temps[0] & temps[1], temps
+
+
 def test_reader_ignores_torn_temp_files(spark, tmp_path):
     """A crashed job's in-flight temp (hidden dot-name, possibly torn
     bytes) must be invisible to reads."""
